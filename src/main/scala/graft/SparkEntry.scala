@@ -1660,23 +1660,22 @@ object SparkEntry {
         .select(col("term"), col("doc_id"), col("tf"), col("df"),
           round(col("score"), 4).as("score"))),
 
-    // ---- boolean retrieval: the join/set-op algebra (J1-J8, F3, F5) ----
+    // ---- boolean retrieval: the set-op algebra (J1-J8, F3, F5) ----
     "search_and" -> ((s, dir) => searchScores(s, dir, "spark and data")),
     // the reference's headline PHYSICAL behavior driven on a query row:
     // score from the PERSISTED term-range-partitioned index
-    // ([[invertedDiskIndex]]) through a fresh readIndex with the term
-    // slice kept LAZY, so every query leaf is its own `term IN (...)`-
-    // pushed parquet scan and footer min/max stats on the term-sorted
-    // layout skip the files other terms live in — the Spark form of
-    // query-time pruning over the boundary-file layout
+    // ([[invertedDiskIndex]]) through a fresh readIndex: the query's
+    // one `term IN (...)` filter pushes into the parquet scan and
+    // footer min/max stats on the term-sorted layout skip the files
+    // other terms live in — the Spark form of query-time pruning over
+    // the boundary-file layout
     // (code/query/QueryMapred.java:126-162). RoundTwentyThreeSpec
     // asserts non-empty term PushedFilters on THIS entry's plan;
     // values = search_and exactly (same oracle SQL)
     "search_and_at_rest" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
       val idx = Indexer.readIndex(s, invertedDiskIndex(s, dir))
-      SearchEngine.search("spark and data", idx, docs,
-          materializeSlice = false)
+      SearchEngine.search("spark and data", idx, docs)
         .select(col("doc_id"), round(col("score"), 4).as("score"))
     }),
     // streaming maintenance SERVING an oracle-checked search: the
@@ -1705,9 +1704,9 @@ object SparkEntry {
         count(lit(1)).cast("long").as("n_postings"),
         max("df").as("max_df"),
         sum("tf").cast("long").as("total_tf"))),
-    // N queries unioned into one evaluation over the shared session
-    // index (the reference pays a full MapReduce pipeline per query;
-    // per-query compile jobs remain)
+    // N queries evaluated in one pass over one pruned scan of the
+    // shared session index (the reference pays a full MapReduce
+    // pipeline per query)
     "search_batch" -> ((s, dir) => {
       val ranked = SearchEngine.searchMany(
         Seq("spark and data", "spark or data"),
@@ -1772,8 +1771,7 @@ object SparkEntry {
     "search_phrase_at_rest" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
       val idx = Indexer.readIndex(s, invertedDiskIndex(s, dir))
-      SearchEngine.search("spark data", idx, docs,
-          materializeSlice = false)
+      SearchEngine.search("spark data", idx, docs)
         .select(col("doc_id"), round(col("score"), 4).as("score"))
     }),
     // prefix query over the PERSISTED index — the RANGE-predicate class

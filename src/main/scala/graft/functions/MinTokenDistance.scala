@@ -46,7 +46,7 @@ final class MinTokenDistanceKernel extends Serializable {
 }
 
 /** `(ARRAY<INT>, ARRAY<INT>) -> INT` exact min token distance as a
-  * native Catalyst expression. This sits inside EVERY phrase-AND join
+  * native Catalyst expression. This sits inside EVERY phrase-AND score
   * of the query compiler (reference proximity scoring,
   * `util/QueryParser.java:204-253`) — per matched document — so it
   * must live inside whole-stage codegen rather than behind a

@@ -211,9 +211,6 @@ object Multimodal {
       out
     }
 
-    def frameSampleStub(payload: Array[Byte], everyN: Int): Int =
-      math.max(1, payload.length / math.max(1, everyN))
-
     /** Decode the sampled frames of a multi-frame container ImageIO can
       * read (animated GIF — the one video-ish format with a JDK codec).
       * Returns `(frame_no, png_bytes)` for frames `0, everyN, 2*everyN,

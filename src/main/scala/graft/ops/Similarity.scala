@@ -21,8 +21,6 @@ object Similarity {
   def dotCol(a: Column, b: Column): Column =
     graft.functions.VectorExpressions.dot(a, b)
 
-  def normCol(a: Column): Column = sqrt(dotCol(a, a))
-
   /** Cosine similarity of two array columns. */
   def cosineCol(a: Column, b: Column): Column =
     graft.functions.VectorExpressions.cosine(a, b)

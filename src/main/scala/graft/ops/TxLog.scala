@@ -90,9 +90,6 @@ object TxLog {
   private[graft] def checkpointSidecarPath(root: String, v: Long): String =
     f"${logDir(root)}/$v%08d.checkpoint.parquet"
 
-  private def readCommit(root: String, v: Long): String =
-    io(root).read(commitPath(root, v))
-
   /** Parse one checkpoint from disk (cache miss path — see
     * [[checkpointEntry]]). A columnar checkpoint's JSON half carries
     * only the table-level state plus a `"cpq":1` marker; the per-file

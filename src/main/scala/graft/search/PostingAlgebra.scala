@@ -4,10 +4,10 @@ package graft.search
   * the reference's boolean evaluator (`util/QueryParser.java:96-335`).
   *
   * This is NOT the distributed execution path (that is
-  * [[QueryCompiler]], which folds the same algebra into DataFrame joins);
-  * it exists (a) to pin the reference's golden fixture
-  * (`util/QueryParser.java:375-388`) in a unit test, and (b) to serve as
-  * the brute-force oracle for property tests of the join compiler.
+  * [[QueryCompiler]], which folds the same algebra into per-document
+  * score expressions); it exists (a) to pin the reference's golden
+  * fixture (`util/QueryParser.java:375-388`) in a unit test, and (b) to
+  * serve as the brute-force oracle for property tests of that compiler.
   *
   * Wrapper types (`util/QueryParser.java:63-70`): 0 = normal (documents
   * must appear), 1 = negated (documents must NOT appear), 2 = stop word

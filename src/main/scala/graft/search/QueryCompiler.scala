@@ -3,20 +3,25 @@ package graft.search
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Distributed query evaluation: folds a [[QueryAst]] into a tree of
-  * DataFrame joins carrying the reference's negation-aware set algebra
-  * (`util/QueryParser.java:122-139,281-298`). This is where the
-  * reference's single-reducer boolean evaluator
-  * (`code/query/QueryMapred.java:89-98`) becomes a distributed plan:
+/** Distributed query evaluation: folds a [[QueryAst]] into ONE nullable
+  * per-document score expression carrying the reference's
+  * negation-aware set algebra (`util/QueryParser.java:122-139,281-298`).
+  * The reference evaluates its algebra pointwise per document in a
+  * single reducer (`code/query/QueryMapred.java:89-98`); here each
+  * document's postings for the query terms are grouped into one map
+  * `term -> (score, positions)` ([[postingMaps]]) and the algebra
+  * becomes an expression over that map, so any number of queries
+  * evaluate in one pass over one pruned scan:
   *
-  *   - posting intersect (AND)     -> inner equi-join on doc_id (J1)
-  *   - posting merge (OR)          -> full-outer join / union + re-agg (J2, J7)
-  *   - posting difference (AND NOT)-> left-anti join (J3)
+  *   - a posting list is a score column; null = "not in the list"
+  *   - posting intersect (AND)     -> `s1 * s2` (null unless both) (J1)
+  *   - posting merge (OR)          -> `coalesce(s1 + s2, s1, s2)` (J2, J7)
+  *   - posting difference (AND NOT)-> `when(s2.isNull, s1)` (J3)
   *   - De Morgan combines          -> compile-time type dispatch (J4, J5);
   *     wrapper types are data-independent, so the whole dispatch happens
   *     at plan-construction time — no type column ever exists at runtime.
   *
-  * Cardinality-based AND reordering (J6, `util/QueryParser.java:159-164`)
+  * Cardinality-based AND ordering (J6, `util/QueryParser.java:159-164`)
   * uses per-term document frequencies fetched in ONE tiny aggregate over
   * the pruned index slice — statistics cross the driver, postings never do.
   *
@@ -31,11 +36,12 @@ object QueryCompiler {
   val PhraseFactor = 1.0 // util/QueryParser.java:45
 
   /** A compiled subtree: polarity type (0 normal / 1 negated / 2 stop
-    * word), its plan with schema `(doc_id, score[, positions])`, whether
-    * positions are still attached, and an upper-bound cardinality
-    * estimate used for AND reordering and broadcast hints.
+    * word), its posting list as a per-document score expression (null =
+    * the document is not in the list), the leaf's positions while they
+    * are still attached, and an upper-bound cardinality estimate used
+    * for AND ordering.
     */
-  final case class Node(tpe: Int, df: DataFrame, hasPositions: Boolean, est: Long)
+  final case class Node(tpe: Int, score: Column, positions: Option[Column], est: Long)
 
   /** Exact min token distance between two ABSOLUTE position lists (the
     * index stores absolute positions; Parquet handles delta encoding).
@@ -57,111 +63,73 @@ object QueryCompiler {
     if (best == Int.MaxValue) None else Some(best)
   }
 
-  /** Broadcast the build side when its posting-list cardinality is known
-    * to be small; otherwise leave the choice to AQE.
-    */
-  private def maybeBroadcast(df: DataFrame, est: Long): DataFrame =
-    if (est >= 0 && est <= 1000000L) broadcast(df) else df
+  private val noPostings: Column = lit(null).cast("double")
 
-  /** J1: AND = inner join on doc_id, score = product, proximity-boosted
-    * `pow(s1*s2, phraseFactor + 1/minDist)` when both operands still
-    * carry positions (`util/QueryParser.java:194-258`).
+  /** J1: AND = product, proximity-boosted `pow(s1*s2, phraseFactor +
+    * 1/minDist)` when both operands still carry positions
+    * (`util/QueryParser.java:194-258`).
     */
-  private def intersectDf(a: Node, b: Node): DataFrame = {
-    val proximity = a.hasPositions && b.hasPositions
-    val l =
-      if (proximity) a.df.select(col("doc_id"), col("score").as("s1"), col("positions").as("p1"))
-      else a.df.select(col("doc_id"), col("score").as("s1"))
-    val r =
-      if (proximity) b.df.select(col("doc_id"), col("score").as("s2"), col("positions").as("p2"))
-      else b.df.select(col("doc_id"), col("score").as("s2"))
-    val joined = l.join(maybeBroadcast(r, b.est), "doc_id")
-    val score: Column =
-      if (proximity) {
-        val withD = joined.withColumn("d",
-          graft.functions.MinTokenDistance.of(col("p1"), col("p2")))
+  private def intersect(a: Node, b: Node): Column = {
+    val product = a.score * b.score
+    (a.positions, b.positions) match {
+      case (Some(p1), Some(p2)) =>
+        val d = graft.functions.MinTokenDistance.of(p1, p2)
         // d = 0 (same position, e.g. phrase "w w") must give exponent
         // 1/0 = Infinity like plain-double arithmetic; ANSI mode throws
         // DIVIDE_BY_ZERO even for doubles, so the zero case branches
         // before any division
-        val invD = when(col("d") === 0, lit(Double.PositiveInfinity))
-          .otherwise(lit(1.0) / col("d").cast("double"))
-        return withD.select(col("doc_id"),
-          when(col("d").isNotNull,
-            pow(col("s1") * col("s2"), lit(PhraseFactor) + invD))
-            .otherwise(col("s1") * col("s2")).as("score"))
-      } else col("s1") * col("s2")
-    joined.select(col("doc_id"), score.as("score"))
+        val invD = when(d === 0, lit(Double.PositiveInfinity))
+          .otherwise(lit(1.0) / d.cast("double"))
+        when(d.isNotNull, pow(product, lit(PhraseFactor) + invD)).otherwise(product)
+      case _ => product
+    }
   }
 
-  /** J2: OR = full-outer join on doc_id; matched rows sum scores
+  /** J2: OR = union of the lists; matched documents sum scores
     * (`util/QueryParser.java:300-325`).
     */
-  private def mergeDf(a: Node, b: Node): DataFrame = {
-    val l = a.df.select(col("doc_id"), col("score").as("s1"))
-    val r = b.df.select(col("doc_id"), col("score").as("s2"))
-    l.join(r, Seq("doc_id"), "full_outer")
-      .select(col("doc_id"),
-        (coalesce(col("s1"), lit(0.0)) + coalesce(col("s2"), lit(0.0))).as("score"))
-  }
+  private def merge(a: Node, b: Node): Column =
+    coalesce(a.score + b.score, a.score, b.score)
 
-  /** J3: AND NOT = left-anti join on doc_id (`util/QueryParser.java:173-192`). */
-  private def differenceDf(a: Node, b: Node): DataFrame =
-    a.df.select(col("doc_id"), col("score"))
-      .join(maybeBroadcast(b.df.select(col("doc_id")), b.est), Seq("doc_id"), "left_anti")
+  /** J3: AND NOT = `a`'s documents absent from `b` (`util/QueryParser.java:173-192`). */
+  private def difference(a: Node, b: Node): Column =
+    when(b.score.isNull, a.score)
 
   /** J4: negation-aware AND type dispatch (`util/QueryParser.java:122-139`). */
   private def combineAnd(a: Node, b: Node): Node =
     if (a.tpe == 2 && b.tpe == 2) a
     else if (a.tpe == 2) b
     else if (b.tpe == 2) a
-    else if (a.tpe == 1 && b.tpe == 1) Node(1, mergeDf(a, b), hasPositions = false, a.est + b.est)
-    else if (a.tpe == 0 && b.tpe == 0)
-      Node(0, intersectDf(a, b), hasPositions = false, math.min(a.est, b.est))
-    else if (a.tpe == 1) Node(0, differenceDf(b, a), hasPositions = false, b.est)
-    else Node(0, differenceDf(a, b), hasPositions = false, a.est)
+    else if (a.tpe == 1 && b.tpe == 1) Node(1, merge(a, b), None, a.est + b.est)
+    else if (a.tpe == 0 && b.tpe == 0) Node(0, intersect(a, b), None, math.min(a.est, b.est))
+    else if (a.tpe == 1) Node(0, difference(b, a), None, b.est)
+    else Node(0, difference(a, b), None, a.est)
 
   /** J5: negation-aware OR type dispatch (`util/QueryParser.java:281-298`). */
   private def combineOr(a: Node, b: Node): Node =
     if (a.tpe == 2 && b.tpe == 2) a
     else if (a.tpe == 2) b
     else if (b.tpe == 2) a
-    else if (a.tpe == 1 && b.tpe == 1)
-      Node(1, intersectDf(a, b), hasPositions = false, math.min(a.est, b.est))
-    else if (a.tpe == 0 && b.tpe == 0) Node(0, mergeDf(a, b), hasPositions = false, a.est + b.est)
-    else if (a.tpe == 1) Node(1, differenceDf(a, b), hasPositions = false, a.est)
-    else Node(1, differenceDf(b, a), hasPositions = false, b.est)
+    else if (a.tpe == 1 && b.tpe == 1) Node(1, intersect(a, b), None, math.min(a.est, b.est))
+    else if (a.tpe == 0 && b.tpe == 0) Node(0, merge(a, b), None, a.est + b.est)
+    else if (a.tpe == 1) Node(1, difference(a, b), None, a.est)
+    else Node(1, difference(b, a), None, b.est)
 
-  private def stripPositions(n: Node): Node =
-    Node(n.tpe, n.df.select(col("doc_id"), col("score")), hasPositions = false, n.est)
+  private def stripPositions(n: Node): Node = n.copy(positions = None)
 
   /** J6: n-ary AND, smallest-estimated-first left fold. */
   private def nAryAnd(ns: Vector[Node]): Node =
     if (ns.length == 1) stripPositions(ns.head)
     else ns.sortBy(_.est).reduceLeft(combineAnd)
 
-  /** J7: n-ary OR. All-positive disjunctions (the common case) compile to
-    * ONE union + hash re-aggregation — a single shuffle instead of a
-    * chain of full-outer joins; identical values since OR's score is a
-    * plain sum. Mixed-polarity disjunctions fall back to the reference's
-    * balanced pairwise tree (`util/QueryParser.java:267-279`).
+  /** J7: n-ary OR, the reference's balanced binary merge tree
+    * (`util/QueryParser.java:267-279`), exactly as [[PostingAlgebra.nAryOr]].
     */
   private def nAryOr(ns: Vector[Node]): Node =
     if (ns.length == 1) stripPositions(ns.head)
     else {
-      val live = ns.filter(_.tpe != 2)
-      if (live.isEmpty) ns.head // all stop words: identity chain yields type 2
-      else if (live.forall(_.tpe == 0)) {
-        val unioned = live.map(n => n.df.select(col("doc_id"), col("score")))
-          .reduce(_ unionByName _)
-          .groupBy("doc_id").agg(sum("score").as("score"))
-        Node(0, unioned, hasPositions = false, live.map(_.est).sum)
-      } else {
-        def tree(v: Vector[Node]): Node =
-          if (v.length == 1) stripPositions(v.head)
-          else { val m = v.length / 2; combineOr(tree(v.take(m)), tree(v.drop(m))) }
-        tree(live)
-      }
+      val m = ns.length / 2
+      combineOr(nAryOr(ns.take(m)), nAryOr(ns.drop(m)))
     }
 
   /** Every index term mentioned by the query (used for the pruning
@@ -176,6 +144,18 @@ object QueryCompiler {
     case Or(cs, _)     => cs.flatMap(leafTerms)
   }
 
+  /** The terms whose positions the algebra can read: leaves that are
+    * direct operands of a multi-operand AND, i.e. words of a multi-word
+    * phrase. Every other leaf loses its positions before any combine.
+    */
+  private def phraseTerms(ast: QueryAst): Vector[String] = ast match {
+    case And(cs) if cs.length > 1 =>
+      cs.collect { case Word(t) => t; case ExceptWord(t) => t } ++ cs.flatMap(phraseTerms)
+    case And(cs)   => cs.flatMap(phraseTerms)
+    case Or(cs, _) => cs.flatMap(phraseTerms)
+    case _         => Vector.empty
+  }
+
   /** Per-term document frequencies for the query's terms: one small
     * aggregate over the pruned index slice (Parquet min/max stats skip
     * everything else when the index is term-range-partitioned).
@@ -186,24 +166,42 @@ object QueryCompiler {
       .groupBy("term").agg(count("*").as("df"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
 
-  /** Compile a parsed query against a posting table with schema
-    * `(term, doc_id, score, positions, ...)`.
+  /** `(doc_id, postings)` for every document holding a term of `asts`,
+    * where `postings` is a `map<term, struct<score, positions>>` over a
+    * posting table with schema `(term, doc_id, score, positions, ...)`
+    * holding one row per (term, doc). The `term IN (...)` filter is the
+    * reference's mapper-side semi-filter (J8/X1) and pushes into a
+    * parquet scan; positions are kept only for phrase words, so the
+    * group-by shuffles scores alone for every other term.
     */
-  def compile(ast: QueryAst, index: DataFrame, stats: Map[String, Long]): Node = {
-    def leafDf(term: String): DataFrame =
-      index.filter(col("term") === lit(term))
-        .select(col("doc_id"), col("score"), col("positions"))
+  def postingMaps(index: DataFrame, asts: Seq[QueryAst]): DataFrame = {
+    val terms = asts.flatMap(leafTerms).distinct
+    val withPositions = asts.flatMap(phraseTerms).distinct
+    index.filter(col("term").isin(terms: _*))
+      .groupBy("doc_id")
+      .agg(map_from_entries(collect_list(struct(col("term"),
+        struct(col("score").as("score"),
+          when(col("term").isin(withPositions: _*), col("positions"))
+            .as("positions"))))).as("postings"))
+  }
+
+  /** Compile a parsed query to its score expression over a
+    * [[postingMaps]] column.
+    */
+  def compile(ast: QueryAst, postings: Column, stats: Map[String, Long]): Node = {
+    def leaf(tpe: Int, term: String): Node = {
+      val posting = postings.getItem(term)
+      Node(tpe, posting.getField("score"), Some(posting.getField("positions")),
+        stats.getOrElse(term, 0L))
+    }
     // a query that is nothing but connectives ("and") parses to a
     // zero-child node (Java split of an exact match is an empty array);
     // degrade to an empty result instead of the reference's crash
-    def emptyNode = Node(0, index.limit(0).select(col("doc_id"), lit(0.0).as("score")),
-      hasPositions = false, 0L)
+    val emptyNode = Node(0, noPostings, None, 0L)
     def go(a: QueryAst): Node = a match {
-      case Word(t)       => Node(0, leafDf(t), hasPositions = true, stats.getOrElse(t, 0L))
-      case ExceptWord(t) => Node(1, leafDf(t), hasPositions = true, stats.getOrElse(t, 0L))
-      case StopWord =>
-        Node(2, index.limit(0).select(col("doc_id"), lit(0.0).as("score")),
-          hasPositions = false, 0L)
+      case Word(t)       => leaf(0, t)
+      case ExceptWord(t) => leaf(1, t)
+      case StopWord      => Node(2, noPostings, None, 0L)
       case And(cs) => if (cs.isEmpty) emptyNode else nAryAnd(cs.map(go))
       case Or(cs, negated) =>
         if (cs.isEmpty) emptyNode

@@ -33,9 +33,9 @@ object Scoring {
     * `(term, doc_id, tf, positions, df, dl, score)` from a documents
     * table — the same DAG as [[Indexer.postings]] plus one per-doc
     * length aggregate (`dl = sum(tf)`, i.e. total kept tokens) and the
-    * 1-row avgdl broadcast. Carries positions, so it drops into
-    * [[QueryCompiler]] as an alternative scorer for the full boolean
-    * algebra (including phrase proximity).
+    * 1-row avgdl broadcast. Carries positions and one row per
+    * (term, doc), so [[SearchEngine.search]] evaluates the full boolean
+    * algebra (including phrase proximity) over it unchanged.
     */
   def bm25Postings(docs: DataFrame, stopWords: Seq[String] = Seq.empty,
                    stem: Boolean = true): DataFrame = {

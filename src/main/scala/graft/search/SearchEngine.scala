@@ -1,15 +1,16 @@
 package graft.search
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** End-to-end batch search: the Spark restatement of the reference's
   * query lifecycle (`code/query/QueryMapred.java:207-239` +
   * `util/CorpusFetcher.java:73-118`): parse -> prune -> evaluate the
-  * boolean algebra as joins -> rank -> paginate -> fetch docs -> snippet
-  * and highlight. The reference's single-reducer evaluation becomes a
-  * distributed join tree; pagination is a window over an already
+  * boolean algebra as per-document score expressions -> rank ->
+  * paginate -> fetch docs -> snippet and highlight. Like the reference's
+  * single query job, one call is one pruned index scan whatever the
+  * number of queries; pagination is a window over an already
   * top-k-limited result, never a global single-partition sort of the full
   * result set.
   */
@@ -24,47 +25,64 @@ object SearchEngine {
     * order on ties, `util/PostingList.java:160-166`).
     *
     * A top-level negated result (e.g. the query `not a`) resolves against
-    * the corpus with a left-anti join — the universe the reference leaves
-    * implicit (SURVEY.md §2.5); score 0 since negated docs carry none.
+    * the corpus — the universe the reference leaves implicit (SURVEY.md
+    * §2.5); score 0 since negated docs carry none.
     *
-    * `materializeSlice = false` keeps the pruned term slice LAZY instead
-    * of localCheckpointing it: the right mode when `index` is an AT-REST
-    * parquet posting table (the reference's persisted term-partitioned
-    * index, `code/query/QueryMapred.java:126-162`) — each query leaf then
-    * re-reads the index as its own `term IN (...)`-pushed scan, which the
-    * term-range layout prunes to the query's files via footer min/max
-    * stats, exactly the reference's query-time partition pruning. The
-    * default (true) is for a DERIVED index, where laziness would re-run
-    * the whole indexing pipeline per leaf.
+    * The index may be an AT-REST parquet posting table (the reference's
+    * persisted term-partitioned index, `code/query/QueryMapred.java:
+    * 126-162`): the `term IN (...)` filter then pushes into the scan and
+    * the term-range layout prunes it to the query's files via footer
+    * min/max stats — the reference's query-time partition pruning. A
+    * DERIVED index is read twice, by the stats fetch and by the
+    * evaluation, so callers cache one that is costly to recompute.
     */
   def search(query: String, index: DataFrame, docs: DataFrame,
-             stopWords: Set[String] = Set.empty,
-             materializeSlice: Boolean = true): DataFrame = {
-    val ast = new QueryParser(stopWords).parse(query.toLowerCase)
-    val terms = QueryCompiler.leafTerms(ast)
-    // Prune the index to the query's terms ONCE and materialize the
-    // slice (the reference's mapper-side semi-filter, J8/X1): with a
-    // parquet index this is a stats-pruned scan; with a lazily-derived
-    // index it stops each query leaf from re-running the whole indexing
-    // pipeline. localCheckpoint is eager, executor-resident, and
-    // GC-cleaned once the query's DataFrames are unreferenced.
-    val slice =
-      if (terms.isEmpty) index.limit(0)
-      else {
-        val pruned = index.filter(col("term").isin(terms.distinct: _*))
-          .select("term", "doc_id", "score", "positions")
-        if (materializeSlice) pruned.localCheckpoint(true) else pruned
-      }
-    val stats = QueryCompiler.termStats(slice, terms)
-    val node = QueryCompiler.compile(ast, slice, stats)
-    val resolved = node.tpe match {
-      case 0 => node.df.select(col("doc_id"), col("score"))
-      case 1 => docs.select(col("doc_id"))
-        .join(node.df.select(col("doc_id")), Seq("doc_id"), "left_anti")
-        .select(col("doc_id"), lit(0.0).as("score"))
-      case _ => node.df.select(col("doc_id"), col("score")).limit(0)
-    }
-    resolved.orderBy(desc("score"), asc("doc_id"))
+             stopWords: Set[String] = Set.empty): DataFrame =
+    evaluate(Seq(query), index, docs, stopWords)
+      .select(col("doc_id"), col("score"))
+      .orderBy(desc("score"), asc("doc_id"))
+
+  /** Batch retrieval: `(query, doc_id, score)` for every distinct query,
+    * evaluated in the same single pass as [[search]] — one `term IN
+    * (...)` scan for the union of the batch's terms, one stats fetch, and
+    * a fixed number of jobs for any batch size (the reference runs a full
+    * MapReduce job per query, `code/query/QueryMapred.java`). An empty
+    * batch yields an empty tagged result.
+    */
+  def searchMany(queries: Seq[String], index: DataFrame, docs: DataFrame,
+                 stopWords: Set[String] = Set.empty): DataFrame =
+    evaluate(queries.distinct, index, docs, stopWords)
+
+  /** The one search plan: group each document's postings for the batch's
+    * terms into a map ([[QueryCompiler.postingMaps]]), compute one
+    * nullable score column per query, and explode the non-null
+    * `(query, score)` pairs. Negated-root queries read the maps
+    * left-joined from `docs` (a null score there means "in the result",
+    * with score 0); stop-word-only roots contribute no rows.
+    */
+  private def evaluate(queries: Seq[String], index: DataFrame, docs: DataFrame,
+                       stopWords: Set[String]): DataFrame = {
+    val parser = new QueryParser(stopWords)
+    val asts = queries.map(q => q -> parser.parse(q.toLowerCase))
+    val stats = QueryCompiler.termStats(index,
+      asts.flatMap { case (_, ast) => QueryCompiler.leafTerms(ast) })
+    val nodes = asts.map { case (q, ast) =>
+      q -> QueryCompiler.compile(ast, col("postings"), stats) }
+    val byDoc = QueryCompiler.postingMaps(index, asts.map(_._2))
+    def tagged(base: DataFrame, scores: Seq[(String, Column)]): Option[DataFrame] =
+      if (scores.isEmpty) None
+      else Some(base
+        .select(col("doc_id"), explode(array(scores.map { case (q, s) =>
+          struct(lit(q).as("query"), s.as("score")) }: _*)).as("hit"))
+        .filter(col("hit.score").isNotNull)
+        .select(col("hit.query").as("query"), col("doc_id"), col("hit.score").as("score")))
+    val positive = tagged(byDoc,
+      nodes.collect { case (q, n) if n.tpe == 0 => q -> n.score })
+    val negated = tagged(docs.select("doc_id").join(byDoc, Seq("doc_id"), "left"),
+      nodes.collect { case (q, n) if n.tpe == 1 => q -> when(n.score.isNull, lit(0.0)) })
+    (positive ++ negated).reduceOption(_ unionByName _).getOrElse(
+      docs.sparkSession.range(0)
+        .select(lit("").as("query"), col("id").as("doc_id"), lit(0.0).as("score")))
   }
 
   /** Prefix query (`spar*` style — the Lucene-PrefixQuery extension the
@@ -93,27 +111,6 @@ object SearchEngine {
       .agg(sum("score").as("score"), count(lit(1)).as("n_terms"))
       .orderBy(desc("score"), asc("doc_id"))
   }
-
-  /** Batch retrieval: evaluate N queries as one unioned plan, results
-    * tagged by query string. The reference runs a full MapReduce job
-    * per query (`code/query/QueryMapred.java`); here the batch shares
-    * the (session-cached) index and evaluates in a single final job —
-    * per-query COMPILATION still runs its own small jobs (the eager
-    * slice materialization and the per-term stats fetch inside
-    * [[search]]), so an N-query batch is ~2N planning jobs + 1
-    * evaluation, not N full pipelines. An empty batch yields an empty
-    * tagged result.
-    */
-  def searchMany(queries: Seq[String], index: DataFrame, docs: DataFrame,
-                 stopWords: Set[String] = Set.empty): DataFrame =
-    if (queries.isEmpty)
-      docs.sparkSession.range(0)
-        .select(lit("").as("query"), col("id").as("doc_id"), lit(0.0).as("score"))
-    else
-      queries.map(q =>
-          search(q, index, docs, stopWords)
-            .select(lit(q).as("query"), col("doc_id"), col("score")))
-        .reduce(_ unionByName _)
 
   /** One result page (1-based `page`): top `page*PageSize` rows only are
     * ever sorted/collected (TakeOrdered), then the window numbers that

@@ -61,6 +61,7 @@ class PlanAuditSpec extends AnyFunSuite {
     "postings_stemmed", "search_cnf", "search_phrase", "search_and",
     "search_or", "search_and_not", "search_not_or", "search_page1",
     "search_snippets", "search_stopword_drop", "search_batch",
+    "search_streamed_index", // 1-row docNum frame of the lazily served index
     "dedup_keep_best", "text_dsir_weights", "text_classifier_score",
     "index_stats", // 1-row doc-count frame crossed into the stats row
     "q_exact_quantile", // 1-row total-count frame drives bucket targets

@@ -30,15 +30,15 @@ class RoundTwentyThreeSpec extends AnyFunSuite {
       "into the persisted index scan") {
     val df = SparkEntry.queries("search_and_at_rest")(spark, testdata)
     val plan = df.queryExecution.executedPlan.toString
-    // the lazy slice makes every query leaf its own parquet scan over
-    // the term-range layout; the term IN (...) predicate must reach
-    // the scan (PushedFilters), where footer min/max stats on the
-    // term-sorted files give the reference's query-time partition
-    // pruning (code/query/QueryMapred.java:126-162)
+    // the query reads the term-range layout in one scan; its
+    // term IN (...) predicate must reach the scan (PushedFilters),
+    // where footer min/max stats on the term-sorted files give the
+    // reference's query-time partition pruning
+    // (code/query/QueryMapred.java:126-162)
     assert(plan.matches("(?s).*PushedFilters: \\[[^\\]]*[Tt]erm.*"),
       s"expected a term PushedFilters on the at-rest index scan:\n$plan")
-    // and no localCheckpoint barrier hides the scans: the at-rest path
-    // must NOT materialize the slice into an in-memory table
+    // and no checkpoint barrier hides the scan: the at-rest path must
+    // NOT materialize the slice into an in-memory table
     assert(!plan.contains("Scan ExistingRDD"),
       "at-rest search must read the parquet layout lazily, " +
         "not a checkpointed slice")

@@ -31,14 +31,13 @@ class SparkIntegrationSpec extends AnyFunSuite {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
-  /** Evaluate a query both ways — distributed join tree and in-memory
-    * reference algebra fed with the SAME collected postings — and demand
-    * identical (doc_id, score) sets.
+  /** The in-memory reference algebra's answer for `query`, fed with the
+    * collected postings of its terms (delta-encoded, string-docId,
+    * docId-sorted lists).
     */
-  def checkAgainstLocal(query: String, stopWords: Set[String] = Set.empty): Unit = {
+  def localAlgebra(query: String, stopWords: Set[String]): PostingAlgebra.Wrapped = {
     val ast = new QueryParser(stopWords).parse(query.toLowerCase)
     val terms = QueryCompiler.leafTerms(ast)
-    // local: postings as delta-encoded, string-docId, docId-sorted lists
     val local = index.filter(col("term").isin(terms.distinct: _*))
       .select("term", "doc_id", "score", "positions").collect()
       .groupBy(_.getString(0))
@@ -50,16 +49,34 @@ class SparkIntegrationSpec extends AnyFunSuite {
         }.sortBy(_._1).toVector
           .map { case (id, s, d) => PostingAlgebra.Posting(f"$id%06d", s, d) }
       }
-    val expected = PostingAlgebra.evaluate(ast, local)
-    val stats = QueryCompiler.termStats(index, terms)
-    val node = QueryCompiler.compile(ast, index, stats)
-    assert(node.tpe == expected.tpe, s"wrapper type for '$query'")
-    val got = node.df.collect().map(r => (r.getLong(0), r.getDouble(1))).toMap
-    val want = expected.postings.map(p => (p.docId.toLong, p.score)).toMap
-    assert(got.keySet == want.keySet, s"doc sets for '$query'")
-    for ((id, s) <- want)
+    PostingAlgebra.evaluate(ast, local)
+  }
+
+  def assertSameScores(got: Map[Long, Double], want: PostingAlgebra.Wrapped,
+                       query: String): Unit = {
+    val wantScores = want.postings.map(p => (p.docId.toLong, p.score)).toMap
+    assert(got.keySet == wantScores.keySet, s"doc sets for '$query'")
+    for ((id, s) <- wantScores)
       assert(math.abs(got(id) - s) < 1e-9 ||
         (s.isInfinity && got(id).isInfinity), s"score of doc $id for '$query'")
+  }
+
+  /** Evaluate a query both ways — the compiled score expression over the
+    * per-document posting maps, and the in-memory reference algebra fed
+    * with the SAME postings — and demand the same wrapper type and
+    * identical (doc_id, score) sets.
+    */
+  def checkAgainstLocal(query: String, stopWords: Set[String] = Set.empty): Unit = {
+    val ast = new QueryParser(stopWords).parse(query.toLowerCase)
+    val expected = localAlgebra(query, stopWords)
+    val stats = QueryCompiler.termStats(index, QueryCompiler.leafTerms(ast))
+    val node = QueryCompiler.compile(ast, col("postings"), stats)
+    assert(node.tpe == expected.tpe, s"wrapper type for '$query'")
+    val got = QueryCompiler.postingMaps(index, Seq(ast))
+      .select(col("doc_id"), node.score.as("score"))
+      .filter(col("score").isNotNull)
+      .collect().map(r => (r.getLong(0), r.getDouble(1))).toMap
+    assertSameScores(got, expected, query)
   }
 
   test("distributed compiler matches in-memory algebra on real corpus") {
@@ -89,7 +106,10 @@ class SparkIntegrationSpec extends AnyFunSuite {
     assert(loose == exact)
   }
 
-  test("distributed compiler matches in-memory algebra on random queries") {
+  /** 12 seeded random CNF queries over a small vocabulary: phrases,
+    * negated words, (negated) disjunctions, a missing term, a stop word.
+    */
+  lazy val randomQueries: Seq[String] = {
     val rng = new scala.util.Random(13)
     val words = Vector("spark", "data", "join", "dup", "merge", "query",
       "fast", "zzzmissing", "the")
@@ -105,10 +125,85 @@ class SparkIntegrationSpec extends AnyFunSuite {
         if (rng.nextBoolean()) "not " + c else c
       case _ => literal()
     }
-    for (_ <- 1 to 12) {
-      val q = Seq.fill(1 + rng.nextInt(2))(clause()).mkString(" and ")
-      checkAgainstLocal(q, stopWords = Set("the"))
+    Seq.fill(12)(Seq.fill(1 + rng.nextInt(2))(clause()).mkString(" and "))
+  }
+
+  test("distributed compiler matches in-memory algebra on random queries") {
+    for (q <- randomQueries) checkAgainstLocal(q, stopWords = Set("the"))
+  }
+
+  test("one searchMany call matches the in-memory algebra on every query") {
+    val stop = Set("the")
+    val qs = randomQueries ++
+      Seq("not spark", "the", "and", "spark and not (the)")
+    val batch = SearchEngine.searchMany(qs, index, docs, stop).collect()
+      .groupBy(_.getString(0))
+      .map { case (q, rows) => q -> rows.map(r => (r.getLong(1), r.getDouble(2))).toMap }
+    val all = docs.select("doc_id").collect().map(_.getLong(0)).toSet
+    val expected = qs.map(q => q -> localAlgebra(q, stop)).toMap
+    // the batch mixes positive, negated and stop-word-only roots
+    assert(Set(0, 1, 2).subsetOf(expected.values.map(_.tpe).toSet))
+    for (q <- qs) {
+      val got = batch.getOrElse(q, Map.empty[Long, Double])
+      expected(q).tpe match {
+        case 0 => assertSameScores(got, expected(q), q)
+        case 1 =>
+          val negated = expected(q).postings.map(_.docId.toLong).toSet
+          assert(got == (all diff negated).map(_ -> 0.0).toMap, s"complement for '$q'")
+        case _ => assert(got.isEmpty, s"stop-word-only '$q' must match nothing")
+      }
     }
+  }
+
+  test("searchMany evaluates a repeated query once") {
+    val one = SearchEngine.searchMany(Seq("spark or data"), index, docs)
+    val twice = SearchEngine.searchMany(Seq("spark or data", "spark or data"), index, docs)
+    assert(twice.count() == one.count())
+    assert(twice.exceptAll(one).isEmpty && one.exceptAll(twice).isEmpty)
+  }
+
+  test("searchMany runs the same number of Spark jobs for 1 and 24 queries") {
+    import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val Fence = "graft.test.fence"
+    // one entry per job start, true for the fence jobs below: listener
+    // events arrive in order, so once a fence is seen every job started
+    // before it has been counted
+    val started = new LinkedBlockingQueue[java.lang.Boolean]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        started.put(Option(e.properties).exists(_.getProperty(Fence) != null))
+    }
+    def jobsUntilFence(): Int = {
+      sc.setLocalProperty(Fence, "1")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(Fence, null)
+      var n = 0
+      var fence = false
+      while (!fence) {
+        val e = started.poll(60, TimeUnit.SECONDS)
+        assert(e != null, "job start events stopped arriving")
+        if (e) fence = true else n += 1
+      }
+      n
+    }
+    def jobsFor(qs: Seq[String]): Int = {
+      jobsUntilFence()
+      SearchEngine.searchMany(qs, index, docs).collect()
+      jobsUntilFence()
+    }
+    // 24 positive queries: every pair of 8 words joined by and / or / a
+    // phrase, so the batch touches every path of the positive algebra
+    val words = Seq("spark", "data", "join", "dup", "merge", "query", "fast", "key")
+    val many = words.combinations(2).toSeq.take(8).flatMap { case Seq(a, b) =>
+      Seq(s"$a and $b", s"$a or $b", s"$a $b") }
+    assert(many.distinct.length == 24)
+    sc.addSparkListener(listener)
+    try {
+      val one = jobsFor(Seq("spark and data"))
+      assert(one > 0 && one == jobsFor(many))
+    }
+    finally sc.removeSparkListener(listener)
   }
 
   test("top-level negated query resolves against the corpus") {
@@ -239,11 +334,19 @@ class SparkIntegrationSpec extends AnyFunSuite {
         "dedup_embedding")) {
       assert(!plan(q).contains("CartesianProduct"), s"$q plans a cross join")
     }
-    // search evaluates over the checkpointed pruned slice (no re-run of
-    // the indexing pipeline per leaf) and broadcast-joins posting lists
-    val searchPlan = plan("search_and")
-    assert(searchPlan.contains("Scan ExistingRDD")) // the localCheckpoint slice
-    assert(searchPlan.contains("BroadcastHashJoin"))
+    // search evaluates the algebra per document over one grouped scan:
+    // above the session-cached index, a positive query plans no join
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case _ => p.children.flatMap(nodes)
+    })
+    val searchPlan = SparkEntry.queries("search_and")(spark, sfDir)
+      .queryExecution.executedPlan
+    assert(nodes(searchPlan).collect { case j: BaseJoinExec => j }.isEmpty,
+      s"search_and plans a join:\n$searchPlan")
   }
 
   test("bucketed tables join and aggregate without a shuffle exchange") {
