@@ -23,7 +23,9 @@ import org.apache.spark.sql.functions._
   *
   * Cardinality-based AND ordering (J6, `util/QueryParser.java:159-164`)
   * uses per-term document frequencies fetched in ONE tiny aggregate over
-  * the pruned index slice — statistics cross the driver, postings never do.
+  * the pruned index slice — statistics cross the driver, postings never
+  * do — and only for a query where the order can change the result
+  * ([[needsStats]]); any other query plans with no Spark job at all.
   *
   * Score algebra: AND = product (with phrase-proximity boost when both
   * sides still carry positions), OR = sum. Positions survive exactly one
@@ -154,6 +156,23 @@ object QueryCompiler {
     case And(cs)   => cs.flatMap(phraseTerms)
     case Or(cs, _) => cs.flatMap(phraseTerms)
     case _         => Vector.empty
+  }
+
+  /** Whether some n-ary AND's df order can change the query's result,
+    * decided from the data-independent wrapper types: an AND of 3 or more
+    * operands (the order picks the pair that keeps phrase positions, and
+    * the product's rounding), or one with a -1 operand (a negated group
+    * of stop words only), where the J4 dispatch is not symmetric. Every
+    * other AND evaluates identically in either order, so its query
+    * compiles without [[termStats]].
+    */
+  def needsStats(ast: QueryAst): Boolean = ast match {
+    case And(cs) =>
+      cs.length > 2 ||
+        (cs.length == 2 && cs.exists(c => compile(c, noPostings, Map.empty).tpe == -1)) ||
+        cs.exists(needsStats)
+    case Or(cs, _) => cs.exists(needsStats)
+    case _         => false
   }
 
   /** Per-term document frequencies for the query's terms: one small

@@ -33,8 +33,9 @@ object SearchEngine {
     * 126-162`): the `term IN (...)` filter then pushes into the scan and
     * the term-range layout prunes it to the query's files via footer
     * min/max stats — the reference's query-time partition pruning. A
-    * DERIVED index is read twice, by the stats fetch and by the
-    * evaluation, so callers cache one that is costly to recompute.
+    * query whose AND order depends on document frequencies
+    * ([[QueryCompiler.needsStats]]) also reads a DERIVED index in the
+    * stats fetch, so callers cache one that is costly to recompute.
     */
   def search(query: String, index: DataFrame, docs: DataFrame,
              stopWords: Set[String] = Set.empty): DataFrame =
@@ -44,8 +45,9 @@ object SearchEngine {
 
   /** Batch retrieval: `(query, doc_id, score)` for every distinct query,
     * evaluated in the same single pass as [[search]] — one `term IN
-    * (...)` scan for the union of the batch's terms, one stats fetch, and
-    * a fixed number of jobs for any batch size (the reference runs a full
+    * (...)` scan for the union of the batch's terms, at most one stats
+    * fetch (for the queries whose AND order needs it), and a fixed number
+    * of jobs for any batch size (the reference runs a full
     * MapReduce job per query, `code/query/QueryMapred.java`). An empty
     * batch yields an empty tagged result.
     */
@@ -65,7 +67,7 @@ object SearchEngine {
     val parser = new QueryParser(stopWords)
     val asts = queries.map(q => q -> parser.parse(q.toLowerCase))
     val stats = QueryCompiler.termStats(index,
-      asts.flatMap { case (_, ast) => QueryCompiler.leafTerms(ast) })
+      asts.map(_._2).filter(QueryCompiler.needsStats).flatMap(QueryCompiler.leafTerms))
     val nodes = asts.map { case (q, ast) =>
       q -> QueryCompiler.compile(ast, col("postings"), stats) }
     val byDoc = QueryCompiler.postingMaps(index, asts.map(_._2))

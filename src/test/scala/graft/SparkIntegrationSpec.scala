@@ -106,11 +106,11 @@ class SparkIntegrationSpec extends AnyFunSuite {
     assert(loose == exact)
   }
 
-  /** 12 seeded random CNF queries over a small vocabulary: phrases,
+  /** `n` seeded random CNF queries over a small vocabulary: phrases,
     * negated words, (negated) disjunctions, a missing term, a stop word.
     */
-  lazy val randomQueries: Seq[String] = {
-    val rng = new scala.util.Random(13)
+  def randomQueries(n: Int, seed: Long): Seq[String] = {
+    val rng = new scala.util.Random(seed)
     val words = Vector("spark", "data", "join", "dup", "merge", "query",
       "fast", "zzzmissing", "the")
     def word() = words(rng.nextInt(words.length))
@@ -125,8 +125,10 @@ class SparkIntegrationSpec extends AnyFunSuite {
         if (rng.nextBoolean()) "not " + c else c
       case _ => literal()
     }
-    Seq.fill(12)(Seq.fill(1 + rng.nextInt(2))(clause()).mkString(" and "))
+    Seq.fill(n)(Seq.fill(1 + rng.nextInt(2))(clause()).mkString(" and "))
   }
+
+  lazy val randomQueries: Seq[String] = randomQueries(12, 13)
 
   test("distributed compiler matches in-memory algebra on random queries") {
     for (q <- randomQueries) checkAgainstLocal(q, stopWords = Set("the"))
@@ -134,8 +136,11 @@ class SparkIntegrationSpec extends AnyFunSuite {
 
   test("one searchMany call matches the in-memory algebra on every query") {
     val stop = Set("the")
+    // the last three have an AND whose df order matters (3 operands, or
+    // a -1 operand), so the stats fetch runs inside evaluate
     val qs = randomQueries ++
-      Seq("not spark", "the", "and", "spark and not (the)")
+      Seq("not spark", "the", "and", "spark and not (the)",
+        "fast key order", "spark and data and join", "data and not (the)")
     val batch = SearchEngine.searchMany(qs, index, docs, stop).collect()
       .groupBy(_.getString(0))
       .map { case (q, rows) => q -> rows.map(r => (r.getLong(1), r.getDouble(2))).toMap }
@@ -162,7 +167,8 @@ class SparkIntegrationSpec extends AnyFunSuite {
     assert(twice.exceptAll(one).isEmpty && one.exceptAll(twice).isEmpty)
   }
 
-  test("searchMany runs the same number of Spark jobs for 1 and 24 queries") {
+  /** The number of Spark jobs `body` starts. */
+  def jobsDuring(body: => Unit): Int = {
     import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val sc = spark.sparkContext
@@ -187,23 +193,67 @@ class SparkIntegrationSpec extends AnyFunSuite {
       }
       n
     }
-    def jobsFor(qs: Seq[String]): Int = {
+    sc.addSparkListener(listener)
+    try {
       jobsUntilFence()
-      SearchEngine.searchMany(qs, index, docs).collect()
+      body
       jobsUntilFence()
     }
+    finally sc.removeSparkListener(listener)
+  }
+
+  test("searchMany runs the same number of Spark jobs for 1 and 24 queries") {
+    def jobsFor(qs: Seq[String]): Int =
+      jobsDuring(SearchEngine.searchMany(qs, index, docs).collect())
     // 24 positive queries: every pair of 8 words joined by and / or / a
     // phrase, so the batch touches every path of the positive algebra
     val words = Seq("spark", "data", "join", "dup", "merge", "query", "fast", "key")
     val many = words.combinations(2).toSeq.take(8).flatMap { case Seq(a, b) =>
       Seq(s"$a and $b", s"$a or $b", s"$a $b") }
     assert(many.distinct.length == 24)
-    sc.addSparkListener(listener)
-    try {
-      val one = jobsFor(Seq("spark and data"))
-      assert(one > 0 && one == jobsFor(many))
+    val one = jobsFor(Seq("spark and data"))
+    assert(one > 0 && one == jobsFor(many))
+  }
+
+  test("search plans with no Spark job unless an AND needs df order") {
+    assert(jobsDuring(SearchEngine.search("spark and data", index, docs)) == 0)
+    assert(jobsDuring(SearchEngine.search("spark data", index, docs)) == 0)
+    // a 3-word phrase and an AND with a -1 operand fetch the term stats
+    assert(jobsDuring(SearchEngine.search("fast key order", index, docs)) > 0)
+    assert(jobsDuring(SearchEngine.search("spark and not (the)", index, docs,
+      Set("the"))) > 0)
+  }
+
+  test("needsStats: with no stats needed, the df order cannot change a result") {
+    val stop = Set("the")
+    val parser = new QueryParser(stop)
+    // the grammar seldom puts a -1 operand after a positive one, so the
+    // ANDs whose order matters are also given by hand: should needsStats
+    // miss them, their unordered compile differs from the df-ordered one
+    val ordered = Seq("spark and not (the)", "data and not (the)",
+      "fast key order", "spark and data and join")
+    val asts = (randomQueries(200, 29) ++ ordered).distinct.map(q => q -> parser.parse(q))
+    val free = asts.filterNot { case (_, ast) => QueryCompiler.needsStats(ast) }
+    assert(free.length > 100 && ordered.forall(q => !free.exists(_._1 == q)))
+    val terms = free.flatMap { case (_, ast) => QueryCompiler.leafTerms(ast) }.distinct
+    val trueDf = QueryCompiler.termStats(index, terms)
+    // rank 0 = rarest; reversed, the most frequent term gets est 0
+    val byDf = terms.sortBy(t => (trueDf.getOrElse(t, 0L), t))
+    val reversed = byDf.zipWithIndex.map { case (t, i) => t -> (byDf.length - 1 - i).toLong }.toMap
+    val maps = Seq(trueDf, reversed, Map.empty[String, Long])
+    val cols = for ((_, ast) <- free; stats <- maps)
+      yield QueryCompiler.compile(ast, col("postings"), stats).score
+    val rows = QueryCompiler.postingMaps(index, free.map(_._2))
+      .select(col("doc_id") +: cols.zipWithIndex.map { case (c, i) => c.as(s"s$i") }: _*)
+      .collect()
+    for (((q, _), k) <- free.zipWithIndex) {
+      def scores(m: Int): Set[(Long, Double)] = rows.flatMap { r =>
+        val i = 1 + k * maps.length + m
+        if (r.isNullAt(i)) None else Some(r.getLong(0) -> r.getDouble(i))
+      }.toSet
+      assert(scores(1) == scores(0), s"reversed df order changed '$q'")
+      assert(scores(2) == scores(0), s"unordered compile changed '$q'")
     }
-    finally sc.removeSparkListener(listener)
   }
 
   test("top-level negated query resolves against the corpus") {
@@ -493,6 +543,97 @@ class SparkIntegrationSpec extends AnyFunSuite {
       .collect().map(_.getLong(0)).toSeq
     val hit = cache.get("spark and data").get.collect().map(_.getLong(0)).toSeq
     assert(hit == live)
+  }
+
+  /** A fresh, not yet created cache directory. */
+  def newCachePath(): String =
+    java.nio.file.Files.createTempDirectory("graft_qcache").toString + "/cache"
+
+  /** Every file under `root` named by `p`. */
+  def filesUnder(root: String)(p: String => Boolean): Seq[java.nio.file.Path] = {
+    val s = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
+    try s.filter(f => p(f.getFileName.toString)).toArray.toSeq
+      .map(_.asInstanceOf[java.nio.file.Path])
+    finally s.close()
+  }
+
+  def pairs(df: DataFrame): Seq[(Long, Double)] =
+    df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+
+  test("query cache: a hit's probe runs no Spark job") {
+    val cache = new QueryCache(spark, newCachePath())
+    assert(jobsDuring(assert(cache.get("spark and data").isEmpty)) == 0)
+    cache.searchCached("spark and data", index, docs)
+    assert(jobsDuring(assert(cache.get("spark and data").isDefined)) == 0)
+  }
+
+  test("query cache: an entry without its commit marker is a miss") {
+    val path = newCachePath()
+    val cache = new QueryCache(spark, path)
+    val first = pairs(cache.searchCached("spark and data", index, docs))
+    // a crashed put: part files written, job never committed
+    val markers = filesUnder(path)(_ == "_SUCCESS")
+    assert(markers.length == 1)
+    java.nio.file.Files.delete(markers.head)
+    assert(filesUnder(path)(_.startsWith("part-")).nonEmpty)
+    assert(cache.get("spark and data").isEmpty)
+    // the next search rewrites and commits the entry
+    assert(pairs(cache.searchCached("spark and data", index, docs)) == first)
+    assert(cache.get("spark and data").isDefined)
+  }
+
+  test("query cache: a committed but corrupt entry fails on read") {
+    val path = newCachePath()
+    val cache = new QueryCache(spark, path)
+    cache.put("spark and data", SearchEngine.search("spark and data", index, docs))
+    val parts = filesUnder(path)(n => n.startsWith("part-") && n.endsWith(".parquet"))
+    assert(parts.nonEmpty)
+    parts.foreach(f => java.nio.file.Files.write(f, "not parquet".getBytes))
+    val hit = cache.get("spark and data")
+    assert(hit.isDefined)
+    intercept[org.apache.spark.SparkException](hit.get.collect())
+  }
+
+  test("query cache: an empty result is cached as an empty entry") {
+    val cache = new QueryCache(spark, newCachePath())
+    assert(cache.searchCached("zzzmissing", index, docs).collect().isEmpty)
+    assert(cache.get("zzzmissing").map(_.count()) == Some(0L))
+    // the repeat is answered by the entry: an index that fails whenever it
+    // is scanned is never read
+    val poisoned = index.filter(raise_error(lit("index scanned")).isNull)
+    assert(cache.searchCached("zzzmissing", poisoned, docs).collect().isEmpty)
+  }
+
+  test("query cache: keys escape like partition values and read as one table") {
+    import spark.implicits._
+    val path = newCachePath()
+    val cache = new QueryCache(spark, path)
+    val queries = Seq("Spark/Data", "a:b and c", "100% (sure)", "x=y or Z", "Mixed Case")
+    val entries = queries.zipWithIndex.map { case (q, i) =>
+      q -> Seq((i.toLong, 1.0 + i), (i + 10L, 0.5)) }
+    for ((q, es) <- entries) cache.put(q, es.toDF("doc_id", "score"))
+    for ((q, es) <- entries) {
+      assert(pairs(cache.get(q).get) == es, s"round trip of '$q'")
+      assert(pairs(cache.get(q.toUpperCase).get) == es, s"upper-case key of '$q'")
+    }
+    // the whole cache is one table partitioned by (qhash, query)
+    val all = spark.read.parquet(path)
+    assert(all.select("query").distinct().as[String].collect().toSet ==
+      queries.map(_.toLowerCase).toSet)
+    assert(all.count() == entries.map(_._2.length).sum)
+    // and its entry directories are the ones Spark's partitioned writer
+    // makes for the same keys
+    val written = newCachePath()
+    entries.map { case (q, es) =>
+      val k = q.toLowerCase
+      es.toDF("doc_id", "score").withColumn("query", lit(k))
+        .withColumn("qhash", lit(math.abs(k.hashCode % 64)))
+    }.reduce(_ unionByName _)
+      .write.partitionBy("qhash", "query").parquet(written)
+    def entryDirs(root: String): Set[String] =
+      filesUnder(root)(_.startsWith("part-")).map(f =>
+        java.nio.file.Paths.get(root).relativize(f.getParent).toString).toSet
+    assert(entryDirs(path) == entryDirs(written))
   }
 
   test("search compiler runs unchanged over a BM25-scored index") {
