@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Benchmark main: runs every SparkEntry query on SPARK_GRAFT_SF_DIR
+/** Benchmark main: runs every registry row on SPARK_GRAFT_SF_DIR
   * (default sf0.1) N times (SPARK_GRAFT_BENCH_RUNS, default 3) and
   * reports the per-query MEDIAN, so round-over-round deltas beat the
   * shared host's 2-4x run-to-run variance.
@@ -30,7 +30,7 @@ import org.apache.spark.sql.SparkSession
   *
   * The top SPARK_GRAFT_BENCH_SOLO (default 10) queries by suite
   * median additionally run SOLO in a fresh session each (cold
-  * SessionCache, same JVM), adding `{first_run, solo_med}` to their
+  * ArtifactStore, same JVM), adding `{first_run, solo_med}` to their
   * detail entries: `first_run` is the standalone cost INCLUDING any
   * session-cache build the suite median hides; suite_med/solo_med ≫ 1
   * flags suite interference rather than a slow query.
@@ -354,7 +354,7 @@ object Bench {
       else spark.read.parquet(embPath.toString).count()
     val skipped =
       if (embeddingRows > cartesianRowBound) scaleGatedBaselines else Set.empty[String]
-    val names = SparkEntry.queries.toSeq.sortBy(_._1)
+    val names = registry.Registry.specs.map(q => q.name -> q.run).sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) && !skipped.contains(n) }
     // INTERLEAVED passes (run the whole suite N times round-robin), not
     // N consecutive runs per query: a sustained host-load window then
@@ -373,7 +373,7 @@ object Bench {
     // (cache-hit medians understate standalone cost), and heavy
     // neighbors inflate light queries (suite interference). Each solo
     // query runs in spark.newSession() — same JVM/context, COLD
-    // SessionCache (keyed by session instance) — recording the true
+    // ArtifactStore (keyed by session instance) — recording the true
     // first-run cost (cache build included) and a warm solo median.
     // Runs AFTER all suite passes, so suite numbers stay comparable
     // round-over-round; solo caches are dropped between queries so

@@ -23,6 +23,18 @@ object Cli {
     s.sparkContext.setLogLevel("ERROR")
     s
   }
+
+  /** The stemmed stop words [[IndexBuild]] persisted next to the index.
+    * No file means the index was built without stop words (IndexBuild
+    * writes none for a count of 0); a file that is present but cannot
+    * be read fails the query rather than silently dropping the list.
+    */
+  private[graft] def stopWords(spark: SparkSession, indexPath: String): Set[String] = {
+    val p = new org.apache.hadoop.fs.Path(s"$indexPath.stopwords")
+    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)) Set.empty
+    else QueryParser.stemmedStopWords(
+      spark.read.parquet(p.toString).collect().map(_.getString(0)).toSeq)
+  }
 }
 
 /** Index build: corpus -> stop words -> TF-IDF posting table, written
@@ -66,10 +78,7 @@ object Search {
     val spark = Cli.session("graft-search")
     val docs = Indexer.documents(spark, sfDir)
     val index = Indexer.readIndex(spark, indexPath)
-    val sw: Set[String] =
-      try QueryParser.stemmedStopWords(
-        spark.read.parquet(s"$indexPath.stopwords").collect().map(_.getString(0)).toSeq)
-      catch { case _: Exception => Set.empty }
+    val sw = Cli.stopWords(spark, indexPath)
 
     val ranked = SearchEngine.search(query, index, docs, sw)
     // Bounded driver memory: the total hit count is an aggregate (no

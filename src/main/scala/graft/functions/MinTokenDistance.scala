@@ -62,7 +62,7 @@ case class MinTokenDistance(left: Expression, right: Expression)
   override def dataType: DataType = IntegerType
 
   /** Nullable even over non-null inputs: an empty position list has no
-    * distance (mirrors [[graft.search.QueryCompiler.minDistanceAbs]]'s
+    * distance (mirrors [[graft.search.PostingAlgebra.minDistanceAbs]]'s
     * None).
     */
   override def nullable: Boolean = true

@@ -40,23 +40,31 @@ object PostingAlgebra {
       Posting(parts(0), parts(1).toDouble, positions)
     }
 
-  /** Minimum token distance between two occurrence lists given as deltas.
-    * The reference walks the gap lists with a skip-ahead two-pointer scan
-    * (`util/QueryParser.java:210-248`); decoding to absolute positions
-    * and taking the true minimum adjacent distance is the equivalent
-    * clean form.
+  /** Exact min token distance between two ABSOLUTE position lists (the
+    * index stores absolute positions; Parquet handles delta encoding).
+    * Two-pointer scan — the clean form of the reference's skip-ahead walk
+    * over gap lists (`util/QueryParser.java:210-248`). This Scala form is
+    * the executable SPEC; the plan uses the codegen'd
+    * [[graft.functions.MinTokenDistance]] expression (equivalence is
+    * property-tested), keeping every phrase-AND inside whole-stage
+    * codegen — no ScalaUDF remains anywhere in the query hot path.
     */
-  def minDistance(deltas1: Vector[Int], deltas2: Vector[Int]): Option[Int] = {
-    if (deltas1.isEmpty || deltas2.isEmpty) return None
-    val a = deltas1.scanLeft(0)(_ + _).tail
-    val b = deltas2.scanLeft(0)(_ + _).tail
+  def minDistanceAbs(a: Seq[Int], b: Seq[Int]): Option[Int] = {
+    if (a == null || b == null || a.isEmpty || b.isEmpty) return None
     var i = 0; var j = 0; var best = Int.MaxValue
     while (i < a.length && j < b.length) {
-      best = math.min(best, math.abs(a(i) - b(j)))
+      val d = math.abs(a(i) - b(j))
+      if (d < best) best = d
       if (a(i) < b(j)) i += 1 else j += 1
     }
     if (best == Int.MaxValue) None else Some(best)
   }
+
+  /** [[minDistanceAbs]] over two occurrence lists given as deltas (the
+    * reference's posting codec), decoded to absolute positions first.
+    */
+  def minDistance(deltas1: Vector[Int], deltas2: Vector[Int]): Option[Int] =
+    minDistanceAbs(deltas1.scanLeft(0)(_ + _).tail, deltas2.scanLeft(0)(_ + _).tail)
 
   /** AND of two posting lists: sort-merge inner join on docId; matched
     * score = `pow(s1*s2, phraseFactor + 1/minDist)` when both sides carry

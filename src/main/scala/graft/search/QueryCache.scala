@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   * write job committed (its `_SUCCESS` marker): a probe is one
   * file-system lookup and a hit reads that one directory, the
   * reference's MapFile point-get (`util/CorpusFetcher.java:47-51`).
-  * Within a session, `SparkEntry`'s persisted index makes recomputation
+  * Within a session, the registry's persisted index makes recomputation
   * cheap; this memo is for the reference-parity cross-process case.
   */
 final class QueryCache(spark: SparkSession, path: String) {

@@ -45,26 +45,6 @@ object QueryCompiler {
     */
   final case class Node(tpe: Int, score: Column, positions: Option[Column], est: Long)
 
-  /** Exact min token distance between two ABSOLUTE position lists (the
-    * index stores absolute positions; Parquet handles delta encoding).
-    * Two-pointer scan — the clean form of the reference's skip-ahead walk
-    * over gap lists (`util/QueryParser.java:210-248`). This Scala form is
-    * the executable SPEC; the plan uses the codegen'd
-    * [[graft.functions.MinTokenDistance]] expression (equivalence is
-    * property-tested), keeping every phrase-AND inside whole-stage
-    * codegen — no ScalaUDF remains anywhere in the query hot path.
-    */
-  private[graft] def minDistanceAbs(a: Seq[Int], b: Seq[Int]): Option[Int] = {
-    if (a == null || b == null || a.isEmpty || b.isEmpty) return None
-    var i = 0; var j = 0; var best = Int.MaxValue
-    while (i < a.length && j < b.length) {
-      val d = math.abs(a(i) - b(j))
-      if (d < best) best = d
-      if (a(i) < b(j)) i += 1 else j += 1
-    }
-    if (best == Int.MaxValue) None else Some(best)
-  }
-
   private val noPostings: Column = lit(null).cast("double")
 
   /** J1: AND = product, proximity-boosted `pow(s1*s2, phraseFactor +

@@ -1,5 +1,7 @@
 package graft.search
 
+import java.util.regex.{Matcher, Pattern}
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -194,15 +196,19 @@ object SearchEngine {
 
   /** F10: wrap each highlight word (and its Capitalized form) in the
     * reference's yellow span (`util/CorpusFetcher.java:121-122,186-190`).
+    * Words are literals: a query word such as `(data` or `a$b` is
+    * quoted, never read as regex or replacement syntax.
     */
   private[graft] def highlightWrap(text: String, highlights: Seq[String]): String = {
     val start = "<span style=\"background-color: #FFFF00\">"
     val end = "</span>"
+    def wrap(s: String, w: String): String =
+      s.replaceAll("\\b" + Pattern.quote(w) + "\\b",
+        Matcher.quoteReplacement(start + w + end))
     var result = text
     for (h <- highlights if h.nonEmpty) {
-      result = result.replaceAll("\\b" + h + "\\b", start + h + end)
-      val cap = h.substring(0, 1).toUpperCase + h.substring(1)
-      result = result.replaceAll("\\b" + cap + "\\b", start + cap + end)
+      result = wrap(result, h)
+      result = wrap(result, h.substring(0, 1).toUpperCase + h.substring(1))
     }
     result
   }

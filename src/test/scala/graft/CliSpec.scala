@@ -1,0 +1,42 @@
+package graft
+
+import java.nio.file.{Files, Path}
+
+import org.apache.spark.sql.SparkSession
+import org.scalatest.funsuite.AnyFunSuite
+
+/** `graft.Search`'s stop-word list: absent means none, present is read,
+  * and a list that is present but unreadable fails loudly.
+  */
+class CliSpec extends AnyFunSuite {
+
+  lazy val spark: SparkSession = SparkSession.builder()
+    .master("local[2]")
+    .appName("graft-test")
+    .config("spark.sql.shuffle.partitions", "2")
+    .config("spark.sql.session.timeZone", "UTC")
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
+
+  private def indexPath(): String =
+    Files.createTempDirectory("graft-cli-spec-").resolve("idx").toString
+
+  test("stop words: no list next to the index means none") {
+    assert(Cli.stopWords(spark, indexPath()) == Set.empty)
+  }
+
+  test("stop words: a present list is read and stemmed") {
+    val idx = indexPath()
+    val s = spark
+    import s.implicits._
+    Seq("the", "running").toDF("word").coalesce(1)
+      .write.parquet(s"$idx.stopwords")
+    assert(Cli.stopWords(spark, idx) == Set("the", "run"))
+  }
+
+  test("stop words: a corrupt list fails instead of reading as none") {
+    val idx = indexPath()
+    Files.write(Path.of(s"$idx.stopwords"), "not parquet".getBytes("UTF-8"))
+    intercept[Exception](Cli.stopWords(spark, idx))
+  }
+}

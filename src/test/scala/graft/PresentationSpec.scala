@@ -59,6 +59,21 @@ class PresentationSpec extends AnyFunSuite {
     assert(!out.contains(span + "sparkle"))
   }
 
+  test("highlight wrap treats query words as literals, not regex") {
+    val span = "<span style=\"background-color: #FFFF00\">"
+    // an unbalanced paren reaches the highlights and must not throw
+    assert(QueryParser.highlightWords("spark or (data").contains("(data"))
+    assert(SearchEngine.highlightWrap("spark or (data", Seq("(data")) ==
+      "spark or (data")
+    // a regex group must not match (and rewrap) the bare word
+    assert(SearchEngine.highlightWrap("big data", Seq("(data)")) == "big data")
+    // $ and \ are literal in both pattern and replacement
+    assert(SearchEngine.highlightWrap("x a$b y", Seq("a$b")) ==
+      "x " + span + "a$b</span> y")
+    assert(SearchEngine.highlightWrap("x a\\b y", Seq("a\\b")) ==
+      "x " + span + "a\\b</span> y")
+  }
+
   test("highlight words: positive literals only, double negation flips") {
     // un-negated words kept, 'not x' dropped
     assert(QueryParser.highlightWords("vanilla and not chocolate") == Vector("vanilla"))

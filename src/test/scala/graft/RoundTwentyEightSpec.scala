@@ -677,7 +677,7 @@ class RoundTwentyEightSpec extends AnyFunSuite {
   test("q_table_optimize_part (the driver entry itself) reads through " +
       "the connector and prunes to (about) the one rewritten file") {
     val df = SparkEntry.queries("q_table_optimize_part")(spark, testdata)
-    val root = SparkEntry.txlogPartRootForSpec(spark, testdata)
+    val root = registry.TableQueries.txlogPartTable(spark, testdata)
     val parts = TxLog.filePartitions(root)
     val live = TxLog.resolve(root).files
     val fr = live.count(f => parts.get(f).exists(_.get("lang")

@@ -230,7 +230,7 @@ class RoundTwentyNineSpec extends AnyFunSuite {
 
   test("the q_table_sql_delete lifecycle's own log shows the pruned " +
       "rewrite: only the fr-overlapping range files left the live set") {
-    val p = SparkEntry.txlogSqlDelRootForSpec(spark, testdata)
+    val p = registry.TableQueries.txlogSqlDelTable(spark, testdata)
     val v0 = TxLog.resolve(p, Some(0L)).files.toSet
     val head = TxLog.resolve(p).files.toSet
     val removed = v0 -- head
@@ -583,7 +583,7 @@ class RoundTwentyNineSpec extends AnyFunSuite {
 
   test("the q_table_sql_update lifecycle's own log shows merge-on-read: " +
       "every seed file still live, the update is mask + appends") {
-    val p = SparkEntry.txlogSqlUpdRootForSpec(spark, testdata)
+    val p = registry.TableQueries.txlogSqlUpdTable(spark, testdata)
     val v0 = TxLog.resolve(p, Some(0L)).files.toSet
     val head = TxLog.resolve(p)
     assert(head.version === 1L)

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.MinTokenDistance
-import graft.search.QueryCompiler
+import graft.search.PostingAlgebra
 
 /** Round-21 surface: the native codegen'd min-token-distance expression
   * that replaced the last ScalaUDF in the query hot path (phrase
@@ -39,7 +39,7 @@ class RoundTwentyOneSpec extends AnyFunSuite {
       (r.getSeq[Int](0), r.getSeq[Int](1),
         if (r.isNullAt(2)) None else Some(r.getInt(2))))
     got.foreach { case (a, b, d) =>
-      assert(d === QueryCompiler.minDistanceAbs(a, b), s"a=$a b=$b")
+      assert(d === PostingAlgebra.minDistanceAbs(a, b), s"a=$a b=$b")
     }
     // the plan must be pure codegen: no ScalaUDF anywhere
     val plan = df.queryExecution.executedPlan.toString
@@ -62,7 +62,7 @@ class RoundTwentyOneSpec extends AnyFunSuite {
     val rnd = new scala.util.Random(7)
     (1 to 300).foreach { _ =>
       val a = sortedPositions(rnd, 10); val b = sortedPositions(rnd, 10)
-      val want: Any = QueryCompiler.minDistanceAbs(a, b).map(Int.box).orNull
+      val want: Any = PostingAlgebra.minDistanceAbs(a, b).map(Int.box).orNull
       assert(evalOf(lit2(a), lit2(b)) === want, s"a=$a b=$b")
     }
   }

@@ -261,7 +261,7 @@ class RoundTwentySevenSpec extends AnyFunSuite {
     assert(df.inputFiles.length === 1,
       s"expected the all-null file pruned, read ${df.inputFiles.length}")
     // the connector path: same pruning from an ordinary IS NOT NULL
-    val root = SparkEntry.txlogNullRootForSpec(spark, testdata)
+    val root = registry.TableQueries.txlogNullTable(spark, testdata)
     val conn = spark.read.format("graft-table").load(root)
       .filter(col("lang_opt").isNotNull)
     assert(filesRead(conn) === 1L)
@@ -276,7 +276,7 @@ class RoundTwentySevenSpec extends AnyFunSuite {
       "prune from the log before listing; rewrite outputs without " +
       "partition metadata are conservatively read") {
     val df = SparkEntry.queries("q_table_partitioned")(spark, testdata)
-    val root = SparkEntry.txlogPartRootForSpec(spark, testdata)
+    val root = registry.TableQueries.txlogPartTable(spark, testdata)
     val parts = TxLog.filePartitions(root)
     val live = TxLog.resolve(root).files
     val en = live.count(f => parts.get(f).exists(_.get("lang").contains("en")))

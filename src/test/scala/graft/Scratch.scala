@@ -1523,7 +1523,7 @@ object Scratch {
                 "not derivable without xxhash64; pair ALGORITHM is property-tested"))
           // q_approx_sketch is NOT pinned here: its median half is real
           // DuckDB SQL (quantile_cont); only the HLL column rides on an
-          // inline VALUES join in SparkEntry.oracleSql.
+          // inline VALUES join in its registry oracle.
           def sqlLit(v: Any): String = v match {
             case null => "NULL"
             case s: String => "'" + s.replace("'", "''") + "'"
