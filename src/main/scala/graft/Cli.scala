@@ -83,15 +83,14 @@ object Search {
     val ranked = SearchEngine.search(query, index, docs, sw)
     // Bounded driver memory: the total hit count is an aggregate (no
     // rows cross the driver) and only the one rendered page is ever
-    // collected — a 100 TB result set cannot OOM the CLI; maxPages just
+    // collected — a 100 TB result set cannot OOM the CLI; MaxPages just
     // caps how deep pagination may reach.
-    val maxPages = sys.env.getOrElse("SPARK_GRAFT_MAX_PAGES", "100").toInt
     val total = ranked.count()
     val totalPagesL = (total + SearchEngine.PageSize - 1) / SearchEngine.PageSize
     val totalPages = math.min(totalPagesL, Int.MaxValue.toLong).toInt
     println(s"$total/$totalPagesL")
-    val pageDf = SearchEngine.page(ranked,
-      math.min(page, math.max(math.min(totalPages, maxPages), 1)))
+    val pageDf = SearchEngine.page(ranked, math.min(page,
+      math.max(math.min(totalPages, SearchEngine.MaxPages), 1)))
     // stored-corpus view: first line is the title (reference convention).
     // Derived directly from the documents table — same page frame the
     // XML path produces (titles are "doc-<id>" by the dump convention),

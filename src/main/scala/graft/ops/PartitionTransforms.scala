@@ -23,7 +23,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * (public docs) re-expressed over the graft commit log.
   *
   * Transform values are encoded as STRINGS chosen so that UTF-16
-  * code-unit order (what [[graft.sources]]' StatsPrune compares in)
+  * code-unit order (what [[StatsPrune]] compares in)
   * equals the transform's natural order:
   *
   *  - `days`/`hours`: fixed-width zero-padded epoch bucket with a
@@ -249,8 +249,13 @@ object PartitionTransforms {
       }
       enc(dt, adjusted)
     }
-    def src(a: Expression): Boolean = a match {
-      case ar: AttributeReference => ar.name == t.source
+    // the literal is encoded by its own type, so it must be the
+    // column's: an analyzed filter always compares like types, a
+    // TxLog read's hand-built one may not (a LONG key list against a
+    // STRING column must not hash as a long)
+    def src(a: Expression, litType: DataType): Boolean = a match {
+      case ar: AttributeReference =>
+        ar.name == t.source && ar.dataType == litType
       case _ => false
     }
     e match {
@@ -261,44 +266,48 @@ object PartitionTransforms {
         }
       case COr(l, r) =>
         for { x <- rewrite(l, t); y <- rewrite(r, t) } yield COr(x, y)
-      case EqualTo(a, l: Literal) if src(a) =>
+      case EqualTo(a, l: Literal) if src(a, l.dataType) =>
         enc(l.dataType, l.value).map(EqualTo(hid, _))
-      case EqualTo(l: Literal, a) if src(a) =>
+      case EqualTo(l: Literal, a) if src(a, l.dataType) =>
         enc(l.dataType, l.value).map(EqualTo(hid, _))
-      case EqualNullSafe(a, l: Literal) if src(a) =>
+      case EqualNullSafe(a, l: Literal) if src(a, l.dataType) =>
         enc(l.dataType, l.value).map(EqualTo(hid, _))
-      case EqualNullSafe(l: Literal, a) if src(a) =>
+      case EqualNullSafe(l: Literal, a) if src(a, l.dataType) =>
         enc(l.dataType, l.value).map(EqualTo(hid, _))
-      case In(a, vs) if src(a) && vs.nonEmpty &&
-          vs.forall(_.isInstanceOf[Literal]) =>
+      case In(a, vs) if vs.nonEmpty &&
+          vs.forall(v => v.isInstanceOf[Literal] && src(a, v.dataType)) =>
         // every member must encode, else the IN admits a value the
         // rewrite would wrongly prune on
         val encoded = vs.map { case l: Literal => enc(l.dataType, l.value) }
         if (encoded.exists(_.isEmpty)) None
         else Some(encoded.flatten
           .map(v => EqualTo(hid, v): Expression).reduce(COr(_, _)))
-      case InSet(a, vs) if src(a) && vs.nonEmpty =>
+      case InSet(a, vs) if src(a, a.dataType) && vs.nonEmpty =>
         val dt = a.dataType
         val encoded = vs.toSeq.map(v => enc(dt, v))
         if (encoded.exists(_.isEmpty)) None
         else Some(encoded.flatten
           .map(v => EqualTo(hid, v): Expression).reduce(COr(_, _)))
-      case GreaterThan(a, l: Literal) if src(a) && monotone(t) =>
+      case GreaterThan(a, l: Literal) if src(a, l.dataType) && monotone(t) =>
         encAdj(l.dataType, l.value, 1L).map(GreaterThanOrEqual(hid, _))
-      case GreaterThanOrEqual(a, l: Literal) if src(a) && monotone(t) =>
+      case GreaterThanOrEqual(a, l: Literal) if src(a, l.dataType) &&
+          monotone(t) =>
         enc(l.dataType, l.value).map(GreaterThanOrEqual(hid, _))
-      case LessThan(a, l: Literal) if src(a) && monotone(t) =>
+      case LessThan(a, l: Literal) if src(a, l.dataType) && monotone(t) =>
         encAdj(l.dataType, l.value, -1L).map(LessThanOrEqual(hid, _))
-      case LessThanOrEqual(a, l: Literal) if src(a) && monotone(t) =>
+      case LessThanOrEqual(a, l: Literal) if src(a, l.dataType) &&
+          monotone(t) =>
         enc(l.dataType, l.value).map(LessThanOrEqual(hid, _))
       // literal-on-the-left range forms, mirrored
-      case GreaterThan(l: Literal, a) if src(a) && monotone(t) =>
+      case GreaterThan(l: Literal, a) if src(a, l.dataType) && monotone(t) =>
         encAdj(l.dataType, l.value, -1L).map(LessThanOrEqual(hid, _))
-      case GreaterThanOrEqual(l: Literal, a) if src(a) && monotone(t) =>
+      case GreaterThanOrEqual(l: Literal, a) if src(a, l.dataType) &&
+          monotone(t) =>
         enc(l.dataType, l.value).map(LessThanOrEqual(hid, _))
-      case LessThan(l: Literal, a) if src(a) && monotone(t) =>
+      case LessThan(l: Literal, a) if src(a, l.dataType) && monotone(t) =>
         encAdj(l.dataType, l.value, 1L).map(GreaterThanOrEqual(hid, _))
-      case LessThanOrEqual(l: Literal, a) if src(a) && monotone(t) =>
+      case LessThanOrEqual(l: Literal, a) if src(a, l.dataType) &&
+          monotone(t) =>
         enc(l.dataType, l.value).map(GreaterThanOrEqual(hid, _))
       case _ => None
     }

@@ -4,6 +4,7 @@ import java.nio.file.{FileAlreadyExistsException, Paths}
 import java.util.UUID
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.{expressions => ex}
 import org.apache.spark.sql.functions._
 
 /** A minimal parquet transaction log — the Delta/Iceberg commit shape
@@ -1566,6 +1567,52 @@ object TxLog {
     rels
   }
 
+  /** The commit-retry loop of every writer that does not derive from a
+    * snapshot (appends, streaming commits, metadata commits): `write`
+    * publishes at the next version after the tip. A lost version race
+    * runs `revalidate` and retries at the advanced tip. The 1000th race
+    * (a pathological conflict stream must not spin forever) or any
+    * other [[IllegalStateException]] (a protocol refusal, a corruption
+    * error — retrying cannot fix it) removes the `staged` files and
+    * fails. `replayed` is checked before each attempt: true drops the
+    * staged files and commits nothing (None).
+    */
+  private def commitAtTip(root: String, op: String, staged: Seq[String],
+                          revalidate: () => Unit = () => (),
+                          replayed: () => Boolean = () => false)(
+      write: Long => Unit): Option[Long] = {
+    def dropStaged(): Unit =
+      staged.foreach(f => io(root).deleteIfExists(s"$root/$f"))
+    var out: Option[Option[Long]] = None
+    var races = 0
+    while (out.isEmpty) {
+      val next = versionsOnDisk(root).lastOption.map(_ + 1).getOrElse(0L)
+      if (replayed()) {
+        dropStaged()
+        out = Some(None)
+      } else
+        try {
+          write(next)
+          out = Some(Some(next))
+        } catch {
+          case e: CommitConflict =>
+            races += 1
+            if (races >= 1000) {
+              dropStaged()
+              throw new IllegalStateException(
+                s"txlog $op at $root lost $races version races; giving up",
+                e)
+            }
+            revalidate()
+          case e: IllegalStateException =>
+            dropStaged()
+            throw e
+        }
+    }
+    out.get.foreach(maybeAutoCheckpoint(root, _))
+    out.get
+  }
+
   /** Append `df` as a new version; returns the committed version.
     *
     * Appends never conflict SEMANTICALLY — two racing writers just
@@ -1580,39 +1627,17 @@ object TxLog {
     val adds = stage(spark, root, df)
     validateStaged(spark, root, adds, "append")
     val meta = parquetMeta(root, adds)
-    var out: Option[Long] = None
-    var races = 0
-    while (out.isEmpty) {
-      val next = versionsOnDisk(root).lastOption.map(_ + 1).getOrElse(0L)
-      try {
-        // merged schema recomputed per attempt: the commit that beat
-        // us may have widened it
-        writeCommit(root, next, adds, Seq.empty, op = "append",
-          knownMeta = Some(meta), knownRowsRemoved = Some(0L),
-          schema = mergedSchemaFor(root, df.schema))
-        out = Some(next)
-      } catch {
-        case e: CommitConflict =>
-          races += 1
-          if (races >= 1000) {
-            adds.foreach(f => io(root).deleteIfExists(s"$root/$f"))
-            throw new IllegalStateException(
-              s"txlog append at $root lost $races version races; giving up", e)
-          }
-          // the commit that beat us may have been set-constraint: the
-          // gate must hold for the version this batch will actually
-          // land at, not the one it was first validated against
-          validateStaged(spark, root, adds, "append")
-        // anything that is NOT the version-race signal (a protocol
-        // refusal, a genuine corruption error) fails immediately —
-        // retrying cannot fix it — and must not leak the staged files
-        case e: IllegalStateException =>
-          adds.foreach(f => io(root).deleteIfExists(s"$root/$f"))
-          throw e
-      }
-    }
-    maybeAutoCheckpoint(root, out.get)
-    out.get
+    // the commit that beat us may have been set-constraint: the gate
+    // must hold for the version this batch will actually land at, not
+    // the one it was first validated against
+    commitAtTip(root, "append", adds,
+        () => validateStaged(spark, root, adds, "append")) { next =>
+      // merged schema recomputed per attempt: the commit that beat us
+      // may have widened it
+      writeCommit(root, next, adds, Seq.empty, op = "append",
+        knownMeta = Some(meta), knownRowsRemoved = Some(0L),
+        schema = mergedSchemaFor(root, df.schema))
+    }.get
   }
 
   /** Append `df` HIVE-PARTITIONED by `partCols`: data files land under
@@ -1649,34 +1674,14 @@ object TxLog {
     val adds = moved.map(_._1)
     validateStaged(spark, root, adds, "partitioned append")
     val meta = parquetMeta(root, adds)
-    var out: Option[Long] = None
-    var races = 0
-    while (out.isEmpty) {
-      val next = versionsOnDisk(root).lastOption.map(_ + 1).getOrElse(0L)
-      try {
+    commitAtTip(root, "partitioned append", adds,
+        () => validateStaged(spark, root, adds, "partitioned append")) {
+      next =>
         writeCommit(root, next, adds, Seq.empty, op = "append",
           knownMeta = Some(meta), knownRowsRemoved = Some(0L),
           parts = moved.toMap, partCols = partCols,
           schema = mergedSchemaFor(root, df.schema))
-        out = Some(next)
-      } catch {
-        case e: CommitConflict =>
-          races += 1
-          if (races >= 1000) {
-            adds.foreach(f => io(root).deleteIfExists(s"$root/$f"))
-            throw new IllegalStateException(
-              s"txlog partitioned append at $root lost $races version " +
-                "races; giving up", e)
-          }
-          validateStaged(spark, root, adds, "partitioned append")
-        // non-race failures surface immediately, staged files cleaned
-        case e: IllegalStateException =>
-          adds.foreach(f => io(root).deleteIfExists(s"$root/$f"))
-          throw e
-      }
-    }
-    maybeAutoCheckpoint(root, out.get)
-    out.get
+    }.get
   }
 
   /** Append `df` partitioned by HIDDEN TRANSFORMS of its own columns
@@ -1759,38 +1764,18 @@ object TxLog {
     val adds = moved.map(_._1)
     validateStaged(spark, root, adds, "transform-partitioned append")
     val meta = parquetMeta(root, adds)
-    var out: Option[Long] = None
-    var races = 0
-    while (out.isEmpty) {
-      val next = versionsOnDisk(root).lastOption.map(_ + 1).getOrElse(0L)
-      try {
-        writeCommit(root, next, adds, Seq.empty, op = "append",
-          knownMeta = Some(meta), knownRowsRemoved = Some(0L),
-          parts = moved.toMap, partCols = ts.map(_.hiddenName),
-          ptspec = declared,
-          // mapping mode from the first transform commit: the
-          // recorded schema is the read authority, the hidden
-          // column invisible on every path
-          schema = mergedSchemaFor(root, df.schema).map(stampPhysical))
-        out = Some(next)
-      } catch {
-        case e: CommitConflict =>
-          races += 1
-          if (races >= 1000) {
-            adds.foreach(f => io(root).deleteIfExists(s"$root/$f"))
-            throw new IllegalStateException(
-              s"txlog transform append at $root lost $races version " +
-                "races; giving up", e)
-          }
-          validateStaged(spark, root, adds,
-            "transform-partitioned append")
-        case e: IllegalStateException =>
-          adds.foreach(f => io(root).deleteIfExists(s"$root/$f"))
-          throw e
-      }
-    }
-    maybeAutoCheckpoint(root, out.get)
-    out.get
+    commitAtTip(root, "transform append", adds,
+        () => validateStaged(spark, root, adds,
+          "transform-partitioned append")) { next =>
+      writeCommit(root, next, adds, Seq.empty, op = "append",
+        knownMeta = Some(meta), knownRowsRemoved = Some(0L),
+        parts = moved.toMap, partCols = ts.map(_.hiddenName),
+        ptspec = declared,
+        // mapping mode from the first transform commit: the recorded
+        // schema is the read authority, the hidden column invisible on
+        // every path
+        schema = mergedSchemaFor(root, df.schema).map(stampPhysical))
+    }.get
   }
 
   /** Stage `df` hive-partitioned by `partCols` under `data/` and
@@ -1898,11 +1883,7 @@ object TxLog {
 
   /** Each file's log-recorded partition values. */
   def filePartitions(root: String): Map[String, Map[String, String]] =
-    filePartitionsOf(indexEntriesAtTip(root))
-
-  private def filePartitionsOf(entries: Seq[LogEntry])
-      : Map[String, Map[String, String]] =
-    mergeOver(entries)(_.parts)
+    mergeOver(indexEntriesAtTip(root))(_.parts)
 
   /** All four skipping indexes — int/string ranges, null counts,
     * partition values — from ONE pass over the commit files. The
@@ -1920,7 +1901,15 @@ object TxLog {
       // files get the checkpoint's own publish time (coarser but
       // monotone). What the listing-free planner reports as
       // `_metadata.file_modification_time` instead of a storage stat
-      mtimes: Map[String, Long] = Map.empty)
+      mtimes: Map[String, Long] = Map.empty) {
+    /** File `f`'s stats in sidecar-row shape (absent = not recorded). */
+    private[graft] def entry(f: String): FileEntry =
+      FileEntry(f, rows = nulls.get(f).map(_._1), bytes = sizes.get(f),
+        int = int.getOrElse(f, Map.empty),
+        str = str.getOrElse(f, Map.empty),
+        nulls = nulls.get(f).map(_._2).getOrElse(Map.empty),
+        parts = parts.getOrElse(f, Map.empty))
+  }
 
   /** All four indexes at `version` (the tip when None), replayed from
     * checkpoint + suffix like [[resolve]] — O(checkpoint interval)
@@ -1931,16 +1920,19 @@ object TxLog {
     */
   def skippingIndex(root: String,
                     version: Option[Long] = None): SkippingIndex = {
-    val entries = version match {
+    indexOf(version match {
       case Some(v) => indexEntries(root, v)
       case None => indexEntriesAtTip(root)
-    }
-    SkippingIndex(fileStatsOf(entries), fileStatsStrOf(entries),
-      fileNullStatsOf(entries), filePartitionsOf(entries),
-      mergeOver(entries)(_.sizes),
+    })
+  }
+
+  /** The last-wins fold of `entries`' recorded stats. */
+  private def indexOf(entries: Seq[LogEntry]): SkippingIndex =
+    SkippingIndex(mergeOver(entries)(_.intStats),
+      mergeOver(entries)(_.strStats), mergeOver(entries)(_.nstats),
+      mergeOver(entries)(_.parts), mergeOver(entries)(_.sizes),
       mergeOver(entries)(e =>
         e.adds.iterator.map(_ -> e.sourceMtime).toMap))
-  }
 
   /** Partition-pruned read: the snapshot restricted to the partitions
     * matching every `(column -> value)` pair in `eq`, with whole
@@ -1955,11 +1947,10 @@ object TxLog {
                         eq: Map[String, String],
                         version: Option[Long] = None): DataFrame = {
     require(eq.nonEmpty, "snapshotPartition: empty partition filter")
-    prunedSlice(spark, root, version,
-      view => eq.forall { case (c, v) =>
-        view.parts.get(c).forall(_ == v)
-      },
-      eq.map { case (c, v) => col(c) === lit(v) }.reduce(_ && _))
+    prunedSlice(spark, root, version, eq.toSeq.map { case (c, v) =>
+      val l = ex.Literal(v)
+      ex.EqualTo(statsAttr(root, c, version, l.dataType), l)
+    }, eq.map { case (c, v) => col(c) === lit(v) }.reduce(_ && _))
   }
 
   /** INSERT OVERWRITE as a commit: `df` becomes the ENTIRE live set in
@@ -2777,7 +2768,7 @@ object TxLog {
     * have no entry — readers treat that as "cannot skip".
     */
   def fileStats(root: String): Map[String, Map[String, (Long, Long)]] =
-    fileStatsOf(indexEntriesAtTip(root))
+    mergeOver(indexEntriesAtTip(root))(_.intStats)
 
   /** Merge per-entry maps, seeding the fold with the FIRST entry's
     * map: that entry is usually the checkpoint carrying ~the whole
@@ -2793,10 +2784,6 @@ object TxLog {
       case _ => Map.empty
     }
 
-  private def fileStatsOf(entries: Seq[LogEntry])
-      : Map[String, Map[String, (Long, Long)]] =
-    mergeOver(entries)(_.intStats)
-
   /** The string half of the skipping index: per live-file, per
     * string-column `[min, max]` as recorded at commit time (values
     * outside the safe grammar were never recorded — those files have
@@ -2804,11 +2791,7 @@ object TxLog {
     */
   def fileStatsStr(root: String)
       : Map[String, Map[String, (String, String)]] =
-    fileStatsStrOf(indexEntriesAtTip(root))
-
-  private def fileStatsStrOf(entries: Seq[LogEntry])
-      : Map[String, Map[String, (String, String)]] =
-    mergeOver(entries)(_.strStats)
+    mergeOver(indexEntriesAtTip(root))(_.strStats)
 
   /** The null half of the skipping index: per live-file `(rows,
     * column -> null count)` as recorded at commit time. Files from
@@ -2816,11 +2799,7 @@ object TxLog {
     * skip".
     */
   def fileNullStats(root: String): Map[String, (Long, Map[String, Long])] =
-    fileNullStatsOf(indexEntriesAtTip(root))
-
-  private def fileNullStatsOf(entries: Seq[LogEntry])
-      : Map[String, (Long, Map[String, Long])] =
-    mergeOver(entries)(_.nstats)
+    mergeOver(indexEntriesAtTip(root))(_.nstats)
 
   /** `IS NULL` / `IS NOT NULL` data skipping: the snapshot restricted
     * to rows where `colName` is (not) null, with files pruned by the
@@ -2833,16 +2812,15 @@ object TxLog {
   def snapshotSliceNull(spark: SparkSession, root: String, colName: String,
                         isNull: Boolean,
                         version: Option[Long] = None): DataFrame = {
-    val phys = physicalOf(root, colName, version)
+    val a = statsAttr(root, colName, version,
+      org.apache.spark.sql.types.NullType)
     prunedSlice(spark, root, version,
-      v => v.rows.forall { rows =>
-        v.nulls.get(phys).forall(n => if (isNull) n > 0 else n < rows)
-      },
+      Seq(if (isNull) ex.IsNull(a) else ex.IsNotNull(a)),
       if (isNull) col(colName).isNull else col(colName).isNotNull)
   }
 
   /** The shared prune-read-mask-filter pipeline of the slice reads:
-    * files `admits` rejects are never listed or opened, the survivors
+    * files `prune` rejects are never listed or opened, the survivors
     * are read under the snapshot's DV masks, and `in` re-applies the
     * exact predicate (pruning is an optimization, not the filter).
     * Candidate discovery goes through [[candidatesWhere]], so past
@@ -2856,23 +2834,21 @@ object TxLog {
     */
   private def prunedSlice(spark: SparkSession, root: String,
                           version: Option[Long],
-                          admits: FileStatsView => Boolean,
+                          prune: Seq[ex.Expression],
                           in: org.apache.spark.sql.Column): DataFrame = {
     val pruned =
       prunedPlanInfo(root, version, pruneThresholdOf(spark))
         .filter(pi => tableSchema(root, Some(pi.version)).isDefined)
-    val (snapV, dvFiles, keepFiles) = pruned match {
-      case Some(pi) =>
-        val snap = Snapshot(pi.version, Seq.empty, pi.dvFiles)
-        (pi.version, pi.dvFiles,
-          candidatesWhere(spark, root, snap)(admits))
+    val (snapV, dvFiles, src) = pruned match {
+      case Some(pi) => (pi.version, pi.dvFiles,
+        new SidecarStats(root, pi, suffixStateOf(pi.suffix)))
       case None =>
         val snap = resolve(root, version)
         require(snap.files.nonEmpty,
           s"version ${snap.version} of $root has no live files")
-        (snap.version, snap.dvFiles,
-          candidatesWhere(spark, root, snap)(admits))
+        (snap.version, snap.dvFiles, statsSource(spark, root, snap))
     }
+    val keepFiles = candidatesWhere(src, prune).map(_.path)
     if (keepFiles.isEmpty) {
       if (pruned.isEmpty)
         snapshotImpl(spark, root, version, guard = false)
@@ -2902,10 +2878,8 @@ object TxLog {
   def snapshotSliceStr(spark: SparkSession, root: String, colName: String,
                        lo: String, hi: String,
                        version: Option[Long] = None): DataFrame = {
-    val phys = physicalOf(root, colName, version)
     prunedSlice(spark, root, version,
-      v => v.str.get(phys)
-        .forall { case (mn, mx) => mx >= lo && mn <= hi },
+      rangeOf(root, colName, version, ex.Literal(lo), ex.Literal(hi)),
       col(colName) >= lo && col(colName) <= hi)
   }
 
@@ -2922,11 +2896,17 @@ object TxLog {
   def snapshotSlice(spark: SparkSession, root: String, colName: String,
                     lo: Long, hi: Long,
                     version: Option[Long] = None): DataFrame = {
-    val phys = physicalOf(root, colName, version)
     prunedSlice(spark, root, version,
-      v => v.int.get(phys)
-        .forall { case (mn, mx) => mx >= lo && mn <= hi },
+      rangeOf(root, colName, version, ex.Literal(lo), ex.Literal(hi)),
       col(colName) >= lo && col(colName) <= hi)
+  }
+
+  /** `lo <= colName <= hi` as a skipping predicate. */
+  private def rangeOf(root: String, colName: String,
+                      version: Option[Long], lo: ex.Literal,
+                      hi: ex.Literal): Seq[ex.Expression] = {
+    val a = statsAttr(root, colName, version, lo.dataType)
+    Seq(ex.GreaterThanOrEqual(a, lo), ex.LessThanOrEqual(a, hi))
   }
 
   /** Stream-source batch ids already committed to the log: the
@@ -2977,41 +2957,14 @@ object TxLog {
     // (which now includes the racing commit) and either bail out as a
     // replay or retry at the advanced version — re-validating first,
     // since the winning commit may have been set-constraint
-    var out: Option[Option[Long]] = None
-    var races = 0
-    while (out.isEmpty) {
-      val next = versionsOnDisk(root).lastOption.map(_ + 1).getOrElse(0L)
-      if (committedBatchIds(root).contains(batchId)) {
-        adds.foreach(f => io(root).deleteIfExists(s"$root/$f"))
-        out = Some(None)
-      } else
-        try {
-          writeCommit(root, next, adds, Seq.empty, op = "streaming-append",
-            batchId = Some(batchId), knownMeta = Some(meta),
-            knownRowsRemoved = Some(0L),
-            schema = mergedSchemaFor(root, batch.schema))
-          out = Some(Some(next))
-        } catch {
-          case e: CommitConflict =>
-            races += 1
-            // same bail-out as append: a pathological conflict stream
-            // must not spin this loop (and re-run validateStaged)
-            // forever
-            if (races >= 1000) {
-              adds.foreach(f => io(root).deleteIfExists(s"$root/$f"))
-              throw new IllegalStateException(
-                s"txlog streaming commit at $root lost $races version " +
-                  "races; giving up", e)
-            }
-            validateStaged(spark, root, adds, "streaming commit")
-          // non-race failures surface immediately, staged cleaned
-          case e: IllegalStateException =>
-            adds.foreach(f => io(root).deleteIfExists(s"$root/$f"))
-            throw e
-        }
+    commitAtTip(root, "streaming commit", adds,
+        () => validateStaged(spark, root, adds, "streaming commit"),
+        () => committedBatchIds(root).contains(batchId)) { next =>
+      writeCommit(root, next, adds, Seq.empty, op = "streaming-append",
+        batchId = Some(batchId), knownMeta = Some(meta),
+        knownRowsRemoved = Some(0L),
+        schema = mergedSchemaFor(root, batch.schema))
     }
-    out.get.foreach(maybeAutoCheckpoint(root, _))
-    out.get
   }
 
   /** Continuous ingestion INTO the log: every micro-batch becomes an
@@ -3873,32 +3826,18 @@ object TxLog {
       else lit(null).cast(f.dataType).as(f.name)
     }: _*)
 
-  /** Publish a data-free metadata commit, retrying version races like
-    * [[append]] does.
-    */
+  /** Publish a data-free metadata commit through [[commitAtTip]]. */
   private def commitMetadata(root: String, fields: () => String,
                              op: String,
                              onConflict: () => Unit = () => ()): Long = {
-    checkProtocolWrite(root)
-    var out: Option[Long] = None
-    var races = 0
-    while (out.isEmpty) {
-      val next = versionsOnDisk(root).lastOption.map(_ + 1).getOrElse(0L)
-      try {
-        publishCommit(root, next,
-          s"""{"v":$next,"op":"$op","adds":[],"removes":[],""" +
-            s""""rows":0,"rowsRemoved":0,${fields()}}""")
-        out = Some(next)
-      } catch {
-        case e: CommitConflict =>
-          races += 1
-          if (races >= 1000) throw new IllegalStateException(
-            s"txlog $op at $root lost $races version races; giving up", e)
-          onConflict()
-      }
-    }
-    maybeAutoCheckpoint(root, out.get)
-    out.get
+    commitAtTip(root, op, Seq.empty, onConflict) { next =>
+      // per attempt: the commit that beat us may have raised the
+      // writer protocol
+      checkProtocolWrite(root)
+      publishCommit(root, next,
+        s"""{"v":$next,"op":"$op","adds":[],"removes":[],""" +
+          s""""rows":0,"rowsRemoved":0,${fields()}}""")
+    }.get
   }
 
   /** Rows failing a CHECK expression — false OR NULL both violate. */
@@ -4065,8 +4004,7 @@ object TxLog {
               false
             }
             sfx.live.foreach { f =>
-              val fe = entryFromMaps(f, sfx.int, sfx.str, sfx.nulls,
-                sfx.parts, sfx.sizes)
+              val fe = sfx.idx.entry(f)
               write(fe); nf += 1; nb += fe.bytes.getOrElse(0L)
             }
           }
@@ -4389,20 +4327,6 @@ object TxLog {
     * full (map-built) checkpoint path and the suffix half of the
     * incremental path.
     */
-  private def entryFromMaps(f: String,
-      int: Map[String, Map[String, (Long, Long)]],
-      str: Map[String, Map[String, (String, String)]],
-      nulls: Map[String, (Long, Map[String, Long])],
-      parts: Map[String, Map[String, String]],
-      sizes: Map[String, Long]): FileEntry =
-    FileEntry(f,
-      rows = nulls.get(f).map(_._1),
-      bytes = sizes.get(f),
-      int = int.getOrElse(f, Map.empty),
-      str = str.getOrElse(f, Map.empty),
-      nulls = nulls.get(f).map(_._2).getOrElse(Map.empty),
-      parts = parts.getOrElse(f, Map.empty))
-
   private[graft] def writeCheckpointSidecar(
       root: String, v: Long, files: Seq[String],
       int: Map[String, Map[String, (Long, Long)]],
@@ -4420,7 +4344,8 @@ object TxLog {
       // range query then touches a contiguous run of row groups
       // instead of every group holding one matching row.
       val firstInt = syn.cols.collectFirst { case (p, true) => p }
-      files.map(f => entryFromMaps(f, int, str, nulls, parts, sizes))
+      val idx = SkippingIndex(int, str, nulls, parts, sizes)
+      files.map(idx.entry)
         .sortBy { fe =>
           (sortPartCols.map(c => fe.parts.getOrElse(c, ""))
             .mkString("\u0000"),
@@ -4621,12 +4546,7 @@ object TxLog {
   private[graft] final case class SuffixState(
       touched: Map[String, Boolean],
       live: Seq[String],
-      int: Map[String, Map[String, (Long, Long)]],
-      str: Map[String, Map[String, (String, String)]],
-      nulls: Map[String, (Long, Map[String, Long])],
-      parts: Map[String, Map[String, String]],
-      sizes: Map[String, Long],
-      mtimes: Map[String, Long])
+      idx: SkippingIndex)
 
   private[graft] def suffixStateOf(suffix: Seq[LogEntry]): SuffixState = {
     val touched =
@@ -4636,80 +4556,111 @@ object TxLog {
       e.removes.foreach { r => touched(r) = false; live -= r }
       e.adds.foreach { a => touched(a) = true; live += a }
     }
-    def m[V](of: LogEntry => Map[String, V]): Map[String, V] =
-      suffix.foldLeft(Map.empty[String, V])((acc, e) => acc ++ of(e))
-    SuffixState(touched.toMap, live.toSeq,
-      m(_.intStats), m(_.strStats), m(_.nstats), m(_.parts),
-      m(_.sizes),
-      m(e => e.adds.iterator.map(_ -> e.sourceMtime).toMap))
+    SuffixState(touched.toMap, live.toSeq, indexOf(suffix))
   }
-
-  /** One live file's recorded planning stats, source-independent —
-    * the predicate surface [[candidatesWhere]] evaluates. Empty maps
-    * / None = not recorded = cannot skip (predicates must be
-    * conservative under absence, and every built-in one is).
-    */
-  private[graft] final case class FileStatsView(
-      int: Map[String, (Long, Long)],
-      str: Map[String, (String, String)],
-      rows: Option[Long],
-      nulls: Map[String, Long],
-      parts: Map[String, String])
 
   private def pruneThresholdOf(spark: SparkSession): Long =
     spark.conf.getOption("spark.graft.plan.pruneFileThreshold")
       .map(_.toLong).getOrElse(100000L)
 
-  /** The live files `admits` keeps, evaluated over each file's
-    * recorded stats: past the prune threshold the test STREAMS the
-    * checkpoint sidecar — only the admitted files' paths materialize
-    * on the driver, never a full stats map — with the suffix's own
-    * files tested from their commit-recorded stats; smaller tables
-    * filter the eager cached index. Every log-stats candidate
-    * pre-prune (keyed deletes, the slice reads, partition reads)
-    * shares this one path.
+  /** Where a candidate walk reads the recorded stats of `root` at
+    * `version`: the eager [[SkippingIndex]] over a resolved live set,
+    * or a pruned plan's checkpoint sidecar (streamed, never
+    * materialized) plus the post-checkpoint suffix. The column mapping
+    * and the transform spec the walk applies resolve once per source.
     */
-  private[graft] def candidatesWhere(spark: SparkSession, root: String,
-                                     snap: Snapshot)(
-      admits: FileStatsView => Boolean): Seq[String] =
-    prunedPlanInfo(root, Some(snap.version), pruneThresholdOf(spark))
-      match {
-        case Some(pi) =>
-          val sfx = suffixStateOf(pi.suffix)
-          def ofSuffix(f: String): FileStatsView = FileStatsView(
-            sfx.int.getOrElse(f, Map.empty),
-            sfx.str.getOrElse(f, Map.empty),
-            sfx.nulls.get(f).map(_._1),
-            sfx.nulls.get(f).map(_._2).getOrElse(Map.empty),
-            sfx.parts.getOrElse(f, Map.empty))
-          val base = scanCheckpointSidecar(root, pi.cp) { fe =>
-            !sfx.touched.contains(fe.path) && admits(FileStatsView(
-              fe.int, fe.str, fe.rows, fe.nulls, fe.parts))
-          }.map(_.path)
-          base ++ sfx.live.filter(f => admits(ofSuffix(f)))
-        case None =>
-          val idx = skippingIndex(root, Some(snap.version))
-          def of(f: String): FileStatsView = FileStatsView(
-            idx.int.getOrElse(f, Map.empty),
-            idx.str.getOrElse(f, Map.empty),
-            idx.nulls.get(f).map(_._1),
-            idx.nulls.get(f).map(_._2).getOrElse(Map.empty),
-            idx.parts.getOrElse(f, Map.empty))
-          snap.files.filter(f => admits(of(f)))
-      }
+  private[graft] sealed abstract class StatsSource(val root: String,
+                                                   val version: Long) {
+    private[TxLog] lazy val colMap = columnMappingAt(root, Some(version))
+    private[TxLog] lazy val ptspec =
+      partitionTransforms(root, Some(version))
+  }
+  private[graft] final class IndexStats(root: String, version: Long,
+      val files: Seq[String], val idx: SkippingIndex)
+      extends StatsSource(root, version)
+  private[graft] final class SidecarStats(root: String,
+      val pi: PrunedPlanInfo, val sfx: SuffixState)
+      extends StatsSource(root, pi.version)
+
+  /** The source a TxLog read of `snap` walks: the streamed sidecar past
+    * the prune threshold, the eager index below it.
+    */
+  private[graft] def statsSource(spark: SparkSession, root: String,
+                                 snap: Snapshot): StatsSource =
+    prunedPlanInfo(root, Some(snap.version), pruneThresholdOf(spark)) match {
+      case Some(pi) => new SidecarStats(root, pi, suffixStateOf(pi.suffix))
+      case None => new IndexStats(root, snap.version, snap.files,
+        skippingIndex(root, Some(snap.version)))
+    }
+
+  /** A live file the walk kept, with what listing-free planning needs:
+    * its log-recorded size (None = list it) and modification-time
+    * approximation (the adding commit's or checkpoint's publish time).
+    */
+  private[graft] final case class Candidate(path: String,
+                                            bytes: Option[Long],
+                                            mtime: Long)
+
+  /** The live files of `src` whose recorded stats admit every one of
+    * `filters` ([[StatsPrune.mayMatch]]) — the one file-skipping walk of
+    * the TxLog reads (slices, partition reads, keyed-delete discovery)
+    * and of both `graft-table` file indexes. Filters name LOGICAL
+    * columns; the walk maps them to the physical names the stats are
+    * keyed by, and adds the predicates they imply on hidden partition
+    * columns ([[PartitionTransforms.expand]]). Over a sidecar only the
+    * admitted files' entries materialize on the driver; `pushdown` also
+    * pushes the filters into the sidecar's parquet read
+    * ([[SidecarPushdown]]), skipping whole row groups.
+    */
+  private[graft] def candidatesWhere(src: StatsSource,
+      filters: Seq[ex.Expression],
+      pushdown: Boolean = false): Seq[Candidate] = {
+    val phys = (c: String) => src.colMap.getOrElse(c, c)
+    val all = filters ++ PartitionTransforms.expand(filters, src.ptspec)
+    def admits(fe: FileEntry): Boolean =
+      all.forall(StatsPrune.mayMatch(fe, phys, _))
+    def indexed(files: Seq[String], idx: SkippingIndex) =
+      files.map(idx.entry).filter(admits).map(fe =>
+        Candidate(fe.path, fe.bytes, idx.mtimes.getOrElse(fe.path, 0L)))
+    src match {
+      case s: IndexStats => indexed(s.files, s.idx)
+      case s: SidecarStats =>
+        val pd =
+          if (pushdown) SidecarPushdown.translate(all, phys,
+            sidecarSynopsisAt(src.root, s.pi.cp))
+          else None
+        // paths the suffix touched are skipped in the sidecar: their
+        // final state, stats included, is the suffix's to declare
+        scanCheckpointSidecar(src.root, s.pi.cp, pd) { fe =>
+          !s.sfx.touched.contains(fe.path) && admits(fe)
+        }.map(fe => Candidate(fe.path, fe.bytes, s.pi.cpMtime)) ++
+          indexed(s.sfx.live, s.sfx.idx)
+    }
+  }
+
+  /** `c` as an attribute of a TxLog read's skipping predicate: typed as
+    * the recorded column when the log has a schema, else as the
+    * predicate's literal (hand-built logs record none). A transform
+    * rewrite only applies where the two types agree.
+    */
+  private def statsAttr(root: String, c: String, version: Option[Long],
+                        litType: org.apache.spark.sql.types.DataType)
+      : ex.AttributeReference =
+    ex.AttributeReference(c,
+      tableSchema(root, version).flatMap(_.find(_.name == c))
+        .map(_.dataType).getOrElse(litType))()
 
   /** Candidate files for an INT-key hit discovery (`deleteWhere` /
-    * `deleteWhereDv`): files whose recorded `[min, max]` admits at
-    * least one key, stat-less files conservatively kept.
+    * `deleteWhereDv`): the files `keyCol IN keys` may match, stat-less
+    * files conservatively kept.
     */
   private[graft] def keyCandidates(spark: SparkSession, root: String,
                                    snap: Snapshot, keyCol: String,
                                    keys: Seq[Long]): Seq[String] = {
-    val phys = physicalOf(root, keyCol, Some(snap.version))
-    candidatesWhere(spark, root, snap)(v =>
-      v.int.get(phys).forall { case (mn, mx) =>
-        keys.exists(k => k >= mn && k <= mx)
-      })
+    val key = statsAttr(root, keyCol, Some(snap.version),
+      org.apache.spark.sql.types.LongType)
+    candidatesWhere(statsSource(spark, root, snap),
+      Seq(ex.In(key, keys.map(ex.Literal(_))))).map(_.path)
   }
 
   private[graft] def readCheckpointSidecar(root: String, v: Long): SidecarData = {
@@ -4835,5 +4786,251 @@ object TxLog {
       io(root).deleteIfExists(checkpointSidecarPath(root, c))
     }
     doomed.size
+  }
+}
+
+/** The one skipping predicate of the table layer: could a file with
+  * the given recorded stats (a [[TxLog.FileEntry]], whatever its
+  * source) hold a row satisfying `filter`? Unknown shapes and
+  * stat-less columns answer true (read it) — pruning is an
+  * optimization, never the filter. TxLog's reads and both
+  * `graft-table` file indexes evaluate it through
+  * [[TxLog.candidatesWhere]].
+  */
+private[graft] object StatsPrune {
+  import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, Cast, EqualNullSafe, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, InSet, IsNotNull, IsNull, LessThan, LessThanOrEqual, Literal, Or, StartsWith}
+  import org.apache.spark.sql.types.LongType
+  import org.apache.spark.unsafe.types.UTF8String
+
+  /** The column a comparison operand names: an attribute, or one under
+    * a cast that only widens (order is preserved against the recorded
+    * longs); anything else is conservatively opaque.
+    */
+  private[ops] def attrOf(e: Expression): Option[String] = e match {
+    case a: AttributeReference => Some(a.name)
+    case Cast(a: AttributeReference, LongType, _, _) => Some(a.name)
+    case _ => None
+  }
+
+  private[ops] def litLong(l: Literal): Option[Long] = l.value match {
+    case null => None
+    case x: java.lang.Long => Some(x)
+    case x: java.lang.Integer => Some(x.toLong)
+    case x: java.lang.Short => Some(x.toLong)
+    case _ => None
+  }
+
+  /** `fe`'s stats are keyed by PHYSICAL column name; `filter` names
+    * LOGICAL columns, mapped through `phys`. Absent stats cannot skip.
+    */
+  def mayMatch(fe: TxLog.FileEntry, phys: String => String,
+               filter: Expression): Boolean = {
+    def intRange(c: String): Option[(Long, Long)] = fe.int.get(phys(c))
+    // partition values count as point ranges
+    def strRange(c: String): Option[(String, String)] =
+      fe.str.get(phys(c)).orElse(fe.parts.get(phys(c)).map(v => (v, v)))
+    // (row count, null count) when both are recorded
+    def nullCount(c: String): Option[(Long, Long)] =
+      for { r <- fe.rows; n <- fe.nulls.get(phys(c)) } yield (r, n)
+    def litStr(l: Literal): Option[String] = l.value match {
+      case x: UTF8String => Some(x.toString)
+      case _ => None
+    }
+    // can a value cmp v hold for some value in the recorded range?
+    def cmp(attr: Expression, lit: Literal,
+            intOk: ((Long, Long), Long) => Boolean,
+            strOk: ((String, String), String) => Boolean): Boolean =
+      attrOf(attr).forall { c =>
+        val byInt = litLong(lit)
+          .forall(x => intRange(c).forall(r => intOk(r, x)))
+        val byStr = litStr(lit)
+          .forall(x => strRange(c).forall(r => strOk(r, x)))
+        byInt && byStr
+      }
+    def rec(filter: Expression): Boolean = filter match {
+      case And(l, r) => rec(l) && rec(r)
+      case Or(l, r) => rec(l) || rec(r)
+      case EqualTo(a, l: Literal) =>
+        cmp(a, l, { case ((mn, mx), x) => x >= mn && x <= mx },
+          { case ((mn, mx), x) => x >= mn && x <= mx })
+      case EqualTo(l: Literal, a) => rec(EqualTo(a, l))
+      case EqualNullSafe(a, l: Literal) => rec(EqualTo(a, l))
+      case EqualNullSafe(l: Literal, a) => rec(EqualTo(a, l))
+      case GreaterThan(a, l: Literal) =>
+        cmp(a, l, { case ((_, mx), x) => mx > x },
+          { case ((_, mx), x) => mx > x })
+      case GreaterThan(l: Literal, a) => rec(LessThan(a, l))
+      case GreaterThanOrEqual(a, l: Literal) =>
+        cmp(a, l, { case ((_, mx), x) => mx >= x },
+          { case ((_, mx), x) => mx >= x })
+      case GreaterThanOrEqual(l: Literal, a) =>
+        rec(LessThanOrEqual(a, l))
+      case LessThan(a, l: Literal) =>
+        cmp(a, l, { case ((mn, _), x) => mn < x },
+          { case ((mn, _), x) => mn < x })
+      case LessThan(l: Literal, a) => rec(GreaterThan(a, l))
+      case LessThanOrEqual(a, l: Literal) =>
+        cmp(a, l, { case ((mn, _), x) => mn <= x },
+          { case ((mn, _), x) => mn <= x })
+      case LessThanOrEqual(l: Literal, a) =>
+        rec(GreaterThanOrEqual(a, l))
+      case In(a, vs) if vs.forall(_.isInstanceOf[Literal]) =>
+        vs.exists(x => rec(EqualTo(a, x.asInstanceOf[Literal])))
+      case InSet(a, vs) =>
+        vs.exists(x => rec(EqualTo(a, Literal.create(x, a.dataType))))
+      case StartsWith(a, l: Literal) =>
+        attrOf(a).forall { c =>
+          litStr(l).forall { p =>
+            strRange(c).forall { case (mn, mx) =>
+              // some s in [mn,mx] starts with p  <=>  the range
+              // overlaps [p, p + maxSuffix]
+              mx >= p && mn <= p + "￿"
+            }
+          }
+        }
+      case IsNull(a) =>
+        attrOf(a).forall(c => nullCount(c).forall { case (_, n) => n > 0 })
+      case IsNotNull(a) =>
+        attrOf(a).forall(c =>
+          nullCount(c).forall { case (rows, n) => n < rows })
+      case _ => true
+    }
+    rec(filter)
+  }
+}
+
+/** Catalyst data filters translated to a parquet [[FilterPredicate]]
+  * over the checkpoint sidecar's FLAT synopsis columns — what lets the
+  * pruned planner skip whole sidecar ROW GROUPS instead of decoding
+  * every row per planned query. Strictly CONSERVATIVE relative to
+  * [[StatsPrune.mayMatch]]: anything not safely translatable (unknown
+  * shapes, non-ASCII string literals — parquet compares binary columns
+  * in unsigned BYTE order while StatsPrune compares in UTF-16 code
+  * units, and the two orders agree only when one side is pure ASCII —
+  * StartsWith, null checks) contributes "admit", and a row with no
+  * recorded stats always survives (every leaf carries an IS NULL arm).
+  * StatsPrune remains the authority on every row the filter yields.
+  */
+private[graft] object SidecarPushdown {
+  import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
+  import org.apache.parquet.io.api.Binary
+  import org.apache.spark.sql.catalyst.expressions.{And, EqualNullSafe, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, InSet, LessThan, LessThanOrEqual, Literal, Or}
+  import org.apache.spark.unsafe.types.UTF8String
+  import StatsPrune.{attrOf, litLong}
+
+  def translate(filters: Seq[Expression], phys: String => String,
+                syn: TxLog.SidecarSynopsis)
+      : Option[(FilterPredicate, Set[String])] = {
+    if (filters.isEmpty || syn.cols.isEmpty) return None
+    val intIdx = syn.cols.zipWithIndex.collect {
+      case ((p, true), i) => p -> i
+    }.toMap
+    val strIdx = syn.cols.zipWithIndex.collect {
+      case ((p, false), i) => p -> i
+    }.toMap
+    val refs = scala.collection.mutable.Set.empty[String]
+    // ASCII literals only (the byte-order caveat above)
+    def litStr(l: Literal): Option[String] = l.value match {
+      case x: UTF8String =>
+        val s = x.toString
+        if (s.forall(_ < 0x80)) Some(s) else None
+      case _ => None
+    }
+    // admit iff stats absent OR the [min,max] range satisfies
+    // (loCond on zi{i}x / hiCond on zi{i}n) — the same shape as
+    // StatsPrune's cmp, expressed against the flat columns
+    def intLeaf(i: Int)(cond: (org.apache.parquet.filter2.predicate
+        .Operators.LongColumn, org.apache.parquet.filter2.predicate
+        .Operators.LongColumn) => FilterPredicate): FilterPredicate = {
+      val (zn, zx) = (FilterApi.longColumn(s"zi${i}n"),
+        FilterApi.longColumn(s"zi${i}x"))
+      refs += s"zi${i}n"; refs += s"zi${i}x"
+      FilterApi.or(FilterApi.eq(zn, null.asInstanceOf[java.lang.Long]),
+        cond(zn, zx))
+    }
+    def strLeaf(i: Int)(cond: (org.apache.parquet.filter2.predicate
+        .Operators.BinaryColumn, org.apache.parquet.filter2.predicate
+        .Operators.BinaryColumn) => FilterPredicate): FilterPredicate = {
+      val (zn, zx) = (FilterApi.binaryColumn(s"zs${i}n"),
+        FilterApi.binaryColumn(s"zs${i}x"))
+      refs += s"zs${i}n"; refs += s"zs${i}x"
+      FilterApi.or(FilterApi.eq(zn, null.asInstanceOf[Binary]),
+        cond(zn, zx))
+    }
+    def both(a: Option[FilterPredicate], b: Option[FilterPredicate])
+        : Option[FilterPredicate] = (a, b) match {
+      case (Some(x), Some(y)) => Some(FilterApi.and(x, y))
+      case (x, y) => x.orElse(y)
+    }
+    // value-vs-range leaves per comparison kind; None = untranslatable
+    // = admit. A numeric literal binds the int synopsis, an ASCII
+    // string literal the string synopsis (mirrors StatsPrune's
+    // byInt/byStr conjunction — at most one applies per literal).
+    def cmpLeaf(attr: Expression, l: Literal,
+                intC: (Long, org.apache.parquet.filter2.predicate
+                  .Operators.LongColumn, org.apache.parquet.filter2
+                  .predicate.Operators.LongColumn) => FilterPredicate,
+                strC: (Binary, org.apache.parquet.filter2.predicate
+                  .Operators.BinaryColumn, org.apache.parquet.filter2
+                  .predicate.Operators.BinaryColumn) => FilterPredicate)
+        : Option[FilterPredicate] =
+      attrOf(attr).flatMap { c =>
+        val p = phys(c)
+        val viaInt = for {
+          x <- litLong(l); i <- intIdx.get(p)
+        } yield intLeaf(i)((zn, zx) => intC(x, zn, zx))
+        val viaStr = for {
+          s <- litStr(l); i <- strIdx.get(p)
+        } yield strLeaf(i)((zn, zx) => strC(Binary.fromString(s), zn, zx))
+        both(viaInt, viaStr)
+      }
+    def jl(x: Long): java.lang.Long = java.lang.Long.valueOf(x)
+    def rec(e: Expression): Option[FilterPredicate] = e match {
+      case And(l, r) => both(rec(l), rec(r))
+      case Or(l, r) =>
+        for { a <- rec(l); b <- rec(r) } yield FilterApi.or(a, b)
+      case EqualTo(a, l: Literal) =>
+        cmpLeaf(a, l,
+          (x, zn, zx) => FilterApi.and(FilterApi.ltEq(zn, jl(x)),
+            FilterApi.gtEq(zx, jl(x))),
+          (b, zn, zx) => FilterApi.and(FilterApi.ltEq(zn, b),
+            FilterApi.gtEq(zx, b)))
+      case EqualTo(l: Literal, a) => rec(EqualTo(a, l))
+      case EqualNullSafe(a, l: Literal) => rec(EqualTo(a, l))
+      case EqualNullSafe(l: Literal, a) => rec(EqualTo(a, l))
+      case GreaterThan(a, l: Literal) =>
+        cmpLeaf(a, l, (x, _, zx) => FilterApi.gt(zx, jl(x)),
+          (b, _, zx) => FilterApi.gt(zx, b))
+      case GreaterThan(l: Literal, a) => rec(LessThan(a, l))
+      case GreaterThanOrEqual(a, l: Literal) =>
+        cmpLeaf(a, l, (x, _, zx) => FilterApi.gtEq(zx, jl(x)),
+          (b, _, zx) => FilterApi.gtEq(zx, b))
+      case GreaterThanOrEqual(l: Literal, a) =>
+        rec(LessThanOrEqual(a, l))
+      case LessThan(a, l: Literal) =>
+        cmpLeaf(a, l, (x, zn, _) => FilterApi.lt(zn, jl(x)),
+          (b, zn, _) => FilterApi.lt(zn, b))
+      case LessThan(l: Literal, a) => rec(GreaterThan(a, l))
+      case LessThanOrEqual(a, l: Literal) =>
+        cmpLeaf(a, l, (x, zn, _) => FilterApi.ltEq(zn, jl(x)),
+          (b, zn, _) => FilterApi.ltEq(zn, b))
+      case LessThanOrEqual(l: Literal, a) =>
+        rec(GreaterThanOrEqual(a, l))
+      case In(a, vs) if vs.nonEmpty && vs.forall(_.isInstanceOf[Literal]) =>
+        vs.map(x => rec(EqualTo(a, x.asInstanceOf[Literal])))
+          .reduce((l, r) => for { x <- l; y <- r }
+            yield FilterApi.or(x, y))
+      case InSet(a, vs) if vs.nonEmpty =>
+        vs.toSeq.map(x =>
+            rec(EqualTo(a, Literal.create(x, a.dataType))))
+          .reduce((l, r) => for { x <- l; y <- r }
+            yield FilterApi.or(x, y))
+      case _ => None
+    }
+    // conjuncts translate independently — an untranslatable one just
+    // drops out (it still applies through StatsPrune and the query's
+    // own row-level filter)
+    filters.flatMap(rec).reduceOption(FilterApi.and)
+      .map(p => (p, refs.toSet))
   }
 }

@@ -19,6 +19,7 @@ import org.apache.spark.sql.functions._
 object SearchEngine {
 
   val PageSize = 10      // util/SearchResult.java:42
+  val MaxPages = 100     // deepest page the CLI renders
   val SnippetRange = 300 // util/CorpusFetcher.java:123
 
   /** Run a CNF query against a posting table, returning

@@ -4,12 +4,11 @@ import org.apache.hadoop.fs.{FileStatus, Path}
 
 import org.apache.spark.sql.{DataFrame, SparkSession, SQLContext}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{And, Attribute, AttributeReference, BoundReference, Cast, EqualNullSafe, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, InSet, IsNotNull, IsNull, LessThan, LessThanOrEqual, Literal, Or, StartsWith, UnsafeProjection}
-import org.apache.spark.sql.execution.datasources.{FileFormat, FileIndex, HadoopFsRelation, PartitionDirectory, PartitionedFile}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, UnsafeProjection}
+import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.sources.BaseRelation
-import org.apache.spark.sql.types.{IntegerType, LongType, ShortType, StringType, StructField, StructType}
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.ops.TxLog
 
@@ -171,22 +170,8 @@ class GraftFileIndex(spark: SparkSession, root: String,
   // at the snapshot's own version — O(checkpoint interval) metadata
   // reads, the same cost resolve pays, however long the log has lived
   private val idx = TxLog.skippingIndex(root, Some(snap.version))
-
-  // logical -> physical: stats/partition values are keyed by the
-  // PHYSICAL column names files store; query filters carry logical
-  // names (empty map = identity on every unmapped table)
-  private val colMap = TxLog.columnMappingAt(root, Some(snap.version))
-  private def phys(c: String): String = colMap.getOrElse(c, c)
-
-  // the hidden partition-transform spec: source-column filters imply
-  // skipping predicates on the hidden partition columns
-  // ([[graft.ops.PartitionTransforms.expand]])
-  private val ptspec =
-    TxLog.partitionTransforms(root, Some(snap.version))
-  private val intStats = idx.int
-  private val strStats = idx.str
-  private val nullStats = idx.nulls
-  private val partVals = idx.parts
+  private val stats = new TxLog.IndexStats(root, snap.version, snap.files,
+    idx)
 
   /** Did this index plan WITHOUT touching storage? True when every
     * live file's size is log-recorded (commits since the size action
@@ -217,22 +202,8 @@ class GraftFileIndex(spark: SparkSession, root: String,
       snap.files.sorted.map(f =>
         f -> new FileStatus(sizes(f), false, 1, 128L << 20,
           mtimes.getOrElse(f, 0L), new Path(s"$root/$f")))
-    } else {
-      val conf = spark.sessionState.newHadoopConf()
-      snap.files.groupBy(f => f.take(f.lastIndexOf('/').max(0)))
-        .toSeq.flatMap { case (dir, files) =>
-          val dirPath = new Path(s"$root/$dir")
-          val listed = dirPath.getFileSystem(conf).listStatus(dirPath)
-            .map(st => st.getPath.getName -> st).toMap
-          files.map { f =>
-            val name = f.substring(f.lastIndexOf('/') + 1)
-            f -> listed.getOrElse(name,
-              throw new IllegalStateException(
-                s"live file $f of $root is missing on storage " +
-                  "(vacuumed concurrently?)"))
-          }
-        }.sortBy(_._1) // deterministic listing order
-    }
+    } else GraftPrunedFileIndex.listBatched(spark, root, snap.files)
+      .sortBy(_._1) // deterministic listing order
 
   override def rootPaths: Seq[Path] = Seq(new Path(root))
 
@@ -248,270 +219,9 @@ class GraftFileIndex(spark: SparkSession, root: String,
   override def listFiles(partitionFilters: Seq[Expression],
                          dataFilters: Seq[Expression])
       : Seq[PartitionDirectory] = {
-    // hidden-transform expansion: a filter on `ts` also prunes on
-    // `_tp_days_ts` through the recorded partition values
-    val filters = dataFilters ++
-      graft.ops.PartitionTransforms.expand(dataFilters, ptspec)
-    val kept = statuses.filter { case (f, _) =>
-      filters.forall(StatsPrune.mayMatch(view(f), _))
-    }
-    Seq(PartitionDirectory(InternalRow.empty, kept.map(_._2).toArray))
-  }
-
-  private def view(file: String): StatsPrune.View = new StatsPrune.View {
-    def intRange(c: String): Option[(Long, Long)] =
-      intStats.get(file).flatMap(_.get(phys(c)))
-    def strRange(c: String): Option[(String, String)] =
-      strStats.get(file).flatMap(_.get(phys(c)))
-        .orElse(partVals.get(file).flatMap(_.get(phys(c)))
-          .map(v => (v, v)))
-    def nulls(c: String): Option[(Long, Long)] =
-      nullStats.get(file).flatMap { case (rows, m) =>
-        m.get(phys(c)).map(n => (rows, n))
-      }
-  }
-}
-
-/** The skipping predicate shared by both file indexes: could a file
-  * with the given recorded stats hold a row satisfying `filter`?
-  * Unknown shapes and stat-less columns answer true (read it) —
-  * pruning is an optimization, never the filter.
-  */
-private[sources] object StatsPrune {
-
-  /** One file's recorded planning stats, however they are stored. */
-  trait View {
-    def intRange(c: String): Option[(Long, Long)]
-    /** String [min,max]; partition values count as point ranges. */
-    def strRange(c: String): Option[(String, String)]
-    /** (row count, null count) when both are recorded. */
-    def nulls(c: String): Option[(Long, Long)]
-  }
-
-  def mayMatch(v: View, filter: Expression): Boolean = {
-    def attrOf(e: Expression): Option[String] = e match {
-      case a: AttributeReference => Some(a.name)
-      // a cast that only widens preserves order against the recorded
-      // longs; anything else is conservatively opaque
-      case Cast(a: AttributeReference, LongType, _, _) => Some(a.name)
-      case _ => None
-    }
-    def litLong(l: Literal): Option[Long] = l.value match {
-      case null => None
-      case x: java.lang.Long => Some(x)
-      case x: java.lang.Integer => Some(x.toLong)
-      case x: java.lang.Short => Some(x.toLong)
-      case _ => None
-    }
-    def litStr(l: Literal): Option[String] = l.value match {
-      case x: UTF8String => Some(x.toString)
-      case _ => None
-    }
-    // can a value cmp v hold for some value in the recorded range?
-    def cmp(attr: Expression, lit: Literal,
-            intOk: ((Long, Long), Long) => Boolean,
-            strOk: ((String, String), String) => Boolean): Boolean =
-      attrOf(attr).forall { c =>
-        val byInt = litLong(lit)
-          .forall(x => v.intRange(c).forall(r => intOk(r, x)))
-        val byStr = litStr(lit)
-          .forall(x => v.strRange(c).forall(r => strOk(r, x)))
-        byInt && byStr
-      }
-    def rec(filter: Expression): Boolean = filter match {
-      case And(l, r) => rec(l) && rec(r)
-      case Or(l, r) => rec(l) || rec(r)
-      case EqualTo(a, l: Literal) =>
-        cmp(a, l, { case ((mn, mx), x) => x >= mn && x <= mx },
-          { case ((mn, mx), x) => x >= mn && x <= mx })
-      case EqualTo(l: Literal, a) => rec(EqualTo(a, l))
-      case EqualNullSafe(a, l: Literal) => rec(EqualTo(a, l))
-      case EqualNullSafe(l: Literal, a) => rec(EqualTo(a, l))
-      case GreaterThan(a, l: Literal) =>
-        cmp(a, l, { case ((_, mx), x) => mx > x },
-          { case ((_, mx), x) => mx > x })
-      case GreaterThan(l: Literal, a) => rec(LessThan(a, l))
-      case GreaterThanOrEqual(a, l: Literal) =>
-        cmp(a, l, { case ((_, mx), x) => mx >= x },
-          { case ((_, mx), x) => mx >= x })
-      case GreaterThanOrEqual(l: Literal, a) =>
-        rec(LessThanOrEqual(a, l))
-      case LessThan(a, l: Literal) =>
-        cmp(a, l, { case ((mn, _), x) => mn < x },
-          { case ((mn, _), x) => mn < x })
-      case LessThan(l: Literal, a) => rec(GreaterThan(a, l))
-      case LessThanOrEqual(a, l: Literal) =>
-        cmp(a, l, { case ((mn, _), x) => mn <= x },
-          { case ((mn, _), x) => mn <= x })
-      case LessThanOrEqual(l: Literal, a) =>
-        rec(GreaterThanOrEqual(a, l))
-      case In(a, vs) if vs.forall(_.isInstanceOf[Literal]) =>
-        vs.exists(x => rec(EqualTo(a, x.asInstanceOf[Literal])))
-      case InSet(a, vs) =>
-        vs.exists(x => rec(EqualTo(a, Literal.create(x, a.dataType))))
-      case StartsWith(a, l: Literal) =>
-        attrOf(a).forall { c =>
-          litStr(l).forall { p =>
-            v.strRange(c).forall { case (mn, mx) =>
-              // some s in [mn,mx] starts with p  <=>  the range
-              // overlaps [p, p + maxSuffix]
-              mx >= p && mn <= p + "￿"
-            }
-          }
-        }
-      case IsNull(a) =>
-        attrOf(a).forall(c => v.nulls(c).forall { case (_, n) => n > 0 })
-      case IsNotNull(a) =>
-        attrOf(a).forall(c =>
-          v.nulls(c).forall { case (rows, n) => n < rows })
-      case _ => true
-    }
-    rec(filter)
-  }
-}
-
-/** Catalyst data filters translated to a parquet [[FilterPredicate]]
-  * over the checkpoint sidecar's FLAT synopsis columns — what lets the
-  * pruned planner skip whole sidecar ROW GROUPS instead of decoding
-  * every row per planned query. Strictly CONSERVATIVE relative to
-  * [[StatsPrune.mayMatch]]: anything not safely translatable (unknown
-  * shapes, non-ASCII string literals — parquet compares binary columns
-  * in unsigned BYTE order while StatsPrune compares in UTF-16 code
-  * units, and the two orders agree only when one side is pure ASCII —
-  * StartsWith, null checks) contributes "admit", and a row with no
-  * recorded stats always survives (every leaf carries an IS NULL arm).
-  * StatsPrune remains the authority on every row the filter yields.
-  */
-private[sources] object SidecarPushdown {
-  import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
-  import org.apache.parquet.io.api.Binary
-
-  def translate(filters: Seq[Expression], phys: String => String,
-                syn: graft.ops.TxLog.SidecarSynopsis)
-      : Option[(FilterPredicate, Set[String])] = {
-    if (filters.isEmpty || syn.cols.isEmpty) return None
-    val intIdx = syn.cols.zipWithIndex.collect {
-      case ((p, true), i) => p -> i
-    }.toMap
-    val strIdx = syn.cols.zipWithIndex.collect {
-      case ((p, false), i) => p -> i
-    }.toMap
-    val refs = scala.collection.mutable.Set.empty[String]
-
-    def attrOf(e: Expression): Option[String] = e match {
-      case a: AttributeReference => Some(a.name)
-      case Cast(a: AttributeReference, LongType, _, _) => Some(a.name)
-      case _ => None
-    }
-    def litLong(l: Literal): Option[Long] = l.value match {
-      case null => None
-      case x: java.lang.Long => Some(x)
-      case x: java.lang.Integer => Some(x.toLong)
-      case x: java.lang.Short => Some(x.toLong)
-      case _ => None
-    }
-    def litStr(l: Literal): Option[String] = l.value match {
-      case x: UTF8String =>
-        val s = x.toString
-        if (s.forall(_ < 0x80)) Some(s) else None
-      case _ => None
-    }
-    // admit iff stats absent OR the [min,max] range satisfies
-    // (loCond on zi{i}x / hiCond on zi{i}n) — the same shape as
-    // StatsPrune's cmp, expressed against the flat columns
-    def intLeaf(i: Int)(cond: (org.apache.parquet.filter2.predicate
-        .Operators.LongColumn, org.apache.parquet.filter2.predicate
-        .Operators.LongColumn) => FilterPredicate): FilterPredicate = {
-      val (zn, zx) = (FilterApi.longColumn(s"zi${i}n"),
-        FilterApi.longColumn(s"zi${i}x"))
-      refs += s"zi${i}n"; refs += s"zi${i}x"
-      FilterApi.or(FilterApi.eq(zn, null.asInstanceOf[java.lang.Long]),
-        cond(zn, zx))
-    }
-    def strLeaf(i: Int)(cond: (org.apache.parquet.filter2.predicate
-        .Operators.BinaryColumn, org.apache.parquet.filter2.predicate
-        .Operators.BinaryColumn) => FilterPredicate): FilterPredicate = {
-      val (zn, zx) = (FilterApi.binaryColumn(s"zs${i}n"),
-        FilterApi.binaryColumn(s"zs${i}x"))
-      refs += s"zs${i}n"; refs += s"zs${i}x"
-      FilterApi.or(FilterApi.eq(zn, null.asInstanceOf[Binary]),
-        cond(zn, zx))
-    }
-    def both(a: Option[FilterPredicate], b: Option[FilterPredicate])
-        : Option[FilterPredicate] = (a, b) match {
-      case (Some(x), Some(y)) => Some(FilterApi.and(x, y))
-      case (x, y) => x.orElse(y)
-    }
-    // value-vs-range leaves per comparison kind; None = untranslatable
-    // = admit. A numeric literal binds the int synopsis, an ASCII
-    // string literal the string synopsis (mirrors StatsPrune's
-    // byInt/byStr conjunction — at most one applies per literal).
-    def cmpLeaf(attr: Expression, l: Literal,
-                intC: (Long, org.apache.parquet.filter2.predicate
-                  .Operators.LongColumn, org.apache.parquet.filter2
-                  .predicate.Operators.LongColumn) => FilterPredicate,
-                strC: (Binary, org.apache.parquet.filter2.predicate
-                  .Operators.BinaryColumn, org.apache.parquet.filter2
-                  .predicate.Operators.BinaryColumn) => FilterPredicate)
-        : Option[FilterPredicate] =
-      attrOf(attr).flatMap { c =>
-        val p = phys(c)
-        val viaInt = for {
-          x <- litLong(l); i <- intIdx.get(p)
-        } yield intLeaf(i)((zn, zx) => intC(x, zn, zx))
-        val viaStr = for {
-          s <- litStr(l); i <- strIdx.get(p)
-        } yield strLeaf(i)((zn, zx) => strC(Binary.fromString(s), zn, zx))
-        both(viaInt, viaStr)
-      }
-    def jl(x: Long): java.lang.Long = java.lang.Long.valueOf(x)
-    def rec(e: Expression): Option[FilterPredicate] = e match {
-      case And(l, r) => both(rec(l), rec(r))
-      case Or(l, r) =>
-        for { a <- rec(l); b <- rec(r) } yield FilterApi.or(a, b)
-      case EqualTo(a, l: Literal) =>
-        cmpLeaf(a, l,
-          (x, zn, zx) => FilterApi.and(FilterApi.ltEq(zn, jl(x)),
-            FilterApi.gtEq(zx, jl(x))),
-          (b, zn, zx) => FilterApi.and(FilterApi.ltEq(zn, b),
-            FilterApi.gtEq(zx, b)))
-      case EqualTo(l: Literal, a) => rec(EqualTo(a, l))
-      case EqualNullSafe(a, l: Literal) => rec(EqualTo(a, l))
-      case EqualNullSafe(l: Literal, a) => rec(EqualTo(a, l))
-      case GreaterThan(a, l: Literal) =>
-        cmpLeaf(a, l, (x, _, zx) => FilterApi.gt(zx, jl(x)),
-          (b, _, zx) => FilterApi.gt(zx, b))
-      case GreaterThan(l: Literal, a) => rec(LessThan(a, l))
-      case GreaterThanOrEqual(a, l: Literal) =>
-        cmpLeaf(a, l, (x, _, zx) => FilterApi.gtEq(zx, jl(x)),
-          (b, _, zx) => FilterApi.gtEq(zx, b))
-      case GreaterThanOrEqual(l: Literal, a) =>
-        rec(LessThanOrEqual(a, l))
-      case LessThan(a, l: Literal) =>
-        cmpLeaf(a, l, (x, zn, _) => FilterApi.lt(zn, jl(x)),
-          (b, zn, _) => FilterApi.lt(zn, b))
-      case LessThan(l: Literal, a) => rec(GreaterThan(a, l))
-      case LessThanOrEqual(a, l: Literal) =>
-        cmpLeaf(a, l, (x, zn, _) => FilterApi.ltEq(zn, jl(x)),
-          (b, zn, _) => FilterApi.ltEq(zn, b))
-      case LessThanOrEqual(l: Literal, a) =>
-        rec(GreaterThanOrEqual(a, l))
-      case In(a, vs) if vs.nonEmpty && vs.forall(_.isInstanceOf[Literal]) =>
-        vs.map(x => rec(EqualTo(a, x.asInstanceOf[Literal])))
-          .reduce((l, r) => for { x <- l; y <- r }
-            yield FilterApi.or(x, y))
-      case InSet(a, vs) if vs.nonEmpty =>
-        vs.toSeq.map(x =>
-            rec(EqualTo(a, Literal.create(x, a.dataType))))
-          .reduce((l, r) => for { x <- l; y <- r }
-            yield FilterApi.or(x, y))
-      case _ => None
-    }
-    // conjuncts translate independently — an untranslatable one just
-    // drops out (it still applies through StatsPrune and the query's
-    // own row-level filter)
-    filters.flatMap(rec).reduceOption(FilterApi.and)
-      .map(p => (p, refs.toSet))
+    val kept = TxLog.candidatesWhere(stats, dataFilters).map(_.path).toSet
+    Seq(PartitionDirectory(InternalRow.empty,
+      statuses.collect { case (f, st) if kept(f) => st }.toArray))
   }
 }
 
@@ -538,42 +248,7 @@ class GraftPrunedFileIndex(spark: SparkSession, root: String,
   // keyed mutation paths): absent = the checkpoint's verdict stands,
   // true = live with suffix stats, false = removed
   private val sfx = TxLog.suffixStateOf(pi.suffix)
-  private def touched: Map[String, Boolean] = sfx.touched
-  private def suffixLive: Seq[String] = sfx.live
-  private def sInt = sfx.int
-  private def sStr = sfx.str
-  private def sNulls = sfx.nulls
-  private def sParts = sfx.parts
-  private def sSizes = sfx.sizes
-  private def sMtimes = sfx.mtimes
-
-  private val colMap = TxLog.columnMappingAt(root, Some(pi.version))
-  private def phys(c: String): String = colMap.getOrElse(c, c)
-
-  private def suffixView(f: String): StatsPrune.View =
-    new StatsPrune.View {
-      def intRange(c: String): Option[(Long, Long)] =
-        sInt.get(f).flatMap(_.get(phys(c)))
-      def strRange(c: String): Option[(String, String)] =
-        sStr.get(f).flatMap(_.get(phys(c)))
-          .orElse(sParts.get(f).flatMap(_.get(phys(c)))
-            .map(x => (x, x)))
-      def nulls(c: String): Option[(Long, Long)] =
-        sNulls.get(f).flatMap { case (rows, m) =>
-          m.get(phys(c)).map(n => (rows, n))
-        }
-    }
-
-  private def feView(fe: TxLog.FileEntry): StatsPrune.View =
-    new StatsPrune.View {
-      def intRange(c: String): Option[(Long, Long)] =
-        fe.int.get(phys(c))
-      def strRange(c: String): Option[(String, String)] =
-        fe.str.get(phys(c)).orElse(fe.parts.get(phys(c))
-          .map(x => (x, x)))
-      def nulls(c: String): Option[(Long, Long)] =
-        for { r <- fe.rows; n <- fe.nulls.get(phys(c)) } yield (r, n)
-    }
+  private val stats = new TxLog.SidecarStats(root, pi, sfx)
 
   override def rootPaths: Seq[Path] = Seq(new Path(root))
 
@@ -590,19 +265,19 @@ class GraftPrunedFileIndex(spark: SparkSession, root: String,
   // never broadcast a table that is too big; the next checkpoint's
   // recorded totals re-tighten it.
   override lazy val sizeInBytes: Long = {
-    val removedB = touched.collect { case (p, false) => p }
-      .map(p => sSizes.getOrElse(p, 0L)).sum
+    val removedB = sfx.touched.collect { case (p, false) => p }
+      .map(p => sfx.idx.sizes.getOrElse(p, 0L)).sum
     TxLog.sidecarTotalBytes(root, pi.cp) - removedB +
-      suffixLive.map(p => sSizes.getOrElse(p, 0L)).sum
+      sfx.live.map(p => sfx.idx.sizes.getOrElse(p, 0L)).sum
   }
 
   override def inputFiles: Array[String] = {
     val out = Array.newBuilder[String]
     TxLog.scanCheckpointSidecar(root, pi.cp) { fe =>
-      if (!touched.contains(fe.path)) out += s"$root/${fe.path}"
+      if (!sfx.touched.contains(fe.path)) out += s"$root/${fe.path}"
       false
     }
-    out ++= suffixLive.map(p => s"$root/$p")
+    out ++= sfx.live.map(p => s"$root/$p")
     out.result()
   }
 
@@ -611,47 +286,21 @@ class GraftPrunedFileIndex(spark: SparkSession, root: String,
   override def listFiles(partitionFilters: Seq[Expression],
                          dataFilters: Seq[Expression])
       : Seq[PartitionDirectory] = {
-    val sized = Seq.newBuilder[FileStatus]
-    val unsized = Seq.newBuilder[String]
-    def emit(path: String, bytes: Option[Long], mtime: Long): Unit =
-      bytes match {
-        case Some(b) => sized += new FileStatus(b, false, 1, 128L << 20,
-          mtime, new Path(s"$root/$path"))
-        case None => unsized += path
-      }
-    // base: stream the sidecar, materializing ONLY survivors — paths
-    // the suffix touched are skipped here (their final state, stats
-    // included, is the suffix's to declare). The query's predicate
-    // ALSO pushes into the parquet read itself ([[SidecarPushdown]]):
+    // base: the sidecar streamed with the query's predicate pushed
+    // into the parquet read itself ([[graft.ops.SidecarPushdown]]):
     // row groups the sidecar's own statistics refute are never
     // decoded, so a selective query over a sorted 10M-row sidecar
-    // costs a footer read plus the matching groups, not a full
-    // row-at-a-time decode per planned query
-    // hidden-transform expansion first: the rewritten partition
-    // predicates prune through BOTH layers — the row-group pushdown
-    // (the synopsis carries partition columns) and the per-row
-    // StatsPrune pass
-    val filters = dataFilters ++ graft.ops.PartitionTransforms
-      .expand(dataFilters,
-        TxLog.partitionTransforms(root, Some(pi.version)))
-    val pd = SidecarPushdown.translate(filters, phys,
-      TxLog.sidecarSynopsisAt(root, pi.cp))
-    TxLog.scanCheckpointSidecar(root, pi.cp, pd) { fe =>
-      !touched.contains(fe.path) &&
-        filters.forall(StatsPrune.mayMatch(feView(fe), _))
-    }.foreach(fe => emit(fe.path, fe.bytes, pi.cpMtime))
-    // suffix-added files (small): same predicate over the commit-
-    // recorded stats
-    suffixLive
-      .filter(p => filters.forall(
-        StatsPrune.mayMatch(suffixView(p), _)))
-      .foreach(p => emit(p, sSizes.get(p), sMtimes.getOrElse(p, 0L)))
+    // costs a footer read plus the matching groups, and only the
+    // survivors materialize; then the suffix-added files
+    val (sized, unsized) = TxLog.candidatesWhere(stats, dataFilters,
+      pushdown = true).partition(_.bytes.isDefined)
     // legacy files without log-recorded sizes: one batched listing
     // per parent directory, never one stat per file
     val fallback = GraftPrunedFileIndex.listBatched(spark, root,
-      unsized.result())
-    Seq(PartitionDirectory(InternalRow.empty,
-      (sized.result() ++ fallback).toArray))
+      unsized.map(_.path)).map(_._2)
+    Seq(PartitionDirectory(InternalRow.empty, (sized.map(c =>
+      new FileStatus(c.bytes.get, false, 1, 128L << 20, c.mtime,
+        new Path(s"$root/${c.path}"))) ++ fallback).toArray))
   }
 }
 
@@ -662,7 +311,7 @@ private[sources] object GraftPrunedFileIndex {
     * concurrent reader.
     */
   def listBatched(spark: SparkSession, root: String,
-                  files: Seq[String]): Seq[FileStatus] =
+                  files: Seq[String]): Seq[(String, FileStatus)] =
     if (files.isEmpty) Seq.empty
     else {
       val conf = spark.sessionState.newHadoopConf()
@@ -673,7 +322,7 @@ private[sources] object GraftPrunedFileIndex {
             .map(st => st.getPath.getName -> st).toMap
           fs.sorted.map { f =>
             val name = f.substring(f.lastIndexOf('/') + 1)
-            listed.getOrElse(name,
+            f -> listed.getOrElse(name,
               throw new IllegalStateException(
                 s"live file $f of $root is missing on storage " +
                   "(vacuumed concurrently?)"))

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SQLContext}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SQLContext}
 import org.apache.spark.sql.execution.streaming.{Offset, Sink, Source}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.StreamingFrame
@@ -167,7 +167,10 @@ object GraftTableSource {
         require(!base.fieldNames.contains(fc),
           s"cdc mode reserves the '$fc' column name, but the table at " +
             s"$root already has one")
-        StructType(base.fields :+ StructField(fc, StringType))
+        // every change row names its kind: non-null, so each batch —
+        // the empty first one included — writes the same schema
+        StructType(base.fields :+ StructField(fc, StringType,
+          nullable = false))
       case None => base
     }
   }
@@ -251,9 +254,10 @@ class GraftTableSource(sqlContext: SQLContext,
           // content at endV IS the change set since before version 0.
           // An empty-at-endV table (e.g. a metadata-only commit like
           // set-constraint at version 0) is a legitimate empty batch,
-          // not an error — align() below projects the source schema
+          // not an error, shaped exactly by the source schema
           case _ if TxLog.resolve(root, Some(endV)).files.isEmpty =>
-            spark.emptyDataFrame
+            spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+              schema)
           case _ =>
             val snap = TxLog.snapshot(spark, root, Some(endV))
             GraftTableSource.feedCol(parameters)

@@ -268,10 +268,13 @@ class RoundThirtyOneSpec extends AnyFunSuite {
     // the generalized candidate surface drives the slice reads the
     // same way: an int-range predicate over the shared view
     TxLog.SidecarScanStats.reset()
-    val sliceCands = TxLog.candidatesWhere(spark, root, snap)(v =>
-      v.int.get("doc_id").forall { case (mn, mx) =>
-        mx >= 700L && mn <= 850L
-      })
+    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, GreaterThanOrEqual, LessThanOrEqual, Literal}
+    import org.apache.spark.sql.types.LongType
+    val docId = AttributeReference("doc_id", LongType)()
+    val sliceCands = TxLog.candidatesWhere(
+      TxLog.statsSource(spark, root, snap),
+      Seq(GreaterThanOrEqual(docId, Literal(700L)),
+        LessThanOrEqual(docId, Literal(850L)))).map(_.path)
     assert(sliceCands.toSet === Set(files(7), files(8)))
     assert(TxLog.SidecarScanStats.entriesRetained.get() === 2L)
   }

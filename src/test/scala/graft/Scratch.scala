@@ -1561,7 +1561,11 @@ object Scratch {
             sb.append("    // " + why + "\n")
             val df = SparkEntry.queries(q)(spark, sfDir)
             val schema = df.schema
-            val rows = df.collect().map(r =>
+            // sorted: collect order is partition order, which the core
+            // count would otherwise leak into the generated file
+            val rows = df.orderBy(schema.fieldNames
+              .map(org.apache.spark.sql.functions.col): _*)
+              .collect().map(r =>
               "(" + schema.indices.map(i => sqlLit(r.get(i))).mkString(", ") + ")")
             val cols = schema.map(f =>
               s"CAST(${f.name} AS ${ddbType(f.dataType)}) AS ${f.name}").mkString(", ")
@@ -1572,8 +1576,9 @@ object Scratch {
             println(s"pinned $q: ${rows.length} rows")
           }
           sb.append("  )\n}\n")
+          // relative to the working directory: the checkout it runs in
           java.nio.file.Files.writeString(
-            java.nio.file.Paths.get("/root/repo/src/main/scala/graft/PinnedOracles.scala"),
+            java.nio.file.Paths.get("src/main/scala/graft/PinnedOracles.scala"),
             sb.toString)
           println("wrote PinnedOracles.scala")
         } else if (n == "idxcodec") {
