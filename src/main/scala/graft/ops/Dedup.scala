@@ -332,72 +332,6 @@ object Dedup {
     (inter, sizesA, sizesB)
   }
 
-  /** MinHash signature: `numHashes` permutation-style hash functions
-    * `h_i(x) = min over shingles of xxhash64(shingle, seed=i)`. Pure
-    * column algebra: the per-document min for every hash function is one
-    * aggregation — `(doc_id, sig ARRAY<BIGINT>)`.
-    */
-  def minHashSignatures(docs: DataFrame, n: Int, numHashes: Int): DataFrame = {
-    val sh = shingles(docs, n)
-    val mins = (0 until numHashes)
-      .map(i => min(xxhash64(col("shingle"), lit(i))).as(s"h$i"))
-    sh.groupBy("doc_id")
-      .agg(mins.head, mins.tail: _*)
-      .select(col("doc_id"),
-        array((0 until numHashes).map(i => col(s"h$i")): _*).as("sig"))
-  }
-
-  /** MinHash signatures via the typed [[MinHashAggregator]]: one
-    * aggregation buffer per doc, each shingle's string hashed once and
-    * mixed per hash function — bit-identical output to
-    * [[minHashSignatures]] (equivalence-tested) with k× less string
-    * hashing. This is the production path; the column form documents
-    * the algebra.
-    */
-  def minHashSignaturesAgg(docs: DataFrame, n: Int, numHashes: Int): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    shingles(docs, n)
-      .select(col("doc_id"), col("shingle")).as[(Long, String)]
-      .groupByKey(_._1)
-      .mapValues(_._2)
-      .agg(new MinHashAggregator(numHashes).toColumn)
-      .toDF("doc_id", "sig")
-  }
-
-  /** MinHash + LSH near-dup candidates: the signature splits into
-    * `bands` bands of `numHashes/bands` rows; documents agreeing on any
-    * full band land in the same bucket (shuffle key = (band, bucketHash))
-    * and become a candidate pair. Estimated Jaccard = fraction of
-    * matching signature components. Returns
-    * `(doc_a, doc_b, est_jaccard)` with est_jaccard >= minJ.
-    */
-  def minHashLsh(docs: DataFrame, n: Int = 3, numHashes: Int = 32,
-                 bands: Int = 8, minJ: Double = 0.5): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val rows = numHashes / bands
-    val sigs = minHashSignaturesAgg(docs, n, numHashes)
-    val banded = sigs.select(col("doc_id"), col("sig"),
-        posexplode(transform(sequence(lit(0), lit(bands - 1)),
-          bnd => xxhash64(concat_ws(",",
-            slice(col("sig"), bnd * rows + 1, lit(rows))), bnd))).as(Seq("band", "bucket")))
-    val l = banded.select(col("band"), col("bucket"),
-      col("doc_id").as("doc_a"), col("sig").as("sig_a"))
-    val r = banded.select(col("band"), col("bucket"),
-      col("doc_id").as("doc_b"), col("sig").as("sig_b"))
-    l.join(r, Seq("band", "bucket"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b"),
-        // positional component match (NOT set intersection: a repeated
-        // min-value inside one signature must not deflate the estimate)
-        (aggregate(zip_with(col("sig_a"), col("sig_b"),
-            (x, y) => when(x === y, 1).otherwise(0)),
-          lit(0), (acc, x) => acc + x).cast("double") /
-          size(col("sig_a"))).as("est_jaccard"))
-      .distinct()
-      .filter(col("est_jaccard") >= minJ)
-  }
-
   /** Per-document shingle set with its canonical 128-bit set digest:
     * `(doc_id, sh, nsh, k)` where `k = md5` of the length-prefixed
     * join of the sorted set (`<len>:<shingle>` per element, netstring
@@ -912,7 +846,7 @@ object Dedup {
   /** Exact embedding near-dup: all pairs with cosine >= minCos by
     * full pairwise comparison — the correctness baseline the LSH variant
     * approximates. O(n^2/2) pairs: fine for re-ranking a pruned bucket
-    * or a small corpus; use [[embeddingNearDup]] at scale.
+    * or a small corpus; use [[embeddingNearDupBanded]] at scale.
     */
   def embeddingNearDupExact(embeddings: DataFrame, minCos: Double): DataFrame = {
     val l = embeddings.select(col("vec_id").as("vec_a"), col("embedding").as("emb_a"))
@@ -1450,20 +1384,5 @@ object Dedup {
       .select("name_a", "name_b").distinct()
       .withColumn("dist", levenshtein(col("name_a"), col("name_b")))
       .filter(col("dist") <= maxDist)
-  }
-
-  def embeddingNearDup(embeddings: DataFrame, minCos: Double = 0.95,
-                       planes: Int = 8): DataFrame = {
-    val sigCol = Similarity.hyperplaneSignature(col("embedding"), planes)
-    val sigs = embeddings.select(col("vec_id"), col("embedding"), sigCol.as("bucket"))
-    val l = sigs.select(col("bucket"), col("vec_id").as("vec_a"),
-      col("embedding").as("emb_a"))
-    val r = sigs.select(col("bucket"), col("vec_id").as("vec_b"),
-      col("embedding").as("emb_b"))
-    l.join(r, Seq("bucket"))
-      .filter(col("vec_a") < col("vec_b"))
-      .select(col("vec_a"), col("vec_b"),
-        Similarity.cosineCol(col("emb_a"), col("emb_b")).as("cosine"))
-      .filter(col("cosine") >= minCos)
   }
 }

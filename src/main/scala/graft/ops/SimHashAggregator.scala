@@ -5,16 +5,6 @@ import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Typed MinHash aggregator: one buffer of `numHashes` running minima,
-  * each input shingle hashed ONCE with xxhash64 and then mixed per hash
-  * function with a cheap hashLong — versus the column formulation
-  * `agg(min(xxhash64(shingle, i)) for i <- 0..k)` which re-hashes the
-  * full string k times.
-  *
-  * Bit-compatible with the column form: Spark's `xxhash64(shingle,
-  * lit(i))` chains child hashes, `hashInt(i, hashUnsafeBytes(shingle,
-  * seed=42))` (the literal is an INT) — exactly what this computes.
-  */
 /** Typed SimHash aggregator: one buffer of 64 bit-vote counters, each
   * shingle hashed once (`xxhash64(shingle)` = hashUnsafeBytes with seed
   * 42, bit-compatible with the column form); `finish` folds the vote
@@ -55,37 +45,4 @@ final class SimHashAggregator
     org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Int]]()
 
   override def outputEncoder: Encoder[Long] = Encoders.scalaLong
-}
-
-final class MinHashAggregator(numHashes: Int)
-    extends Aggregator[String, Array[Long], Array[Long]] {
-
-  override def zero: Array[Long] = Array.fill(numHashes)(Long.MaxValue)
-
-  override def reduce(buf: Array[Long], shingle: String): Array[Long] = {
-    val s = UTF8String.fromString(shingle)
-    val base = XXH64.hashUnsafeBytes(s.getBaseObject, s.getBaseOffset,
-      s.numBytes(), 42L)
-    var i = 0
-    while (i < numHashes) {
-      val h = XXH64.hashInt(i, base)
-      if (h < buf(i)) buf(i) = h
-      i += 1
-    }
-    buf
-  }
-
-  override def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
-    var i = 0
-    while (i < numHashes) { if (b(i) < a(i)) a(i) = b(i); i += 1 }
-    a
-  }
-
-  override def finish(buf: Array[Long]): Array[Long] = buf
-
-  override def bufferEncoder: Encoder[Array[Long]] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
-
-  override def outputEncoder: Encoder[Array[Long]] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
 }

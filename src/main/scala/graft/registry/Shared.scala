@@ -3,6 +3,7 @@ package registry
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ShutdownDelete
 
 import graft.search.Indexer
 
@@ -135,15 +136,19 @@ object Shared {
     ArtifactStore.getOrElseUpdate(s, dir, "cachedRawIndex",
       Indexer.postings(t(s, dir, "documents"), stem = false).persist())
 
-  private[registry] def annTmp(): String =
-    java.nio.file.Files.createTempDirectory("graft-ann-").toString
+  /** A fresh `graft-ann-<n>` temp dir, deleted when the JVM exits. */
+  private[registry] def annTmp(): String = {
+    val d = java.nio.file.Files.createTempDirectory("graft-ann-").toString
+    ShutdownDelete.register(d)
+    d
+  }
 
   /** A session artifact at rest, one per (session, sf dir): `write`
     * fills directory `sub` of a fresh [[annTmp]] dir (a prefix plan
     * fingerprints normalize away) and the store keeps the path as `name`.
     */
-  private[registry] def atRest(s: SparkSession, dir: String, name: String,
-                               sub: String)(write: String => Unit): String =
+  private[graft] def atRest(s: SparkSession, dir: String, name: String,
+                            sub: String)(write: String => Unit): String =
     ArtifactStore.getOrElseUpdate(s, dir, name, {
       val p = s"${annTmp()}/$sub"
       write(p)

@@ -2,7 +2,7 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.{DataFrame, Row}
 
-/** The one `private[sql]` bridge this engine uses.
+/** The `private[sql]` bridge for streaming frames.
   *
   * A V1 streaming [[org.apache.spark.sql.execution.streaming.Source]]'s
   * `getBatch` must return a DataFrame with `isStreaming = true`

@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+
 import graft.search.PostingAlgebra._
 
 /** Property-style tests: the sort-merge set algebra against brute-force

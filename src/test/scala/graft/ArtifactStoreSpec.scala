@@ -1,22 +1,16 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
+import java.io.File
 
-import graft.registry.ArtifactStore
+import org.apache.spark.sql.graft.ShutdownDelete
+
+import graft.registry.{ArtifactStore, Shared}
 
 /** The session artifact store behind the registry: one build per
-  * (session, sf dir, artifact name), and a fresh session starts cold.
+  * (session, sf dir, artifact name), a fresh session starts cold, and
+  * an artifact at rest is deleted when the JVM exits.
   */
-class ArtifactStoreSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ArtifactStoreSpec extends SparkSuite {
 
   private val dir = "artifact-store-spec"
 
@@ -49,5 +43,14 @@ class ArtifactStoreSpec extends AnyFunSuite {
     assert(first ne second)
     assert(ArtifactStore.getOrElseUpdate(fresh, dir, "per-session", new Object) eq second)
     assert(ArtifactStore.getOrElseUpdate(spark, dir, "per-session", new Object) eq first)
+  }
+
+  test("an at-rest artifact's graft-ann dir is registered for deletion at exit") {
+    val p = Shared.atRest(spark, dir, "at-rest", "layout") { p =>
+      assert(new File(p).mkdirs())
+    }
+    val annDir = new File(p).getParentFile
+    assert(annDir.getName.matches("graft-ann-\\w+"))
+    assert(ShutdownDelete.registered(annDir.getPath))
   }
 }

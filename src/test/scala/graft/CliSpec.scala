@@ -2,21 +2,10 @@ package graft
 
 import java.nio.file.{Files, Path}
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
-
 /** `graft.Search`'s stop-word list: absent means none, present is read,
   * and a list that is present but unreadable fails loudly.
   */
-class CliSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CliSpec extends SparkSuite {
 
   private def indexPath(): String =
     Files.createTempDirectory("graft-cli-spec-").resolve("idx").toString

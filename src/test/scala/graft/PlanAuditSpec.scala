@@ -1,11 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.optimizer.{BuildLeft, BuildRight}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
-import org.apache.spark.sql.catalyst.optimizer.{BuildLeft, BuildRight}
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Suite-wide plan regression gate: NO `SparkEntry.queries` entry may
   * plan a CartesianProduct or BroadcastNestedLoopJoin, except the
@@ -33,15 +31,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * tiny. The testdata root follows the Bench/Verify env convention
   * (`SPARK_GRAFT_TESTDATA`, default `/root/testdata`).
   */
-class PlanAuditSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PlanAuditSpec extends SparkSuite {
 
   /** Cartesian by documented contract, not by accident. */
   private val cartesianByContract = Set(

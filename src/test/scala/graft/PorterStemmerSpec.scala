@@ -1,12 +1,14 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+
 import graft.functions.PorterStemmer
 
 /** Vectors from the reference stemmer's own doc examples
   * (`util/Stemmer.java:206-226`) plus classic Porter-paper cases.
   */
 class PorterStemmerSpec extends AnyFunSuite {
+
   val vectors = Seq(
     "caresses" -> "caress",
     "ponies" -> "poni",

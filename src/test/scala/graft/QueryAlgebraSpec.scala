@@ -1,9 +1,10 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.search._
+
 import graft.search.PostingAlgebra._
 import graft.search.QueryAst._
+import graft.search.QueryParser
 
 /** Golden semantics test: the reference's only executable fixture
   * (`util/QueryParser.java:375-388`) plus the parser edge cases called

@@ -1,24 +1,15 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.ops.{Dedup, Maintenance, ScalableRank, Similarity, TextAnalysis}
+import graft.ops.{Dedup, Maintenance, Similarity, TextAnalysis}
 
 /** Round-18 surface: oracle-exact k-means, incremental connected
   * components (merge ≡ rebuild), CCNet perplexity buckets, snapshot
   * diff, and the prefix-sum compaction planner.
   */
-class RoundEighteenSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class RoundEighteenSpec extends SparkSuite {
 
   // ---- kMeansExact ----
 

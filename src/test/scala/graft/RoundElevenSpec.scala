@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.{Graph, ScalableRank, TextAnalysis}
 import graft.search.Scoring
@@ -11,15 +9,7 @@ import graft.search.Scoring
   * classifier inference, DSIR importance weights, hybrid (RRF)
   * retrieval.
   */
-class RoundElevenSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class RoundElevenSpec extends SparkSuite {
 
   // ---- PageRank ----
 

@@ -1,25 +1,15 @@
 package graft
 
 import org.apache.spark.SparkException
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, LongType}
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.{Dedup, Maintenance}
 
 /** Round-15 surface: the type-exact / null-safe mergeCountSum contract
   * and fuzzyPairs' loud hot-bucket + name-length guards.
   */
-class RoundFifteenSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class RoundFifteenSpec extends SparkSuite {
 
   // ---- mergeCountSum: exact types ----
 

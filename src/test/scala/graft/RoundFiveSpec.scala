@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.NfcNormalize
 import graft.ops.{Dedup, TextAnalysis}
@@ -10,15 +8,7 @@ import graft.ops.{Dedup, TextAnalysis}
 /** Round-5 surface: repetition metrics, corpus line dedup, benchmark
   * decontamination, native NFC normalization, grouping sets / pivot.
   */
-class RoundFiveSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class RoundFiveSpec extends SparkSuite {
 
   // ---- repetition metrics ----
 

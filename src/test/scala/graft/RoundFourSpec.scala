@@ -1,27 +1,16 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.{Dedup, TemporalJoins, TextAnalysis}
 
 /** Round-4 surface: as-of join, binned range join, connected-component
   * dedup clusters, PII scrubbing, deterministic hash sampling.
   */
-class RoundFourSpec extends AnyFunSuite {
+class RoundFourSpec extends SparkSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  val sfDir = "/root/testdata/sf0.001"
-
-  lazy val events: DataFrame = graft.sources.Tables.events(spark, sfDir)
+  lazy val events: DataFrame = graft.sources.Tables.events(spark, testdata)
 
   // ---- as-of join ----
 
@@ -159,7 +148,7 @@ class RoundFourSpec extends AnyFunSuite {
       .toSet
     val dir = java.nio.file.Files.createTempDirectory("graft-rj-stream-").toString
     java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$sfDir/events.parquet"),
+      java.nio.file.Paths.get(s"$testdata/events.parquet"),
       java.nio.file.Paths.get(dir, "events.parquet"))
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val schema = spark.read.parquet(dir).schema
@@ -205,7 +194,7 @@ class RoundFourSpec extends AnyFunSuite {
   }
 
   test("clusters agrees with the per-pair transitive closure on real near-dups") {
-    val docs = graft.search.Indexer.documents(spark, sfDir)
+    val docs = graft.search.Indexer.documents(spark, testdata)
     val pairs = Dedup.ngramJaccard(docs, n = 3, minJ = 0.05)
       .select("doc_a", "doc_b").persist()
     val got = Dedup.clusters(pairs).collect()
@@ -254,7 +243,7 @@ class RoundFourSpec extends AnyFunSuite {
   // ---- sources: JSON-lines ingestion ----
 
   test("jsonl round trip: documents survive write/read with explicit schema") {
-    val docs = graft.search.Indexer.documents(spark, sfDir)
+    val docs = graft.search.Indexer.documents(spark, testdata)
     val dir = java.nio.file.Files.createTempDirectory("graft-jsonl-").toString
     docs.write.mode("overwrite").json(dir)
     // explicit schema: schema inference is a second full read at scale
@@ -299,7 +288,7 @@ class RoundFourSpec extends AnyFunSuite {
   }
 
   test("incrementalPostings equals a full rebuild (stemmed path)") {
-    val docs = graft.search.Indexer.documents(spark, sfDir)
+    val docs = graft.search.Indexer.documents(spark, testdata)
     val oldDocs = docs.filter(pmod(col("doc_id"), lit(3)) =!= 0)
     val newDocs = docs.filter(pmod(col("doc_id"), lit(3)) === 0)
     val sw = Seq("the", "and", "of")
@@ -311,7 +300,7 @@ class RoundFourSpec extends AnyFunSuite {
   }
 
   test("stratifiedHashSample applies per-stratum rates, default elsewhere") {
-    val docs = graft.search.Indexer.documents(spark, sfDir)
+    val docs = graft.search.Indexer.documents(spark, testdata)
     val out = TextAnalysis.stratifiedHashSample(docs, "doc_id", "lang",
       rates = Map("en" -> 0.0), defaultRate = 1.0)
     assert(out.filter(col("lang") === "en").count() == 0)
@@ -327,7 +316,7 @@ class RoundFourSpec extends AnyFunSuite {
   }
 
   test("quantizedTopK equals brute force after exact re-rank") {
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val emb = spark.read.parquet(s"$testdata/embeddings.parquet")
     val qVec = emb.filter(col("vec_id") === 0).select("embedding")
       .first().getSeq[Float](0).map(_.toDouble)
     val rest = emb.filter(col("vec_id") =!= 0)
@@ -340,7 +329,7 @@ class RoundFourSpec extends AnyFunSuite {
   }
 
   test("quantize: dequantization error is bounded by scale/2 per component") {
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet").limit(50)
+    val emb = spark.read.parquet(s"$testdata/embeddings.parquet").limit(50)
     val bad = graft.ops.Similarity.quantize(emb)
       .select(explode(zip_with(col("embedding"),
         transform(col("q_vec"), q => q.cast("double") * col("q_scale")),
@@ -351,7 +340,7 @@ class RoundFourSpec extends AnyFunSuite {
   }
 
   test("hashSample is a stable subset, monotone in rate") {
-    val docs = graft.search.Indexer.documents(spark, sfDir)
+    val docs = graft.search.Indexer.documents(spark, testdata)
     val s10 = TextAnalysis.hashSample(docs, "doc_id", 0.10)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     val s50 = TextAnalysis.hashSample(docs, "doc_id", 0.50)

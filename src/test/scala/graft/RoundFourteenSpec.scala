@@ -1,25 +1,15 @@
 package graft
 
-import java.sql.{Date, Timestamp}
+import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.{EventAnalytics, Graph, Maintenance, ScalableRank, TemporalJoins}
 
 /** Round-14 surface: Markov event transitions, interval islands,
   * incremental aggregate maintenance.
   */
-class RoundFourteenSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class RoundFourteenSpec extends SparkSuite {
 
   private def ts(s: String): Timestamp = Timestamp.valueOf(s)
 

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.Maintenance
 import graft.sources.DelimitedScan
@@ -10,17 +8,9 @@ import graft.sources.DelimitedScan
 /** Round-19 surface: JSONL/CSV line codecs and the streaming KMV
   * distinct-count driver.
   */
-class RoundNineteenSpec extends AnyFunSuite {
+class RoundNineteenSpec extends SparkSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  private def docs = {
+  private def codecDocs = {
     val s = spark
     import s.implicits._
     Seq(
@@ -37,21 +27,21 @@ class RoundNineteenSpec extends AnyFunSuite {
       Option(r.getString(3)), r.getLong(4))).toSet
 
   test("JSONL and CSV line codecs round-trip hostile values exactly") {
-    val want = asSet(docs)
-    assert(asSet(DelimitedScan.parseJsonl(DelimitedScan.toJsonl(docs))) === want)
-    assert(asSet(DelimitedScan.parseCsvLines(DelimitedScan.toCsvLines(docs))) === want)
+    val want = asSet(codecDocs)
+    assert(asSet(DelimitedScan.parseJsonl(DelimitedScan.toJsonl(codecDocs))) === want)
+    assert(asSet(DelimitedScan.parseCsvLines(DelimitedScan.toCsvLines(codecDocs))) === want)
   }
 
   test("at-rest JSONL: explicit-schema read reproduces the table, bad lines quarantine") {
     val base = java.nio.file.Files.createTempDirectory("graft-jsonl-").toString
-    DelimitedScan.writeJsonl(docs, s"$base/docs")
+    DelimitedScan.writeJsonl(codecDocs, s"$base/docs")
     val back = DelimitedScan.readJsonl(spark, s"$base/docs")
-    assert(asSet(back) === asSet(docs))
+    assert(asSet(back) === asSet(codecDocs))
     // corrupt line: all-null row, not a task failure
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$base/docs/zz-corrupt.json"), "{not json]\n")
     val withBad = DelimitedScan.readJsonl(spark, s"$base/docs")
-    assert(withBad.count() === docs.count() + 1)
+    assert(withBad.count() === codecDocs.count() + 1)
     assert(withBad.filter(col("doc_id").isNull).count() === 1)
   }
 

@@ -1,8 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.ops.Maintenance
 
@@ -10,15 +9,7 @@ import graft.ops.Maintenance
   * rebuild), the SCD-2 out-of-order batch audit, and width-checked
   * histogram states.
   */
-class RoundSeventeenSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class RoundSeventeenSpec extends SparkSuite {
 
   private def postingSet(df: DataFrame): Set[(Long, String)] =
     df.select(col("doc_id"), col("gram")).collect()

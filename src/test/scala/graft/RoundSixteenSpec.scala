@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.Multimodal
 import graft.ops.Multimodal.AviContainer
@@ -10,15 +9,7 @@ import graft.ops.Multimodal.AviContainer
 /** Round-16 surface: the RIFF/AVI container codec (real chunk walk, no
   * pixel decode) and its Spark plumbing.
   */
-class RoundSixteenSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class RoundSixteenSpec extends SparkSuite {
 
   private def frames(ns: Int*): Seq[Array[Byte]] =
     ns.zipWithIndex.map { case (n, i) =>

@@ -1,9 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.{Dedup, Maintenance, ScalableRank, TextAnalysis}
 
@@ -11,15 +10,7 @@ import graft.ops.{Dedup, Maintenance, ScalableRank, TextAnalysis}
   * deterministic global shuffle, Bloom-pruned incremental dedup,
   * bigram-LM scoring.
   */
-class RoundTenSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class RoundTenSpec extends SparkSuite {
 
   // ---- winnowing ----
 

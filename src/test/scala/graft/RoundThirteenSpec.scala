@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.{Graph, Quality, Stats, TextAnalysis}
 import graft.search.{Indexer, Scoring}
@@ -10,15 +8,7 @@ import graft.search.{Indexer, Scoring}
 /** Round-13 surface: per-doc TF-IDF keywords, declarative quality
   * audit, multi-source BFS, exact-moment statistics.
   */
-class RoundThirteenSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class RoundThirteenSpec extends SparkSuite {
 
   // ---- docKeywords ----
 

@@ -1,8 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.TextAnalysis
 
@@ -13,15 +12,7 @@ import graft.ops.TextAnalysis
   * copy) and diffs it against the operator on inputs that exercise
   * the edge cases the rewrite touches.
   */
-class RoundThirtyFiveSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class RoundThirtyFiveSpec extends SparkSuite {
 
   /** The pre-r14 exploded repetitionStats shape (explode all gram
     * sizes, two shuffled aggregations) — the reference the in-row

@@ -1,11 +1,9 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.{PartitionTransforms, TxLog}
 
@@ -26,31 +24,12 @@ import graft.ops.{PartitionTransforms, TxLog}
   *  - the guards: spec re-declaration, identity/transform mixing,
   *    renaming/dropping a transform source, NULL sources.
   */
-class RoundThirtyFourSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  private def sqlSpark: SparkSession = {
-    spark.conf.set("spark.sql.catalog.graft_table",
-      "graft.sources.GraftCatalog")
-    spark
-  }
-
-  private def tmpDir(prefix: String): String = {
-    val d = Files.createTempDirectory(prefix).toString
-    TxLog.init(d)
-    d
-  }
+class RoundThirtyFourSpec extends SparkSuite {
 
   // 2024-01-01T00:00:00Z in epoch millis; deterministic event frame
   // spanning `days` days, a few events per (day, user)
   private val Day0Millis = 1704067200000L
+
   private def events(nDays: Int, nUsers: Int,
                      perDay: Int = 8): DataFrame = {
     import spark.implicits._
@@ -97,8 +76,8 @@ class RoundThirtyFourSpec extends AnyFunSuite {
 
   test("days+bucket layout: value parity, hidden columns invisible " +
       "on snapshot and SQL reads") {
-    val s = sqlSpark
-    val root = tmpDir("tp-basic")
+    val s = spark
+    val root = tableDir("tp-basic")
     val df = events(nDays = 6, nUsers = 12)
     TxLog.appendTransformPartitioned(s, root, df,
       Seq("days(ts)", "bucket(4,user_id)"))
@@ -132,8 +111,8 @@ class RoundThirtyFourSpec extends AnyFunSuite {
 
   test("day-range and bucket-equality filters prune files through " +
       "the eager index, with exact value parity") {
-    val s = sqlSpark
-    val root = tmpDir("tp-prune")
+    val s = spark
+    val root = tableDir("tp-prune")
     // one input partition -> one file per (day, bucket) dir holding
     // that bucket's FULL user set for the day: wide per-file ranges,
     // the regime where bucketing must out-prune [min,max] stats
@@ -217,7 +196,7 @@ class RoundThirtyFourSpec extends AnyFunSuite {
       "partition values refuse loudly") {
     val s = spark
     import s.implicits._
-    val root = tmpDir("tp-trunc")
+    val root = tableDir("tp-trunc")
     val df = Seq(
       ("aa1", 1L), ("aa2", 2L), ("ab1", 3L), ("ba1", 4L),
       ("bb7", 5L), ("ca0", 6L), ("cb2", 7L), ("cc3", 8L))
@@ -243,7 +222,7 @@ class RoundThirtyFourSpec extends AnyFunSuite {
     assert(range.count() === 2L)
 
     // a value outside the partition grammar must refuse, not encode
-    val root2 = tmpDir("tp-trunc-bad")
+    val root2 = tableDir("tp-trunc-bad")
     val bad = Seq(("sp ace", 1L)).toDF("code", "v")
     val e = intercept[Exception](
       TxLog.appendTransformPartitioned(s, root2, bad,
@@ -253,8 +232,8 @@ class RoundThirtyFourSpec extends AnyFunSuite {
 
   test("SQL INSERT INTO re-derives the hidden layout; pruning stays " +
       "exact across the mixed commits") {
-    val s = sqlSpark
-    val root = tmpDir("tp-insert")
+    val s = spark
+    val root = tableDir("tp-insert")
     TxLog.appendTransformPartitioned(s, root, events(3, 6),
       Seq("days(ts)", "bucket(4,user_id)"))
     val before = TxLog.filePartitions(root).keySet
@@ -282,8 +261,8 @@ class RoundThirtyFourSpec extends AnyFunSuite {
   test("pruned planning path: the sidecar synopsis carries the hidden " +
       "partition columns — a selective day query skips row groups " +
       "and materializes only its own files") {
-    val s = sqlSpark
-    val root = tmpDir("tp-sidecar")
+    val s = spark
+    val root = tableDir("tp-sidecar")
     val old = TxLog.sidecarRowGroupBytes
     TxLog.sidecarRowGroupBytes = 2048L
     try {
@@ -321,8 +300,8 @@ class RoundThirtyFourSpec extends AnyFunSuite {
 
   test("guards: spec re-declaration, identity mixing, source " +
       "rename/drop, appendPartitioned on a transform table") {
-    val s = sqlSpark
-    val root = tmpDir("tp-guards")
+    val s = spark
+    val root = tableDir("tp-guards")
     TxLog.appendTransformPartitioned(s, root, events(2, 4),
       Seq("days(ts)", "bucket(4,user_id)"))
 
@@ -337,7 +316,7 @@ class RoundThirtyFourSpec extends AnyFunSuite {
       TxLog.appendPartitioned(s, root, events(2, 4), Seq("kind")))
       .getMessage.contains("transform"))
     // a transform append refuses on an identity-partitioned table
-    val idRoot = tmpDir("tp-guards-id")
+    val idRoot = tableDir("tp-guards-id")
     TxLog.appendPartitioned(s, idRoot, events(2, 4), Seq("kind"))
     assert(intercept[IllegalArgumentException](
       TxLog.appendTransformPartitioned(s, idRoot, events(2, 4),
@@ -360,7 +339,7 @@ class RoundThirtyFourSpec extends AnyFunSuite {
 
     // NULL transform sources refuse loudly
     import s.implicits._
-    val nullRoot = tmpDir("tp-guards-null")
+    val nullRoot = tableDir("tp-guards-null")
     val withNull = Seq((1L, Option.empty[Timestamp], 2L, "k"))
       .toDF("event_id", "ts", "user_id", "kind")
     intercept[Exception](TxLog.appendTransformPartitioned(
@@ -369,8 +348,8 @@ class RoundThirtyFourSpec extends AnyFunSuite {
 
   test("row-level SQL UPDATE on a transform table re-derives the " +
       "hidden layout for its insert images") {
-    val s = sqlSpark
-    val root = tmpDir("tp-rowlevel")
+    val s = spark
+    val root = tableDir("tp-rowlevel")
     TxLog.appendTransformPartitioned(s, root, events(4, 8),
       Seq("days(ts)", "bucket(4,user_id)"))
     val before = TxLog.filePartitions(root).keySet
@@ -390,11 +369,11 @@ class RoundThirtyFourSpec extends AnyFunSuite {
 
   test("clone carries the transform spec: the clone prunes and " +
       "inherits the layout on its own appends") {
-    val s = sqlSpark
-    val src = tmpDir("tp-clone-src")
+    val s = spark
+    val src = tableDir("tp-clone-src")
     TxLog.appendTransformPartitioned(s, src, events(4, 8),
       Seq("days(ts)"))
-    val dst = tmpDir("tp-clone-dst")
+    val dst = tableDir("tp-clone-dst")
     TxLog.clone(s, src, dst)
     assert(TxLog.partitionTransforms(dst) === Seq("days(ts)"))
     // the clone reads the source's files under the logical schema
@@ -409,8 +388,8 @@ class RoundThirtyFourSpec extends AnyFunSuite {
 
   test("time travel and vacuum keep the spec: v0 reads under the " +
       "original schema, the checkpoint carries ptspec") {
-    val s = sqlSpark
-    val root = tmpDir("tp-carry")
+    val s = spark
+    val root = tableDir("tp-carry")
     TxLog.appendTransformPartitioned(s, root, events(3, 6),
       Seq("days(ts)"))                                   // v0
     TxLog.appendTransformPartitioned(s, root, events(3, 6)) // v1

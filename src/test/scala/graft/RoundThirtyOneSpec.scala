@@ -2,10 +2,10 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TableHarness.{chain, raceAtV1}
 import graft.ops.TxLog
 
 /** Round-31 surface: the vacuum retention window (a reader pinned at
@@ -16,38 +16,7 @@ import graft.ops.TxLog
   * ALTER TABLE ADD COLUMN no longer forces derived mutations to
   * re-derive).
   */
-class RoundThirtyOneSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  private def sqlSpark: SparkSession = {
-    spark.conf.set("spark.sql.catalog.graft_table",
-      "graft.sources.GraftCatalog")
-    spark
-  }
-
-  private def testdata: String =
-    sys.env.getOrElse("SPARK_GRAFT_TESTDATA", "/root/testdata") + "/sf0.001"
-
-  private def docs: DataFrame =
-    graft.sources.Tables(spark, testdata, "documents")
-      .select("doc_id", "lang", "n_chars")
-
-  private def tmpDir(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
-
-  private def idSet(df: DataFrame): Set[Long] =
-    df.select("doc_id").collect().map(_.getLong(0)).toSet
-
-  private def chain(t: Throwable): Seq[String] =
-    Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
-      .map(x => Option(x.getMessage).getOrElse("")).toSeq
+class RoundThirtyOneSpec extends SparkSuite {
 
   // ---------------- vacuum retention window ----------------
 
@@ -128,7 +97,7 @@ class RoundThirtyOneSpec extends AnyFunSuite {
 
   test("entry-cache stats count hits and misses; CALL cache_stats " +
       "surfaces them in SQL") {
-    val s = sqlSpark
+    val s = spark
     val root = tmpDir("t31stats")
     TxLog.init(root)
     TxLog.append(spark, root, docs.limit(10).coalesce(1)) // v0
@@ -435,58 +404,6 @@ class RoundThirtyOneSpec extends AnyFunSuite {
     assert(cands.isEmpty)
   }
 
-  // ---------------- pure-ADD schema conflict relaxation ----------------
-
-  private class DelegatingIo(inner: graft.ops.TxIo) extends graft.ops.TxIo {
-    override def putIfAbsent(path: String, content: String): Unit =
-      inner.putIfAbsent(path, content)
-    override def read(path: String): String = inner.read(path)
-    override def list(dir: String): Seq[String] = inner.list(dir)
-    override def listRecursive(dir: String): Seq[String] =
-      inner.listRecursive(dir)
-    override def exists(path: String): Boolean = inner.exists(path)
-    override def mkdirs(dir: String): Unit = inner.mkdirs(dir)
-    override def delete(path: String): Unit = inner.delete(path)
-    override def deleteIfExists(path: String): Unit =
-      inner.deleteIfExists(path)
-    override def deleteRecursive(dir: String): Unit =
-      inner.deleteRecursive(dir)
-    override def move(src: String, dst: String): Unit =
-      inner.move(src, dst)
-    override def size(path: String): Long = inner.size(path)
-    override def mtime(path: String): Long = inner.mtime(path)
-  }
-
-  /** Deterministic version race at v1: `loser` derives first, its v1
-    * publish is held while `winner` runs to completion, then the
-    * loser's publish proceeds — and loses (see RoundThirtySpec).
-    */
-  private def raceAtV1[A](root: String, winner: => Unit)(loser: => A)
-      : A = {
-    val mainThread = Thread.currentThread()
-    val winnerDone = new java.util.concurrent.CountDownLatch(1)
-    val held = new java.util.concurrent.atomic.AtomicBoolean(false)
-    @volatile var winnerErr: Option[Throwable] = None
-    val wt = new Thread(() =>
-      try winner catch { case t: Throwable => winnerErr = Some(t) }
-      finally winnerDone.countDown())
-    val prev = graft.ops.TxIo.wrapper
-    graft.ops.TxIo.wrapper = inner => new DelegatingIo(inner) {
-      override def putIfAbsent(path: String, content: String): Unit = {
-        if (path.startsWith(root) && path.endsWith("00000001.json") &&
-            Thread.currentThread() == mainThread &&
-            held.compareAndSet(false, true)) {
-          wt.start()
-          assert(winnerDone.await(120,
-            java.util.concurrent.TimeUnit.SECONDS), "winner timed out")
-          winnerErr.foreach(throw _)
-        }
-        inner.putIfAbsent(path, content)
-      }
-    }
-    try loser finally graft.ops.TxIo.wrapper = prev
-  }
-
   test("two concurrent ADD COLUMNs of DIFFERENT columns both land " +
       "(the widening recomputes per attempt); an overlapping-name " +
       "re-add still fails loudly") {
@@ -524,7 +441,7 @@ class RoundThirtyOneSpec extends AnyFunSuite {
   test("a derived mutation racing a PURE-ADD schema winner re-stamps " +
       "and both land: the UPDATE applies, the added column reads NULL") {
     import org.apache.spark.sql.types.{LongType, StructField}
-    val s = sqlSpark
+    val s = spark
     val root = tmpDir("t31addvsupd")
     TxLog.init(root)
     TxLog.appendPartitioned(s, root,

@@ -1,8 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.{BoundedCollectList, DelimTokens}
 import graft.ops.{Dedup, Graph, TextAnalysis}
@@ -14,21 +13,7 @@ import graft.search.Analyzer
   * reconstructs the OLD shape inline (frozen copy) and diffs it
   * against the operator on inputs that exercise the edge cases.
   */
-class RoundThirtySixSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  private def assertSameRows(a: DataFrame, b: DataFrame): Unit = {
-    assert(a.schema.map(f => (f.name, f.dataType)) ===
-      b.schema.map(f => (f.name, f.dataType)))
-    assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
-  }
+class RoundThirtySixSpec extends SparkSuite {
 
   // ---------------------------------------------------------- tokenizer
 

@@ -2,10 +2,10 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TableHarness.{chain, raceAtV1}
 import graft.ops.TxLog
 
 /** Round-30 surface: the COLUMNAR checkpoint (per-file planning state
@@ -14,28 +14,7 @@ import graft.ops.TxLog
   * 120k-file table's checkpoint round-trips through the sidecar
   * without ever materializing an O(table) JSON string on the driver.
   */
-class RoundThirtySpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  private def testdata: String =
-    sys.env.getOrElse("SPARK_GRAFT_TESTDATA", "/root/testdata") + "/sf0.001"
-
-  private def docs: DataFrame =
-    graft.sources.Tables(spark, testdata, "documents")
-      .select("doc_id", "lang", "n_chars")
-
-  private def tmpDir(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
-
-  private def idSet(df: DataFrame): Set[Long] =
-    df.select("doc_id").collect().map(_.getLong(0)).toSet
+class RoundThirtySpec extends SparkSuite {
 
   test("a checkpoint writes its per-file state to a parquet sidecar " +
       "and keeps the JSON half KB-scale (no adds list, no stats " +
@@ -116,69 +95,9 @@ class RoundThirtySpec extends AnyFunSuite {
     info(s"120k-file sidecar: $bytes bytes, round-trip ${ms}ms")
   }
 
-  // ---- optimistic concurrency (conflict-detection re-stamp) ----
-
-  private def sqlSpark: SparkSession = {
-    spark.conf.set("spark.sql.catalog.graft_table",
-      "graft.sources.GraftCatalog")
-    spark
-  }
-
-  private class DelegatingIo(inner: graft.ops.TxIo) extends graft.ops.TxIo {
-    override def putIfAbsent(path: String, content: String): Unit =
-      inner.putIfAbsent(path, content)
-    override def read(path: String): String = inner.read(path)
-    override def list(dir: String): Seq[String] = inner.list(dir)
-    override def listRecursive(dir: String): Seq[String] =
-      inner.listRecursive(dir)
-    override def exists(path: String): Boolean = inner.exists(path)
-    override def mkdirs(dir: String): Unit = inner.mkdirs(dir)
-    override def delete(path: String): Unit = inner.delete(path)
-    override def deleteIfExists(path: String): Unit =
-      inner.deleteIfExists(path)
-    override def deleteRecursive(dir: String): Unit =
-      inner.deleteRecursive(dir)
-    override def move(src: String, dst: String): Unit =
-      inner.move(src, dst)
-    override def size(path: String): Long = inner.size(path)
-    override def mtime(path: String): Long = inner.mtime(path)
-  }
-
-  /** Run `loser` (in this thread) and `winner` (in another) as a
-    * DETERMINISTIC version race on `root`: the loser derives first,
-    * its v1 publish is held while the winner runs to completion, then
-    * the loser's publish proceeds — and loses. Returns the loser's
-    * outcome.
-    */
-  private def raceAtV1[A](root: String, winner: => Unit)(loser: => A)
-      : A = {
-    val mainThread = Thread.currentThread()
-    val winnerDone = new java.util.concurrent.CountDownLatch(1)
-    val held = new java.util.concurrent.atomic.AtomicBoolean(false)
-    @volatile var winnerErr: Option[Throwable] = None
-    val wt = new Thread(() =>
-      try winner catch { case t: Throwable => winnerErr = Some(t) }
-      finally winnerDone.countDown())
-    val prev = graft.ops.TxIo.wrapper
-    graft.ops.TxIo.wrapper = inner => new DelegatingIo(inner) {
-      override def putIfAbsent(path: String, content: String): Unit = {
-        if (path.startsWith(root) && path.endsWith("00000001.json") &&
-            Thread.currentThread() == mainThread &&
-            held.compareAndSet(false, true)) {
-          wt.start()
-          assert(winnerDone.await(120,
-            java.util.concurrent.TimeUnit.SECONDS), "winner timed out")
-          winnerErr.foreach(throw _)
-        }
-        inner.putIfAbsent(path, content)
-      }
-    }
-    try loser finally graft.ops.TxIo.wrapper = prev
-  }
-
   test("two UPDATEs on DISJOINT partitions race and BOTH land, " +
       "serialized — the loser re-stamps without re-running discovery") {
-    val s = sqlSpark
+    val s = spark
     val root = tmpDir("t30upd")
     TxLog.init(root)
     TxLog.appendPartitioned(s, root,
@@ -213,7 +132,7 @@ class RoundThirtySpec extends AnyFunSuite {
 
   test("two OVERLAPPING DELETEs race and the loser still fails " +
       "loudly (its hit files were rewritten under it)") {
-    val s = sqlSpark
+    val s = spark
     val root = tmpDir("t30del")
     TxLog.init(root)
     TxLog.append(s, root, docs.coalesce(1)) // v0: one file — total overlap
@@ -240,7 +159,7 @@ class RoundThirtySpec extends AnyFunSuite {
   test("UPDATE on a partitioned table re-records partition values on " +
       "its insert files — connector partition pruning stays exact " +
       "and bounded across the mutation") {
-    val s = sqlSpark
+    val s = spark
     val root = tmpDir("t30part")
     TxLog.init(root)
     TxLog.appendPartitioned(s, root,
@@ -282,7 +201,7 @@ class RoundThirtySpec extends AnyFunSuite {
 
   test("stress: 8 CONCURRENT UPDATEs, one per partition, all land " +
       "under optimistic concurrency — the serialized result is exact") {
-    val s = sqlSpark
+    val s = spark
     val root = tmpDir("t30race8")
     TxLog.init(root)
     val seeded = docs.withColumn("shard", pmod(col("doc_id"), lit(8)))
@@ -311,7 +230,7 @@ class RoundThirtySpec extends AnyFunSuite {
   test("ALTER TABLE ADD COLUMN is ONE data-free metadata commit: " +
       "old rows read NULL, a later INSERT supplies values, duplicate " +
       "adds and non-ADD ALTERs refuse") {
-    val s = sqlSpark
+    val s = spark
     val root = tmpDir("t30alter")
     TxLog.init(root)
     TxLog.append(s, root, docs.limit(40).coalesce(1)) // v0

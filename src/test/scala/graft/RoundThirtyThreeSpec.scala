@@ -2,10 +2,10 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TableHarness.chain
 import graft.ops.TxLog
 
 /** Round-33 surface, part 1: the log's FORWARD-COMPATIBILITY and
@@ -31,36 +31,12 @@ import graft.ops.TxLog
   *    heavy table must not grow an unbounded replay suffix just
   *    because nothing ever appended.
   */
-class RoundThirtyThreeSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  private def sqlSpark: SparkSession = {
-    spark.conf.set("spark.sql.catalog.graft_table",
-      "graft.sources.GraftCatalog")
-    spark
-  }
-
-  private def tmpDir(prefix: String): String = {
-    val d = Files.createTempDirectory(prefix).toString
-    TxLog.init(d)
-    d
-  }
+class RoundThirtyThreeSpec extends SparkSuite {
 
   private def seed(n: Int = 20): DataFrame = {
     import spark.implicits._
     (0 until n).map(i => (i.toLong, s"w$i")).toDF("k", "w")
   }
-
-  private def chain(t: Throwable): Seq[String] =
-    Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
-      .map(x => Option(x.getMessage).getOrElse("")).toSeq
 
   private def rawCommit(root: String, v: Long, body: String): Unit = {
     val p = Paths.get(f"$root/_txlog/$v%08d.json")
@@ -69,7 +45,7 @@ class RoundThirtyThreeSpec extends AnyFunSuite {
 
   test("a table demanding a FUTURE reader protocol fails reads AND " +
       "writes by name; a future WRITER protocol alone still reads") {
-    val root = tmpDir("t33proto")
+    val root = tableDir("t33proto")
     TxLog.append(spark, root, seed())
     // a newer binary recorded a protocol this one does not understand
     rawCommit(root, 1,
@@ -90,7 +66,7 @@ class RoundThirtyThreeSpec extends AnyFunSuite {
       m.contains("requires writer protocol")), chain(ew).mkString(" | "))
 
     // writer-only demand: reads keep working, commits refuse
-    val root2 = tmpDir("t33protow")
+    val root2 = tableDir("t33protow")
     TxLog.append(spark, root2, seed())
     rawCommit(root2, 1,
       """{"v":1,"op":"set-protocol","adds":[],"removes":[],""" +
@@ -109,7 +85,7 @@ class RoundThirtyThreeSpec extends AnyFunSuite {
   test("upgradeProtocol refuses demands this binary cannot honor, " +
       "never downgrades, and the checkpoint carries the demand " +
       "across a vacuum truncation") {
-    val root = tmpDir("t33protoup")
+    val root = tableDir("t33protoup")
     TxLog.append(spark, root, seed())
     val e = intercept[IllegalArgumentException] {
       TxLog.upgradeProtocol(root, 2, 2)
@@ -142,7 +118,7 @@ class RoundThirtyThreeSpec extends AnyFunSuite {
       "physical mapping into a NEW table's recorded schema (append, " +
       "overwrite, addColumns)") {
     import spark.implicits._
-    val src = tmpDir("t33mapsrc")
+    val src = tableDir("t33mapsrc")
     TxLog.append(spark, src,
       (0L until 10L).map(i => (i, s"v$i")).toDF("k", "payload"))
     TxLog.renameColumn(spark, src, "payload", "body"): Unit
@@ -154,7 +130,7 @@ class RoundThirtyThreeSpec extends AnyFunSuite {
 
     // first append to a NEW table: files store LOGICAL names, so a
     // verbatim-recorded mapping would read `body` as NULL everywhere
-    val dst = tmpDir("t33mapdst")
+    val dst = tableDir("t33mapdst")
     TxLog.append(spark, dst, mapped)
     val got = TxLog.snapshot(spark, dst)
     // the RECORDED schema action is what drives the mapping — it must
@@ -168,7 +144,7 @@ class RoundThirtyThreeSpec extends AnyFunSuite {
       "renamed column must round-trip values, not NULLs")
 
     // INSERT OVERWRITE of an existing table with a mapped frame
-    val dst2 = tmpDir("t33mapow")
+    val dst2 = tableDir("t33mapow")
     TxLog.append(spark, dst2, (0L until 3L).map(i => (i, s"x$i"))
       .toDF("k", "body"))
     TxLog.overwrite(spark, dst2, mapped): Unit
@@ -179,7 +155,7 @@ class RoundThirtyThreeSpec extends AnyFunSuite {
 
     // addColumns with a field lifted from the mapped schema: the
     // stale physical name must not ride along
-    val dst3 = tmpDir("t33mapadd")
+    val dst3 = tableDir("t33mapadd")
     TxLog.append(spark, dst3, (0L until 3L).toDF("k"))
     TxLog.addColumns(spark, dst3,
       Seq(mapped.schema.fields.find(_.name == "body").get)): Unit
@@ -192,7 +168,7 @@ class RoundThirtyThreeSpec extends AnyFunSuite {
   test("incremental checkpoint over an ORPHAN sidecar records the " +
       "published totals, never 0/0") {
     import spark.implicits._
-    val root = tmpDir("t33orphan")
+    val root = tableDir("t33orphan")
     val prior = TxLog.checkpointStreamThreshold
     TxLog.checkpointStreamThreshold = 1L
     try {
@@ -225,8 +201,8 @@ class RoundThirtyThreeSpec extends AnyFunSuite {
       "reads v0 as int, and guards refuse loudly") {
     import spark.implicits._
     import org.apache.spark.sql.types.{IntegerType, LongType}
-    val s = sqlSpark
-    val root = tmpDir("t33widen")
+    val s = spark
+    val root = tableDir("t33widen")
     TxLog.append(spark, root,
       (0 until 10).map(i => (i, s"w$i")).toDF("n", "w")) // n: INT, v0
     val files0 = TxLog.resolve(root).files.toSet
@@ -276,7 +252,7 @@ class RoundThirtyThreeSpec extends AnyFunSuite {
     }: Unit
 
     // float -> double, same contract
-    val root2 = tmpDir("t33widenf")
+    val root2 = tableDir("t33widenf")
     TxLog.append(spark, root2,
       (0 until 5).map(i => (i.toLong, i * 1.5f)).toDF("k", "x"))
     TxLog.widenColumnType(spark, root2, "x",
@@ -296,7 +272,7 @@ class RoundThirtyThreeSpec extends AnyFunSuite {
     import org.apache.spark.sql.catalyst.expressions.{AttributeReference, EqualTo, Literal}
     import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
     import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    val root = tmpDir("t33rg")
+    val root = tableDir("t33rg")
     val n = 500000
     val files = (0 until n).map(i => f"data/part-synth-$i%06d.parquet")
     val int = files.zipWithIndex.map { case (f, i) =>
@@ -380,7 +356,7 @@ class RoundThirtyThreeSpec extends AnyFunSuite {
       "append-free merge/delete workload keeps the replay suffix " +
       "bounded") {
     import spark.implicits._
-    val root = tmpDir("t33cadence")
+    val root = tableDir("t33cadence")
     val prior = TxLog.CheckpointInterval
     TxLog.CheckpointInterval = 8L
     try {

@@ -2,10 +2,10 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TableHarness.{chain, raceAtV1}
 import graft.ops.TxLog
 
 /** Round-32 surface: COLUMN MAPPING — SQL RENAME/DROP COLUMN as
@@ -19,44 +19,13 @@ import graft.ops.TxLog
   * version's own names, and a re-added name can never resurrect a
   * dropped column's stored bytes.
   */
-class RoundThirtyTwoSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  private def sqlSpark: SparkSession = {
-    spark.conf.set("spark.sql.catalog.graft_table",
-      "graft.sources.GraftCatalog")
-    spark
-  }
-
-  private def testdata: String =
-    sys.env.getOrElse("SPARK_GRAFT_TESTDATA", "/root/testdata") + "/sf0.001"
-
-  private def docs: DataFrame =
-    graft.sources.Tables(spark, testdata, "documents")
-      .select("doc_id", "lang", "n_chars")
-
-  private def tmpDir(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
-
-  private def idSet(df: DataFrame): Set[Long] =
-    df.select("doc_id").collect().map(_.getLong(0)).toSet
-
-  private def chain(t: Throwable): Seq[String] =
-    Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
-      .map(x => Option(x.getMessage).getOrElse("")).toSeq
+class RoundThirtyTwoSpec extends SparkSuite {
 
   test("SQL RENAME + DROP COLUMN are data-free metadata commits; " +
       "reads map stored physical names to the new logical names, " +
       "INSERT lands physical, time travel reads each version's own " +
       "schema") {
-    val s = sqlSpark
+    val s = spark
     val root = tmpDir("t32colmap")
     TxLog.init(root)
     TxLog.append(s, root, docs.limit(40).coalesce(1)) // v0
@@ -103,7 +72,7 @@ class RoundThirtyTwoSpec extends AnyFunSuite {
 
   test("re-ADDing a dropped column's name binds a FRESH physical " +
       "name — the dropped column's stored bytes can never resurface") {
-    val s = sqlSpark
+    val s = spark
     val root = tmpDir("t32reAdd")
     TxLog.init(root)
     TxLog.append(s, root, docs.limit(10).coalesce(1)) // v0
@@ -126,7 +95,7 @@ class RoundThirtyTwoSpec extends AnyFunSuite {
   test("skipping index and row-level ops stay keyed correctly " +
       "post-rename: file pruning on the renamed column, UPDATE and " +
       "DV DELETE through SQL, merge and compaction round-trips") {
-    val s = sqlSpark
+    val s = spark
     val root = tmpDir("t32ops")
     TxLog.init(root)
     // doc_id-clustered layout: 4 files with disjoint ranges
@@ -195,7 +164,7 @@ class RoundThirtyTwoSpec extends AnyFunSuite {
   test("mapping-mode guards refuse loudly: partition-column rename, " +
       "rename onto an existing or live-physical name, constrained " +
       "drop, and implicit write-side evolution") {
-    val s = sqlSpark
+    val s = spark
     val root = tmpDir("t32guards")
     TxLog.init(root)
     TxLog.appendPartitioned(s, root, docs.limit(30), Seq("lang")) // v0
@@ -245,7 +214,7 @@ class RoundThirtyTwoSpec extends AnyFunSuite {
 
   test("overwrite of a MAPPED table validates constraints against " +
       "the new frame's OWN names (no stale physical mapping)") {
-    val s = sqlSpark
+    val s = spark
     val root = tmpDir("t32ovw")
     TxLog.init(root)
     TxLog.append(s, root, docs.limit(20).coalesce(1)) // v0
@@ -270,7 +239,7 @@ class RoundThirtyTwoSpec extends AnyFunSuite {
   test("RESTORE across a rename boundary republishes that version's " +
       "OWN schema: the mapping is per-version metadata like " +
       "everything else") {
-    val s = sqlSpark
+    val s = spark
     val root = tmpDir("t32restmap")
     TxLog.init(root)
     TxLog.append(s, root, docs.limit(12).coalesce(1)) // v0: doc_id,lang,n_chars
@@ -298,7 +267,7 @@ class RoundThirtyTwoSpec extends AnyFunSuite {
   test("a CDC interval crossing a rename reports ONE coherent column " +
       "under the interval-head name (physical-name alignment — no " +
       "null-filled halves)") {
-    val s = sqlSpark
+    val s = spark
     val root = tmpDir("t32cdcmap")
     TxLog.init(root)
     TxLog.append(s, root, docs.limit(6).coalesce(1)) // v0
@@ -326,12 +295,12 @@ class RoundThirtyTwoSpec extends AnyFunSuite {
 
   test("a derived mutation racing a RENAME (non-pure-add schema " +
       "winner) still fails loudly and cleans up") {
-    val s = sqlSpark
+    val s = spark
     val root = tmpDir("t32race")
     TxLog.init(root)
     TxLog.append(s, root, docs.coalesce(1)) // v0
     val e = intercept[Exception] {
-      RaceHarness.raceAtV1(root,
+      raceAtV1(root,
         winner = { TxLog.renameColumn(s, root, "n_chars", "nc"): Unit }) {
         s.sql(s"DELETE FROM graft_table.`$root` WHERE doc_id % 2 = 0")
       }
@@ -342,56 +311,5 @@ class RoundThirtyTwoSpec extends AnyFunSuite {
     val leftovers = Files.list(java.nio.file.Paths.get(root))
       .toArray.map(_.toString).filter(_.contains("_staged"))
     assert(leftovers.isEmpty, leftovers.toSeq.toString)
-  }
-}
-
-/** The deterministic v1 version-race harness, shared by the mapping
-  * race specs (same shape as RoundThirtySpec's).
-  */
-private object RaceHarness {
-
-  private class DelegatingIo(inner: graft.ops.TxIo) extends graft.ops.TxIo {
-    override def putIfAbsent(path: String, content: String): Unit =
-      inner.putIfAbsent(path, content)
-    override def read(path: String): String = inner.read(path)
-    override def list(dir: String): Seq[String] = inner.list(dir)
-    override def listRecursive(dir: String): Seq[String] =
-      inner.listRecursive(dir)
-    override def exists(path: String): Boolean = inner.exists(path)
-    override def mkdirs(dir: String): Unit = inner.mkdirs(dir)
-    override def delete(path: String): Unit = inner.delete(path)
-    override def deleteIfExists(path: String): Unit =
-      inner.deleteIfExists(path)
-    override def deleteRecursive(dir: String): Unit =
-      inner.deleteRecursive(dir)
-    override def move(src: String, dst: String): Unit =
-      inner.move(src, dst)
-    override def size(path: String): Long = inner.size(path)
-    override def mtime(path: String): Long = inner.mtime(path)
-  }
-
-  def raceAtV1[A](root: String, winner: => Unit)(loser: => A): A = {
-    val mainThread = Thread.currentThread()
-    val winnerDone = new java.util.concurrent.CountDownLatch(1)
-    val held = new java.util.concurrent.atomic.AtomicBoolean(false)
-    @volatile var winnerErr: Option[Throwable] = None
-    val wt = new Thread(() =>
-      try winner catch { case t: Throwable => winnerErr = Some(t) }
-      finally winnerDone.countDown())
-    val prev = graft.ops.TxIo.wrapper
-    graft.ops.TxIo.wrapper = inner => new DelegatingIo(inner) {
-      override def putIfAbsent(path: String, content: String): Unit = {
-        if (path.startsWith(root) && path.endsWith("00000001.json") &&
-            Thread.currentThread() == mainThread &&
-            held.compareAndSet(false, true)) {
-          wt.start()
-          assert(winnerDone.await(120,
-            java.util.concurrent.TimeUnit.SECONDS), "winner timed out")
-          winnerErr.foreach(throw _)
-        }
-        inner.putIfAbsent(path, content)
-      }
-    }
-    try loser finally graft.ops.TxIo.wrapper = prev
   }
 }

@@ -1,10 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
-
 import java.sql.Timestamp
+
+import org.apache.spark.sql.functions._
 
 import graft.ops.{EventAnalytics, Graph, ScalableRank, TextAnalysis}
 
@@ -12,15 +10,7 @@ import graft.ops.{EventAnalytics, Graph, ScalableRank, TextAnalysis}
   * co-occurrence projection, degree-ordered triangle counting,
   * neighborhood-Jaccard related items, PMI collocations.
   */
-class RoundTwelveSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class RoundTwelveSpec extends SparkSuite {
 
   // deterministic pseudo-random edge list (no Random: reproducible)
   private def synthEdges(n: Int, m: Int): Seq[(Long, Long)] =

@@ -3,9 +3,8 @@ package graft
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.AtomicBoolean
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.{TxIo, TxLog}
 
@@ -14,28 +13,7 @@ import graft.ops.{TxIo, TxLog}
   * per-commit CDC pairing, race-loser staged-file cleanup, zero-byte
   * tip quarantine, and the pure-SQL read surface.
   */
-class RoundTwentyEightSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  private def testdata: String =
-    sys.env.getOrElse("SPARK_GRAFT_TESTDATA", "/root/testdata") + "/sf0.001"
-
-  private def docs: DataFrame =
-    graft.sources.Tables(spark, testdata, "documents")
-      .select("doc_id", "lang", "n_chars")
-
-  private def tmpDir(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
-
-  private def idSet(df: DataFrame): Set[Long] =
-    df.select("doc_id").collect().map(_.getLong(0)).toSet
+class RoundTwentyEightSpec extends SparkSuite {
 
   private def leafScans(df: DataFrame)
       : Seq[org.apache.spark.sql.execution.FileSourceScanExec] = {
@@ -53,27 +31,6 @@ class RoundTwentyEightSpec extends AnyFunSuite {
 
   private def filesRead(df: DataFrame): Long =
     leafScans(df).map(_.metrics("numFiles").value).sum
-
-  /** Pass-through TxIo for targeted interception in specs. */
-  private class DelegatingIo(inner: TxIo) extends TxIo {
-    override def putIfAbsent(path: String, content: String): Unit =
-      inner.putIfAbsent(path, content)
-    override def read(path: String): String = inner.read(path)
-    override def list(dir: String): Seq[String] = inner.list(dir)
-    override def listRecursive(dir: String): Seq[String] =
-      inner.listRecursive(dir)
-    override def exists(path: String): Boolean = inner.exists(path)
-    override def mkdirs(dir: String): Unit = inner.mkdirs(dir)
-    override def delete(path: String): Unit = inner.delete(path)
-    override def deleteIfExists(path: String): Unit =
-      inner.deleteIfExists(path)
-    override def deleteRecursive(dir: String): Unit =
-      inner.deleteRecursive(dir)
-    override def move(src: String, dst: String): Unit =
-      inner.move(src, dst)
-    override def size(path: String): Long = inner.size(path)
-    override def mtime(path: String): Long = inner.mtime(path)
-  }
 
   test("connector planning is O(checkpoint interval): a read replays " +
       "checkpoint + suffix and never touches a commit below the " +

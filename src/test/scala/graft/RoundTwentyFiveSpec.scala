@@ -2,9 +2,8 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.{DataFrame, Row}
 
 import graft.ops.TxLog
 
@@ -14,28 +13,7 @@ import graft.ops.TxLog
   * mode, checkpoint recovery, admission control) — plus the commit
   * ledger (`op` + footer-exact row stats) those reads are driven by.
   */
-class RoundTwentyFiveSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  private def testdata: String =
-    sys.env.getOrElse("SPARK_GRAFT_TESTDATA", "/root/testdata") + "/sf0.001"
-
-  private def docs: DataFrame =
-    graft.sources.Tables(spark, testdata, "documents")
-      .select("doc_id", "lang", "n_chars")
-
-  private def tmpDir(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
-
-  private def idSet(df: DataFrame): Set[Long] =
-    df.select("doc_id").collect().map(_.getLong(0)).toSet
+class RoundTwentyFiveSpec extends SparkSuite {
 
   private def ids(a: Long, b: Long): Set[Long] =
     idSet(docs.filter(col("doc_id") >= a && col("doc_id") < b))

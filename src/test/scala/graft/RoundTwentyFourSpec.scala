@@ -3,9 +3,8 @@ package graft
 import java.nio.file.{Files, Paths}
 import java.security.MessageDigest
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.{Dedup, Maintenance}
 import graft.search.Indexer
@@ -15,24 +14,7 @@ import graft.search.Indexer
   * delete (untouched files byte-identical), and the at-rest MinHash
   * dedup index lifecycle (build → route → append → serve ≡ rebuild).
   */
-class RoundTwentyFourSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  private def testdata: String =
-    sys.env.getOrElse("SPARK_GRAFT_TESTDATA", "/root/testdata") + "/sf0.001"
-
-  private def docs: DataFrame =
-    graft.sources.Tables(spark, testdata, "documents")
-
-  private def tmpDir(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
+class RoundTwentyFourSpec extends SparkSuite {
 
   // ---------------- search_prefix_at_rest ----------------
 
@@ -55,7 +37,7 @@ class RoundTwentyFourSpec extends AnyFunSuite {
   }
 
   test("searchPrefix equals the by-hand n-ary OR over the same index") {
-    val idx = Indexer.postings(docs)
+    val idx = Indexer.postings(documents)
     val got = graft.search.SearchEngine.searchPrefix("s", idx)
       .collect().map(r => (r.getLong(0), r.getDouble(1), r.getLong(2))).toSet
     val want = idx
@@ -84,7 +66,7 @@ class RoundTwentyFourSpec extends AnyFunSuite {
   test("deleteWhere rewrites only the files holding hits; every other " +
       "file stays byte-identical") {
     val p = tmpDir("graft-del-") + "/t"
-    docs.select("doc_id", "lang", "n_chars")
+    documents.select("doc_id", "lang", "n_chars")
       .repartitionByRange(10, col("doc_id"))
       .sortWithinPartitions("doc_id")
       .write.parquet(p)
@@ -115,12 +97,12 @@ class RoundTwentyFourSpec extends AnyFunSuite {
     // the table itself: keys gone, everything else intact
     val left = spark.read.parquet(p)
     assert(left.filter(col("doc_id").isin(7L, 8L, 42L)).count() === 0)
-    assert(left.count() === docs.count() - 3)
+    assert(left.count() === documents.count() - 3)
   }
 
   test("deleteWhere with no hits is a physical no-op") {
     val p = tmpDir("graft-del-") + "/t"
-    docs.select("doc_id", "lang")
+    documents.select("doc_id", "lang")
       .repartitionByRange(4, col("doc_id"))
       .sortWithinPartitions("doc_id")
       .write.parquet(p)
@@ -136,13 +118,13 @@ class RoundTwentyFourSpec extends AnyFunSuite {
       "minHashLshVerified over the full corpus, and the delta is " +
       "physically at rest as gen=1 files") {
     val p = tmpDir("graft-mh-") + "/mh"
-    val base = docs.filter(pmod(col("doc_id"), lit(5)) =!= 0)
-    val batch = docs.filter(pmod(col("doc_id"), lit(5)) === 0)
+    val base = documents.filter(pmod(col("doc_id"), lit(5)) =!= 0)
+    val batch = documents.filter(pmod(col("doc_id"), lit(5)) === 0)
     Dedup.minhashIndexWrite(base, p, n = 3, numHashes = 32, bands = 32,
       minJ = 0.2, maxBucket = 16, minBands = 2)
     val gen0 = Seq("dict", "membership", "banded", "reppairs")
       .map(a => a -> parquetChecksums(s"$p/$a/gen=0")).toMap
-    Dedup.minhashIndexAppend(spark, p, batch, docs, n = 3, numHashes = 32,
+    Dedup.minhashIndexAppend(spark, p, batch, documents, n = 3, numHashes = 32,
       bands = 32, minJ = 0.2, maxBucket = 16, minBands = 2)
     // the delta landed as new gen=1 partition files; gen=0 untouched
     Seq("dict", "membership", "banded", "reppairs").foreach { a =>
@@ -165,7 +147,7 @@ class RoundTwentyFourSpec extends AnyFunSuite {
     def key(df: DataFrame): Map[(Long, Long), Double] =
       df.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     val served = key(Dedup.minhashServePairs(spark, p))
-    val rebuilt = key(Dedup.minHashLshVerified(docs, n = 3, numHashes = 32,
+    val rebuilt = key(Dedup.minHashLshVerified(documents, n = 3, numHashes = 32,
       bands = 32, minJ = 0.2, maxBucket = 16, minBands = 2))
     assert(served.keySet === rebuilt.keySet)
     served.keySet.foreach(k => assert(served(k) === rebuilt(k),
@@ -181,7 +163,7 @@ class RoundTwentyFourSpec extends AnyFunSuite {
     import graft.ops.TxLog
     val root = tmpDir("graft-txlog-") + "/t"
     TxLog.init(root)
-    val d = docs.select("doc_id", "lang")
+    val d = documents.select("doc_id", "lang")
     val v0 = TxLog.append(spark, root, d.filter(col("doc_id") < 400))
     val v1 = TxLog.append(spark, root, d.filter(col("doc_id") >= 400))
     assert((v0, v1) === (0L, 1L))
@@ -233,7 +215,7 @@ class RoundTwentyFourSpec extends AnyFunSuite {
     val in = s"$root0/in"; val table = s"$root0/t"; val ckpt = s"$root0/ckpt"
     Files.createDirectories(Paths.get(in))
     TxLog.init(table)
-    val d = docs.select("doc_id", "lang")
+    val d = documents.select("doc_id", "lang")
     def stageFile(name: String, df: DataFrame): Unit = {
       val tmp = s"$root0/__$name"
       df.coalesce(1).write.parquet(tmp)
@@ -269,7 +251,7 @@ class RoundTwentyFourSpec extends AnyFunSuite {
     import graft.ops.TxLog
     val root = tmpDir("graft-txcdc-") + "/t"
     TxLog.init(root)
-    val d = docs.select("doc_id", "lang")
+    val d = documents.select("doc_id", "lang")
     TxLog.append(spark, root, d.filter(col("doc_id") < 400))
     TxLog.append(spark, root, d.filter(col("doc_id") >= 400))
     TxLog.deleteWhere(spark, root, "doc_id", Seq(5L))
@@ -292,9 +274,9 @@ class RoundTwentyFourSpec extends AnyFunSuite {
     val root = tmpDir("graft-txschema-") + "/t"
     TxLog.init(root)
     TxLog.append(spark, root,
-      docs.select("doc_id", "lang").filter(col("doc_id") < 100))
+      documents.select("doc_id", "lang").filter(col("doc_id") < 100))
     TxLog.append(spark, root,
-      docs.select("doc_id", "lang", "n_chars").filter(col("doc_id") >= 100))
+      documents.select("doc_id", "lang", "n_chars").filter(col("doc_id") >= 100))
     val head = TxLog.snapshot(spark, root)
     assert(head.columns.sorted.toSeq === Seq("doc_id", "lang", "n_chars"))
     assert(head.filter(col("doc_id") < 100 && col("n_chars").isNull)
@@ -314,7 +296,7 @@ class RoundTwentyFourSpec extends AnyFunSuite {
     import graft.ops.TxLog
     val root = tmpDir("graft-txmerge-") + "/t"
     TxLog.init(root)
-    val d = docs.select("doc_id", "lang")
+    val d = documents.select("doc_id", "lang")
     TxLog.append(spark, root,
       d.repartitionByRange(8, col("doc_id")).sortWithinPartitions("doc_id"))
     val filesV0 = TxLog.resolve(root).files.toSet
@@ -347,7 +329,7 @@ class RoundTwentyFourSpec extends AnyFunSuite {
   test("q_txlog_merge (the driver entry itself) pins the merge and the " +
       "optimize in one snapshot") {
     val df = SparkEntry.queries("q_txlog_merge")(spark, testdata)
-    val n = docs.count()
+    val n = documents.count()
     assert(df.count() === n + n / 50)
     assert(df.filter(col("lang") === "xx").count() === n / 10)
   }
@@ -357,7 +339,7 @@ class RoundTwentyFourSpec extends AnyFunSuite {
     import graft.ops.TxLog
     val root = tmpDir("graft-txvac-") + "/t"
     TxLog.init(root)
-    val d = docs.select("doc_id", "lang")
+    val d = documents.select("doc_id", "lang")
     TxLog.append(spark, root, d.filter(col("doc_id") < 100))
     TxLog.append(spark, root, d.filter(col("doc_id") >= 100))
     // retainFrom=1 is a plain append: v1's live set still references
@@ -378,9 +360,9 @@ class RoundTwentyFourSpec extends AnyFunSuite {
     val root = tmpDir("graft-txevo-") + "/t"
     TxLog.init(root)
     TxLog.append(spark, root,
-      docs.select("doc_id", "lang").filter(col("doc_id") < 100))
+      documents.select("doc_id", "lang").filter(col("doc_id") < 100))
     TxLog.append(spark, root,
-      docs.select("doc_id", "lang", "n_chars").filter(col("doc_id") >= 100))
+      documents.select("doc_id", "lang", "n_chars").filter(col("doc_id") >= 100))
     TxLog.compact(spark, root, 64L << 20)
     val afterCompact = TxLog.snapshot(spark, root)
     assert(afterCompact.columns.contains("n_chars"),
@@ -422,14 +404,14 @@ class RoundTwentyFourSpec extends AnyFunSuite {
   test("a second minhash append is its own generation: no re-probed " +
       "pairs, serve still equals the full rebuild") {
     val p = tmpDir("graft-mh2-") + "/mh"
-    val b0 = docs.filter(pmod(col("doc_id"), lit(5)).isin(1L, 2L, 3L))
-    val b1 = docs.filter(pmod(col("doc_id"), lit(5)) === 4)
-    val b2 = docs.filter(pmod(col("doc_id"), lit(5)) === 0)
+    val b0 = documents.filter(pmod(col("doc_id"), lit(5)).isin(1L, 2L, 3L))
+    val b1 = documents.filter(pmod(col("doc_id"), lit(5)) === 4)
+    val b2 = documents.filter(pmod(col("doc_id"), lit(5)) === 0)
     Dedup.minhashIndexWrite(b0, p, n = 3, numHashes = 32, bands = 32,
       minJ = 0.2, maxBucket = 16, minBands = 2)
     Dedup.minhashIndexAppend(spark, p, b1, b0.unionByName(b1), n = 3,
       numHashes = 32, bands = 32, minJ = 0.2, maxBucket = 16, minBands = 2)
-    Dedup.minhashIndexAppend(spark, p, b2, docs, n = 3,
+    Dedup.minhashIndexAppend(spark, p, b2, documents, n = 3,
       numHashes = 32, bands = 32, minJ = 0.2, maxBucket = 16, minBands = 2)
     assert(Files.exists(Paths.get(s"$p/banded/gen=2")),
       "the second append must land as its own generation")
@@ -437,7 +419,7 @@ class RoundTwentyFourSpec extends AnyFunSuite {
     assert(served.groupBy("doc_a", "doc_b").count()
       .filter(col("count") > 1).count() === 0,
       "a re-probed earlier generation would duplicate pairs")
-    val rebuilt = Dedup.minHashLshVerified(docs, n = 3, numHashes = 32,
+    val rebuilt = Dedup.minHashLshVerified(documents, n = 3, numHashes = 32,
       bands = 32, minJ = 0.2, maxBucket = 16, minBands = 2)
     assert(served.count() === rebuilt.count())
     assert(served.exceptAll(rebuilt).count() === 0)
@@ -448,10 +430,10 @@ class RoundTwentyFourSpec extends AnyFunSuite {
     import graft.ops.TxLog
     val root = tmpDir("graft-txcdcevo-") + "/t"
     TxLog.init(root)
-    TxLog.append(spark, root, docs.select("doc_id", "lang")
+    TxLog.append(spark, root, documents.select("doc_id", "lang")
       .filter(col("doc_id") < 100).coalesce(1))
     TxLog.append(spark, root,
-      docs.select("doc_id", "lang", "n_chars").filter(col("doc_id") >= 100))
+      documents.select("doc_id", "lang", "n_chars").filter(col("doc_id") >= 100))
     val v2 = TxLog.deleteWhere(spark, root, "doc_id", Seq(5L))
     val ch = TxLog.changesBetween(spark, root, 1L, v2)
     assert(ch.columns.contains("n_chars"),
@@ -514,7 +496,7 @@ class RoundTwentyFourSpec extends AnyFunSuite {
     val df = SparkEntry.queries("q_timetravel")(spark, testdata)
     val bySnap = df.groupBy("snap").count().collect()
       .map(r => (r.getString(0), r.getLong(1))).toMap
-    val n = docs.count()
+    val n = documents.count()
     assert(bySnap === Map("v1" -> n, "head" -> (n - 3)))
   }
 

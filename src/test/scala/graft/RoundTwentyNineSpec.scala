@@ -3,10 +3,10 @@ package graft
 import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicBoolean
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TableHarness.chain
 import graft.ops.{TxIo, TxLog}
 import graft.sources.GraftSqlTable
 
@@ -16,54 +16,7 @@ import graft.sources.GraftSqlTable
   * discovery, SQL NULL-predicate semantics, and the exact-vs-pruning
   * filter conversion split.
   */
-class RoundTwentyNineSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.conf.set("spark.sql.catalog.graft_table",
-      "graft.sources.GraftCatalog")
-    s
-  }
-
-  private def testdata: String =
-    sys.env.getOrElse("SPARK_GRAFT_TESTDATA", "/root/testdata") + "/sf0.001"
-
-  private def docs: DataFrame =
-    graft.sources.Tables(spark, testdata, "documents")
-      .select("doc_id", "lang", "n_chars")
-
-  private def tmpDir(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
-
-  private def idSet(df: DataFrame): Set[Long] =
-    df.select("doc_id").collect().map(_.getLong(0)).toSet
-
-  /** Pass-through TxIo for targeted interception in specs. */
-  private class DelegatingIo(inner: graft.ops.TxIo) extends graft.ops.TxIo {
-    override def putIfAbsent(path: String, content: String): Unit =
-      inner.putIfAbsent(path, content)
-    override def read(path: String): String = inner.read(path)
-    override def list(dir: String): Seq[String] = inner.list(dir)
-    override def listRecursive(dir: String): Seq[String] =
-      inner.listRecursive(dir)
-    override def exists(path: String): Boolean = inner.exists(path)
-    override def mkdirs(dir: String): Unit = inner.mkdirs(dir)
-    override def delete(path: String): Unit = inner.delete(path)
-    override def deleteIfExists(path: String): Unit =
-      inner.deleteIfExists(path)
-    override def deleteRecursive(dir: String): Unit =
-      inner.deleteRecursive(dir)
-    override def move(src: String, dst: String): Unit =
-      inner.move(src, dst)
-    override def size(path: String): Long = inner.size(path)
-    override def mtime(path: String): Long = inner.mtime(path)
-  }
+class RoundTwentyNineSpec extends SparkSuite {
 
   test("SQL DELETE FROM deletes exactly the predicate's rows as one " +
       "commit; the pre-delete version stays time-travel readable") {

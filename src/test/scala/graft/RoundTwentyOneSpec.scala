@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.MinTokenDistance
 import graft.search.PostingAlgebra
@@ -11,15 +10,7 @@ import graft.search.PostingAlgebra
   * that replaced the last ScalaUDF in the query hot path (phrase
   * proximity, reference `util/QueryParser.java:204-253`).
   */
-class RoundTwentyOneSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class RoundTwentyOneSpec extends SparkSuite {
 
   /** Random ASCENDING position list (the index invariant). */
   private def sortedPositions(rnd: scala.util.Random, maxLen: Int): Seq[Int] =

@@ -2,9 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.TxLog
 
@@ -13,28 +12,7 @@ import graft.ops.TxLog
   * ledger surviving log truncation, and change feeds over fully
   * deleted snapshots.
   */
-class RoundTwentySevenSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  private def testdata: String =
-    sys.env.getOrElse("SPARK_GRAFT_TESTDATA", "/root/testdata") + "/sf0.001"
-
-  private def docs: DataFrame =
-    graft.sources.Tables(spark, testdata, "documents")
-      .select("doc_id", "lang", "n_chars")
-
-  private def tmpDir(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
-
-  private def idSet(df: DataFrame): Set[Long] =
-    df.select("doc_id").collect().map(_.getLong(0)).toSet
+class RoundTwentySevenSpec extends SparkSuite {
 
   test("vacuum spares a concurrent writer's never-published staged " +
       "file until the age grace, while still reclaiming truncated " +
@@ -192,6 +170,7 @@ class RoundTwentySevenSpec extends AnyFunSuite {
   // reuses the same root, so reconstructing here is only for the API
   // comparison)
   private var langRoot: Option[String] = None
+
   private def txlogLangRootForSpec(): String = langRoot.getOrElse {
     val p = tmpDir("t27lang")
     TxLog.init(p)

@@ -3,9 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 import java.security.MessageDigest
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.TxLog
 
@@ -16,28 +14,7 @@ import graft.ops.TxLog
   * rewrites purge it physically; history, CDC, streaming, checkpoint,
   * and vacuum all stay coherent with it.
   */
-class RoundTwentySixSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  private def testdata: String =
-    sys.env.getOrElse("SPARK_GRAFT_TESTDATA", "/root/testdata") + "/sf0.001"
-
-  private def docs: DataFrame =
-    graft.sources.Tables(spark, testdata, "documents")
-      .select("doc_id", "lang", "n_chars")
-
-  private def tmpDir(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
-
-  private def idSet(df: DataFrame): Set[Long] =
-    df.select("doc_id").collect().map(_.getLong(0)).toSet
+class RoundTwentySixSpec extends SparkSuite {
 
   private def sha256(p: java.nio.file.Path): String = {
     val md = MessageDigest.getInstance("SHA-256")

@@ -1,8 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.HeavyHitters
 
@@ -10,15 +9,7 @@ import graft.ops.HeavyHitters
   * member of the mergeable-state family after the KMV distinct sketch
   * and the exact-histogram quantile state).
   */
-class RoundTwentySpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class RoundTwentySpec extends SparkSuite {
 
   /** Skewed synthetic key stream: key `k` (0-based) appears with
     * multiplicity ~ n/(k+1) (Zipf-ish), plus a long uniform tail.

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.AnnIndex
 
@@ -13,18 +11,7 @@ import graft.ops.AnnIndex
   * cross-version redelivery, and null-element hardening of the two
   * public native kernels.
   */
-class RoundTwentyThreeSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  private def testdata: String =
-    sys.env.getOrElse("SPARK_GRAFT_TESTDATA", "/root/testdata") + "/sf0.001"
+class RoundTwentyThreeSpec extends SparkSuite {
 
   test("search_and_at_rest (the driver entry itself) pushes the term filter " +
       "into the persisted index scan") {

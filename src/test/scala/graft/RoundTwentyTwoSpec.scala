@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.{Dedup, Similarity, TemporalJoins}
 
@@ -11,15 +10,7 @@ import graft.ops.{Dedup, Similarity, TemporalJoins}
   * cut, NaN-safe IVF probe ranking, orderable-payload detection in the
   * as-of tie key, and balanced-paren plan canonicalization.
   */
-class RoundTwentyTwoSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class RoundTwentyTwoSpec extends SparkSuite {
 
   test("digestBloom keeps its requested size past the runtime-filter caps") {
     val s = spark

@@ -1,8 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.ops.{AnnIndex, Dedup, Multimodal, Similarity}
 import graft.search.Indexer
@@ -12,24 +11,10 @@ import graft.sources.{Corpus, XmlScan}
   * the persisted (at-rest) ANN layouts, verified dedup variants, and the
   * corpus_type / title-as-first-line conventions.
   */
-class RoundTwoSpec extends AnyFunSuite {
+class RoundTwoSpec extends SparkSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  val sfDir = "/root/testdata/sf0.001"
-
-  lazy val docs: DataFrame = Indexer.documents(spark, sfDir)
   lazy val embeddings: DataFrame =
-    spark.read.parquet(s"$sfDir/embeddings.parquet")
-
-  private def tmpDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+    spark.read.parquet(s"$testdata/embeddings.parquet")
 
   // ---- S1/S2 edge: gzip (non-seekable) dump ingestion ----
   // The reference's XMLInputFormat handles compressed, non-splittable
@@ -38,7 +23,7 @@ class RoundTwoSpec extends AnyFunSuite {
   // same for .gz: one partition per file, records still split on the
   // </page> delimiter.
   test("gz dump: single-split read, parse parity with the plain dump") {
-    val pages = XmlScan.toPageXml(docs.limit(50)).select("value")
+    val pages = XmlScan.toPageXml(documents.limit(50)).select("value")
       .collect().map(_.getString(0))
     val dir = tmpDir("graft-gz-")
     val gzPath = s"$dir/dump.xml.gz"
@@ -53,7 +38,7 @@ class RoundTwoSpec extends AnyFunSuite {
       "a .gz file must be one non-splittable partition")
     val parsed = XmlScan.parsePages(records)
     val direct = XmlScan.parsePages(
-      XmlScan.toPageXml(docs.limit(50)))
+      XmlScan.toPageXml(documents.limit(50)))
     assert(parsed.count() == 50)
     assert(parsed.exceptAll(direct).count() == 0)
     assert(direct.exceptAll(parsed).count() == 0)
@@ -217,9 +202,9 @@ class RoundTwoSpec extends AnyFunSuite {
 
   // ---- verified dedup variants ----
   test("minHashLshVerified returns the exact Jaccard pair list") {
-    val v = Dedup.minHashLshVerified(docs, n = 3, numHashes = 32,
+    val v = Dedup.minHashLshVerified(documents, n = 3, numHashes = 32,
       bands = 32, minJ = 0.2)
-    val e = Dedup.ngramJaccard(docs, n = 3, minJ = 0.2)
+    val e = Dedup.ngramJaccard(documents, n = 3, minJ = 0.2)
     assert(v.exceptAll(e).count() == 0 && e.exceptAll(v).count() == 0)
   }
 
@@ -246,11 +231,11 @@ class RoundTwoSpec extends AnyFunSuite {
 
   // ---- streaming top-k terms ----
   test("streaming word counts match batch; top-k = the batch stop words") {
-    val batch = Indexer.wordCounts(docs).collect()
+    val batch = Indexer.wordCounts(documents).collect()
       .map(r => (r.getString(0), r.getLong(1))).toSet
     val streamDir = tmpDir("graft-wc-stream-")
     java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$sfDir/documents.parquet"),
+      java.nio.file.Paths.get(s"$testdata/documents.parquet"),
       java.nio.file.Paths.get(streamDir, "documents.parquet"))
     val q = graft.streaming.StreamingOps.streamingWordCounts(spark, streamDir)
       .writeStream.format("memory").queryName("wc_stream_test")
@@ -265,7 +250,7 @@ class RoundTwoSpec extends AnyFunSuite {
       val topStream = spark.table("wc_stream_test")
         .orderBy(desc("cnt"), asc("word")).limit(10).collect()
         .map(r => (r.getString(0), r.getLong(1))).toSeq
-      val topBatch = Indexer.stopWords(docs, 10).collect()
+      val topBatch = Indexer.stopWords(documents, 10).collect()
         .map(r => (r.getString(0), r.getLong(1))).toSeq
       assert(topStream == topBatch)
     } finally q.stop()

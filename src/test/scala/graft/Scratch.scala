@@ -1186,15 +1186,6 @@ object Scratch {
                 (if (onlyFeed == 0 && onlySnap == 0 &&
                      nFeed == 105000L && histOk) "OK" else "MISMATCH"))
           }
-        } else if (n == "idx-stem-nopersist") {
-          search.Indexer.postings(search.Indexer.documents(spark, sfDir))
-            .write.format("noop").mode("overwrite").save()
-        } else if (n == "idx-nostem-nopersist") {
-          search.Indexer.postings(search.Indexer.documents(spark, sfDir), stem = false)
-            .write.format("noop").mode("overwrite").save()
-        } else if (n == "occurrences-stem") {
-          search.Indexer.termOccurrences(search.Indexer.documents(spark, sfDir), Seq.empty)
-            .write.format("noop").mode("overwrite").save()
         } else if (n.startsWith("cmp:")) {
           // cmp:<queryA>:<queryB> — exact multiset equality of two
           // SparkEntry query results (column order ignored by name sort)
@@ -1207,167 +1198,6 @@ object Scratch {
           val onlyB = b.exceptAll(a).count()
           println(s"cmp $qa(${a.count()}) vs $qb(${b.count()}): onlyA=$onlyA onlyB=$onlyB " +
             (if (onlyA == 0 && onlyB == 0) "MATCH" else "DIFF"))
-        } else if (n == "minhash-profile") {
-          // stage-by-stage volumes + timings of minHashLshVerified's DAG
-          import org.apache.spark.sql.functions._
-          val docs = search.Indexer.documents(spark, sfDir)
-          def timed[T](label: String)(f: => T): T = {
-            val s = System.nanoTime(); val r = f
-            println(f"  $label%-28s ${(System.nanoTime() - s) / 1e9}%.2f s  $r")
-            r
-          }
-          // mirrors minHashLshVerified's digest-based collapse
-          val keyed = ops.Dedup.shingleSets(docs, 3)
-            .select(col("doc_id"), col("sh"), size(col("sh")).as("nsh"),
-              ops.Dedup.setDigest(col("sh")).as("k"))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          timed("keyed sets")(keyed.count())
-          val repIds = keyed.groupBy("k").agg(min("doc_id").as("rep"))
-          val groups = keyed.join(repIds, "k")
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          timed("set groups (digest)")(groups.count())
-          val reps = groups.filter(col("nsh") > 0 && col("doc_id") === col("rep"))
-          timed("representatives")(reps.count())
-          // mirrors the r14 banding + map-side bucket-pair expansion
-          val banded = reps
-            .select(col("doc_id"),
-              transform(col("sh"), s => xxhash64(s)).as("__hs"))
-            .select(col("doc_id"), posexplode(
-              transform(sequence(lit(0), lit(31)), bnd =>
-                xxhash64(transform(sequence(bnd, bnd),
-                  i => array_min(transform(col("__hs"), h => xxhash64(h, i)))), bnd)))
-            .as(Seq("band", "bucket")))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          timed("banded rows")(banded.count())
-          val idsCol = col("__ids")
-          val pairsOf = flatten(transform(sequence(lit(1), size(idsCol) - 1),
-            i => transform(sequence(i + 1, size(idsCol)),
-              j => struct(element_at(idsCol, i).as("a"),
-                element_at(idsCol, j).as("b")))))
-          val candidates = banded.groupBy("band", "bucket")
-            .agg(sort_array(collect_list(col("doc_id"))).as("__ids"))
-            .filter(size(col("__ids")).between(2, 16))
-            .select(explode(pairsOf).as("p"))
-            .select(col("p.a").as("rep_a"), col("p.b").as("rep_b"))
-            .groupBy("rep_a", "rep_b").agg(count(lit(1)).as("nb"))
-            .filter(col("nb") >= 2).select("rep_a", "rep_b")
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          timed("candidates (cap16,nb>=2)")(candidates.count())
-          val shTbl = reps.select(col("doc_id"), col("sh"))
-          val verified = candidates
-            .join(shTbl.select(col("doc_id").as("rep_a"), col("sh").as("sh_a")), "rep_a")
-            .join(shTbl.select(col("doc_id").as("rep_b"), col("sh").as("sh_b")), "rep_b")
-            .withColumn("n_common", size(array_intersect(col("sh_a"), col("sh_b"))))
-            .withColumn("jaccard", col("n_common").cast("double") /
-              (size(col("sh_a")) + size(col("sh_b")) - col("n_common")))
-            .filter(col("jaccard") >= 0.2)
-          timed("verified pairs")(verified.count())
-          timed("full minHashLshVerified")(
-            ops.Dedup.minHashLshVerified(docs, 3, 32, 32, 0.2, 16, 2).count())
-        } else if (n == "mh-t1") {
-          import org.apache.spark.sql.functions._
-          val docs = search.Indexer.documents(spark, sfDir)
-          def timed[T](label: String)(f: => T): T = {
-            val s = System.nanoTime(); val r = f
-            println(f"  $label%-28s ${(System.nanoTime() - s) / 1e9}%.2f s  $r")
-            r
-          }
-          timed("warm docs")(docs.count())
-          timed("tokens")(docs.select(col("doc_id"),
-            search.Analyzer.tokensCol(col("text")).as("t")).agg(sum(size(col("t")))).first())
-          timed("shingleSets")(ops.Dedup.shingleSets(docs, 3)
-            .agg(sum(size(col("sh")))).first())
-          timed("shingleSets noop")(ops.Dedup.shingleSets(docs, 3)
-            .write.format("noop").mode("overwrite").save())
-          val w = org.apache.spark.sql.expressions.Window.partitionBy("sh")
-          timed("+window rep")(ops.Dedup.shingleSets(docs, 3)
-            .filter(size(col("sh")) > 0)
-            .withColumn("rep", min("doc_id").over(w))
-            .agg(sum("rep")).first())
-          timed("groupBy sh instead")(ops.Dedup.shingleSets(docs, 3)
-            .filter(size(col("sh")) > 0)
-            .groupBy("sh").agg(min("doc_id").as("rep"), count(lit(1)).as("k"))
-            .agg(sum("rep"), sum("k")).first())
-          timed("filter+noop")(ops.Dedup.shingleSets(docs, 3)
-            .filter(size(col("sh")) > 0)
-            .write.format("noop").mode("overwrite").save())
-          timed("repartition+noop")(ops.Dedup.shingleSets(docs, 3)
-            .repartition(32, col("sh"))
-            .write.format("noop").mode("overwrite").save())
-          timed("digest+groupBy(no arrays)")(ops.Dedup.shingleSets(docs, 3)
-            .select(col("doc_id"), xxhash64(col("sh")).as("shh"), size(col("sh")).as("nsh"))
-            .filter(col("nsh") > 0)
-            .groupBy("shh").agg(min("doc_id").as("rep"), count(lit(1)).as("k"))
-            .agg(sum("rep"), sum("k")).first())
-          timed("groupBy digest")(ops.Dedup.shingleSets(docs, 3)
-            .filter(size(col("sh")) > 0)
-            .groupBy(xxhash64(col("sh")).as("shh"))
-            .agg(min("doc_id").as("rep"), count(lit(1)).as("k"))
-            .agg(sum("rep"), sum("k")).first())
-        } else if (n == "tok-t1") {
-          // how much of a corpus pass is the regex tokenizer itself?
-          import org.apache.spark.sql.functions._
-          val docs = search.Indexer.documents(spark, sfDir)
-          def timed[T](label: String)(f: => T): T = {
-            val s = System.nanoTime(); val r = f
-            println(f"  $label%-30s ${(System.nanoTime() - s) / 1e9}%.2f s")
-            r
-          }
-          docs.count()
-          for (_ <- 1 to 2) {
-            timed("scan only (noop)")(docs.select("doc_id", "text")
-              .write.format("noop").mode("overwrite").save())
-            timed("lower+split ws (noop)")(docs.select(col("doc_id"),
-              split(lower(col("text")), " ", -1).as("t"))
-              .write.format("noop").mode("overwrite").save())
-            timed("tokensCol regex (noop)")(docs.select(col("doc_id"),
-              search.Analyzer.tokensCol(col("text")).as("t"))
-              .write.format("noop").mode("overwrite").save())
-            timed("tokensCol + explode (noop)")(docs.select(col("doc_id"),
-              explode(search.Analyzer.tokensCol(col("text"))).as("t"))
-              .write.format("noop").mode("overwrite").save())
-          }
-        } else if (n == "mh-full") {
-          // end-to-end minHashLshVerified wall time, 3 repetitions
-          import org.apache.spark.sql.functions._
-          val docs = search.Indexer.documents(spark, sfDir)
-          docs.count()
-          for (r <- 1 to 3) {
-            val t1 = System.nanoTime()
-            val c = ops.Dedup.minHashLshVerified(docs, 3, 32, 32, 0.2, 16, 2).count()
-            println(f"  full[$r] ${(System.nanoTime() - t1) / 1e9}%.2f s  pairs=$c")
-          }
-        } else if (n == "mh-t2") {
-          // keyed-sets persist (fat arrays, 2 consumers) vs recompute
-          // (map-side pipeline runs twice, no columnar cache write):
-          // which materialization strategy wins for the rep-collapse?
-          import org.apache.spark.sql.functions._
-          val docs = search.Indexer.documents(spark, sfDir)
-          def timed[T](label: String)(f: => T): T = {
-            val s = System.nanoTime(); val r = f
-            println(f"  $label%-34s ${(System.nanoTime() - s) / 1e9}%.2f s  $r")
-            r
-          }
-          def keyed() = ops.Dedup.shingleSets(docs, 3)
-            .select(col("doc_id"), col("sh"), size(col("sh")).as("nsh"),
-              ops.Dedup.setDigest(col("sh")).as("k"))
-          timed("warm")(docs.count())
-          for (round <- 1 to 2) {
-            val kA = keyed()
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            timed(s"A$round: keyed persist+count")(kA.count())
-            val gA = kA.join(kA.groupBy("k").agg(min("doc_id").as("rep")), "k")
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            timed(s"A$round: groups persist+count")(gA.count())
-            gA.unpersist(true); kA.unpersist(true)
-            val kB = keyed()
-            val gB = kB.join(
-                kB.select("k", "doc_id").groupBy("k").agg(min("doc_id").as("rep")),
-                "k")
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            timed(s"B$round: groups persist+count (no keyed cache)")(gB.count())
-            gB.unpersist(true)
-          }
         } else if (n == "minhash-bucketstats") {
           // picks maxBucket for minHashLshVerified: bucket-size
           // distribution of the 1-row-band LSH, and for each candidate
@@ -1581,33 +1411,6 @@ object Scratch {
             java.nio.file.Paths.get("src/main/scala/graft/PinnedOracles.scala"),
             sb.toString)
           println("wrote PinnedOracles.scala")
-        } else if (n == "idxcodec") {
-          // index size: snappy vs zstd (X4 evidence — at 100 TB the
-          // codec choice is a real storage/scan-cost lever)
-          import org.apache.spark.sql.functions._
-          val idx = search.Indexer.postings(search.Indexer.documents(spark, sfDir))
-          def sizeOf(dir: java.io.File): Long =
-            if (dir.isFile) dir.length
-            else Option(dir.listFiles).map(_.map(sizeOf).sum).getOrElse(0L)
-          for (codec <- Seq("snappy", "zstd")) {
-            val path = java.nio.file.Files.createTempDirectory(s"graft-idx-$codec-")
-              .resolve("idx").toString
-            idx.repartitionByRange(10, col("term"))
-              .sortWithinPartitions("term", "doc_id")
-              .write.mode("overwrite").option("compression", codec).parquet(path)
-            println(f"$codec%-7s ${sizeOf(new java.io.File(path)) / 1024.0}%10.1f KiB")
-          }
-        } else if (n == "maxshingle") {
-          import org.apache.spark.sql.functions._
-          val sh = ops.Dedup.shingles(search.Indexer.documents(spark, sfDir), 3)
-          println("max shingle df: " + sh.groupBy("shingle").count()
-            .agg(max("count")).first())
-        } else if (n == "embcosdist") {
-          import org.apache.spark.sql.functions._
-          val pairs = ops.Dedup.embeddingNearDupExact(
-            spark.read.parquet(s"$sfDir/embeddings.parquet"), -1.0)
-          pairs.select(floor(col("cosine") * 10).as("bucket"))
-            .groupBy("bucket").count().orderBy("bucket").show(30)
         } else if (n.startsWith("explain:")) {
           val q = n.stripPrefix("explain:")
           SparkEntry.queries(q)(spark, sfDir).explain("formatted")

@@ -2,10 +2,9 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.{Column, DataFrame}
 
 import graft.ops.TxLog
 
@@ -14,21 +13,7 @@ import graft.ops.TxLog
   * for the non-derived writers, and the streaming change feed's output
   * schema.
   */
-class TableLayerSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  private def tmpDir(prefix: String): String = {
-    val d = Files.createTempDirectory(prefix).toString
-    TxLog.init(d)
-    d
-  }
+class TableLayerSpec extends SparkSuite {
 
   /** Slice `i` of 4: keys [50i, 50i+50), strings `s%03d` in key order,
     * `n` NULL on the even slices, partition value `p` = a/b by parity.
@@ -110,10 +95,10 @@ class TableLayerSpec extends AnyFunSuite {
 
   test("TxLog reads and graft-table reads skip the same files for every " +
       "predicate class, on the eager and the pruned planning path") {
-    val ident = tmpDir("tlident")
+    val ident = tableDir("tlident")
     (0 until 4).foreach(i =>
       TxLog.appendPartitioned(spark, ident, slice(i).coalesce(1), Seq("p")))
-    val bucketed = tmpDir("tlbucket")
+    val bucketed = tableDir("tlbucket")
     (0 until 4).foreach(i =>
       TxLog.appendTransformPartitioned(spark, bucketed,
         slice(i).coalesce(1), Seq("bucket(4,k)")))
@@ -128,7 +113,7 @@ class TableLayerSpec extends AnyFunSuite {
 
   test("a commit refused by a future writer protocol fails by name and " +
       "leaves no staged file, on every writer that retries at the tip") {
-    val root = tmpDir("tlproto")
+    val root = tableDir("tlproto")
     TxLog.append(spark, root, slice(0))
     Files.writeString(Paths.get(f"$root/_txlog/${1}%08d.json"),
       """{"v":1,"op":"set-protocol","adds":[],"removes":[],""" +
@@ -162,7 +147,7 @@ class TableLayerSpec extends AnyFunSuite {
 
   test("a metadata commit that loses its version race to a set-protocol " +
       "commit re-checks the writer protocol before it retries") {
-    val root = tmpDir("tlprotorace")
+    val root = tableDir("tlprotorace")
     TxLog.append(spark, root, slice(0)) // v0
     val fired = new java.util.concurrent.atomic.AtomicBoolean(false)
     graft.ops.TxIo.wrapper = inner => new DelegatingIo(inner) {
@@ -187,31 +172,9 @@ class TableLayerSpec extends AnyFunSuite {
     assert(TxLog.constraints(root).isEmpty)
   }
 
-  /** Pass-through TxIo for targeted interception. */
-  private class DelegatingIo(inner: graft.ops.TxIo)
-      extends graft.ops.TxIo {
-    override def putIfAbsent(path: String, content: String): Unit =
-      inner.putIfAbsent(path, content)
-    override def read(path: String): String = inner.read(path)
-    override def list(dir: String): Seq[String] = inner.list(dir)
-    override def listRecursive(dir: String): Seq[String] =
-      inner.listRecursive(dir)
-    override def exists(path: String): Boolean = inner.exists(path)
-    override def mkdirs(dir: String): Unit = inner.mkdirs(dir)
-    override def delete(path: String): Unit = inner.delete(path)
-    override def deleteIfExists(path: String): Unit =
-      inner.deleteIfExists(path)
-    override def deleteRecursive(dir: String): Unit =
-      inner.deleteRecursive(dir)
-    override def move(src: String, dst: String): Unit =
-      inner.move(src, dst)
-    override def size(path: String): Long = inner.size(path)
-    override def mtime(path: String): Long = inner.mtime(path)
-  }
-
   test("every part file of a cdc change feed has one schema, whatever " +
       "the batch (metadata-only, snapshot, insert or delete interval)") {
-    val table = tmpDir("tlcdc")
+    val table = tableDir("tlcdc")
     val out = Files.createTempDirectory("tlcdcfeed").toString
     TxLog.addConstraint(spark, table, "k_nonneg", "k >= 0") // v0
     TxLog.append(spark, table, slice(0).select("k", "s"))   // v1
