@@ -2,9 +2,11 @@ package graft.search
 
 import java.util.regex.{Matcher, Pattern}
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** End-to-end batch search: the Spark restatement of the reference's
   * query lifecycle (`code/query/QueryMapred.java:207-239` +
@@ -12,9 +14,9 @@ import org.apache.spark.sql.functions._
   * boolean algebra as per-document score expressions -> rank ->
   * paginate -> fetch docs -> snippet and highlight. Like the reference's
   * single query job, one call is one pruned index scan whatever the
-  * number of queries; pagination is a window over an already
-  * top-k-limited result, never a global single-partition sort of the full
-  * result set.
+  * number of queries; a page is a limit and an offset over the ranking,
+  * and a page is rendered from point reads of its documents, never a
+  * join with the whole corpus.
   */
 object SearchEngine {
 
@@ -117,18 +119,26 @@ object SearchEngine {
       .orderBy(desc("score"), asc("doc_id"))
   }
 
-  /** One result page (1-based `page`): top `page*PageSize` rows only are
-    * ever sorted/collected (TakeOrdered), then the window numbers that
-    * small prefix. Mirrors `SearchResult` paging + overflow clamp to the
+  /** One result page (1-based `page`): rows `(page-1)*PageSize+1` to
+    * `page*PageSize` of a ranking, as a limit and an offset. Over a sorted
+    * plan Spark runs it as one `TakeOrderedAndProject`, which sorts only
+    * the top `page*PageSize` rows; over a collected ranking (a
+    * [[QueryCache.searchCached]] miss) it folds into a local relation and
+    * runs no job. Mirrors `SearchResult` paging + overflow clamp to the
     * last page (`util/SearchResult.java:33-46`, `util/CorpusFetcher
     * .java:88` — clamping is the caller's job here via `count`).
     */
-  def page(ranked: DataFrame, page: Int): DataFrame = {
-    val w = Window.orderBy(desc("score"), asc("doc_id"))
-    ranked.limit(page * PageSize)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") > (page - 1) * PageSize)
-      .drop("rn")
+  def page(ranked: DataFrame, page: Int): DataFrame =
+    ranked.limit(page * PageSize).offset((page - 1) * PageSize)
+
+  /** The ranked order of `(doc_id LONG, score DOUBLE)` rows on the
+    * driver: score descending, doc_id ascending. Scores compare as
+    * Spark's sort compares them (-0.0 equals 0.0, NaN is largest).
+    */
+  private[search] val RankOrder: Ordering[Row] = (a: Row, b: Row) => {
+    val (sa, sb) = (a.getDouble(1), b.getDouble(1))
+    val byScore = if (sa == sb) 0 else java.lang.Double.compare(sb, sa)
+    if (byScore != 0) byScore else java.lang.Long.compare(a.getLong(0), b.getLong(0))
   }
 
   /** F7: HTML entity decode of the stored-HTML corpus variant
@@ -222,31 +232,51 @@ object SearchEngine {
     graft.functions.SnippetHighlight.of(content,
       array(highlights.map(lit): _*).cast("array<string>"))
 
-  /** J9 + F9/F10/F11: join a ranked page with the corpus (the result side
-    * is tiny -> broadcast, the reference's loop of MapFile point-gets)
-    * and render highlighted snippets.
+  /** J9 + F9/F10/F11: render a ranked page `(doc_id LONG, score DOUBLE)`
+    * against a corpus `(doc_id, text)` as `(doc_id, score, snippet)`.
+    * See [[renderCorpusPage]] for how the page is read.
     */
-  def renderPage(pageDf: DataFrame, docs: DataFrame, query: String): DataFrame = {
-    val highlights = QueryParser.highlightWords(query)
-    docs.join(broadcast(pageDf), "doc_id")
-      .select(col("doc_id"), col("score"),
-        snippetCol(col("text"), highlights).as("snippet"))
-      .orderBy(desc("score"), asc("doc_id"))
-  }
+  def renderPage(pageDf: DataFrame, docs: DataFrame, query: String): DataFrame =
+    render(pageDf, docs,
+      snippetCol(col("text"), QueryParser.highlightWords(query)).as("snippet"))
 
   /** Render a page against a STORED corpus `(doc_id, content)` where the
     * first line is the title (the reference's on-disk convention,
     * `util/CorpusFetcher.java:106-107`): extract the title, snippet the
     * body. Returns `(doc_id, score, title, snippet)`.
+    *
+    * The page's rows (at most [[PageSize]]) are collected, their
+    * documents read by one corpus scan with `doc_id IN (ids)` pushed into
+    * it — the reference's loop of MapFile point gets
+    * (`util/CorpusFetcher.java:97,249`) — and the rendered rows are
+    * ranked on the driver and returned as a local DataFrame: one job over
+    * a collected page, two over a lazy one.
     */
   def renderCorpusPage(pageDf: DataFrame, corpus: DataFrame, query: String): DataFrame = {
-    val highlights = QueryParser.highlightWords(query)
-    val title = graft.sources.Corpus.titleOf(col("content"))
-    val body = graft.sources.Corpus.bodyOf(col("content"))
-    corpus.join(broadcast(pageDf), "doc_id")
-      .select(col("doc_id"), col("score"), title.as("title"),
-        snippetCol(body, highlights).as("snippet"))
-      .orderBy(desc("score"), asc("doc_id"))
+    val content = col("content")
+    render(pageDf, corpus, graft.sources.Corpus.titleOf(content).as("title"),
+      snippetCol(graft.sources.Corpus.bodyOf(content), QueryParser.highlightWords(query))
+        .as("snippet"))
+  }
+
+  /** The one render body: `(doc_id, score, fields...)` for the page's
+    * documents found in `corpus`, in ranked order. A document the corpus
+    * lacks drops out, as in an inner join.
+    */
+  private def render(pageDf: DataFrame, corpus: DataFrame, fields: Column*): DataFrame = {
+    val page = pageDf.select("doc_id", "score")
+    val rows = page.collect().sorted(RankOrder)
+    val docs = corpus.select(col("doc_id") +: fields: _*)
+    val ids = rows.map(_.getLong(0)).distinct
+    val found = if (ids.isEmpty) Array.empty[Row]
+      else docs.filter(col("doc_id").isin(ids: _*)).collect()
+    val byId = found.groupBy(_.get(0))
+    val rendered = rows.toSeq.flatMap { p =>
+      byId.getOrElse(p.get(0), Array.empty[Row])
+        .map(d => Row.fromSeq(d.get(0) +: p.get(1) +: d.toSeq.tail))
+    }
+    val schema = StructType(docs.schema.head +: page.schema(1) +: docs.schema.tail)
+    pageDf.sparkSession.createDataFrame(rendered.asJava, schema)
   }
 
   /** S8: point lookup of one document — pushdown predicate on the corpus

@@ -8,7 +8,7 @@ import java.nio.file.{Files, Path}
 class CliSpec extends SparkSuite {
 
   private def indexPath(): String =
-    Files.createTempDirectory("graft-cli-spec-").resolve("idx").toString
+    tmpDir("graft-cli-spec-") + "/idx"
 
   test("stop words: no list next to the index means none") {
     assert(Cli.stopWords(spark, indexPath()) == Set.empty)

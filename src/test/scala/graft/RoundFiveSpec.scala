@@ -270,7 +270,7 @@ class RoundFiveSpec extends SparkSuite {
 
   test("csv round trip: documents survive write/read with explicit schema") {
     val docs = sources.Tables(spark, "/root/testdata/sf0.001", "documents")
-    val dir = java.nio.file.Files.createTempDirectory("graft-csv-").toString
+    val dir = tmpDir("graft-csv-")
     // quote/escape defaults handle embedded commas/quotes; header keeps
     // the file self-describing, the explicit schema avoids an inference
     // pass (a second full read at scale)
@@ -281,7 +281,7 @@ class RoundFiveSpec extends SparkSuite {
 
   test("orc round trip: documents survive write/read") {
     val docs = sources.Tables(spark, "/root/testdata/sf0.001", "documents")
-    val dir = java.nio.file.Files.createTempDirectory("graft-orc-").toString
+    val dir = tmpDir("graft-orc-")
     docs.write.mode("overwrite").orc(dir)
     val back = spark.read.orc(dir)
     assert(back.exceptAll(docs).count() == 0 && docs.exceptAll(back).count() == 0)
@@ -291,7 +291,7 @@ class RoundFiveSpec extends SparkSuite {
 
   test("compactParquet bin-packs small files without losing rows") {
     val docs = sources.Tables(spark, "/root/testdata/sf0.001", "documents")
-    val base = java.nio.file.Files.createTempDirectory("graft-compact-").toString
+    val base = tmpDir("graft-compact-")
     docs.repartition(50).write.mode("overwrite").parquet(s"$base/small")
     val (_, before) = graft.ops.Maintenance.parquetStats(spark, s"$base/small")
     assert(before == 50)
@@ -349,7 +349,7 @@ class RoundFiveSpec extends SparkSuite {
   test("streaming index maintenance equals a full batch rebuild") {
     import java.nio.file.{Files, Paths}
     val docs = sources.Tables(spark, "/root/testdata/sf0.001", "documents")
-    val base = Files.createTempDirectory("graft-stream-idx-").toString
+    val base = tmpDir("graft-stream-idx-")
     val streamDir = s"$base/in"; Files.createDirectories(Paths.get(streamDir))
     val statsPath = s"$base/stats"
     // two arrival batches: even docs land first, odd docs second
@@ -403,7 +403,7 @@ class RoundFiveSpec extends SparkSuite {
   test("streamingCleanIngest lands only new docs; replays rewrite identically") {
     import java.nio.file.{Files, Paths}
     import spark.implicits._
-    val base = Files.createTempDirectory("graft-ingest-").toString
+    val base = tmpDir("graft-ingest-")
     val in = s"$base/in"; Files.createDirectories(Paths.get(in))
     def land(name: String, mtime: Long, rows: Seq[(Long, Option[String])]): Unit = {
       val tmp = s"$base/$name-tmp"
@@ -456,8 +456,7 @@ class RoundFiveSpec extends SparkSuite {
   }
 
   test("maintainedStats on a not-yet-written path is an empty stats table") {
-    val missing = java.nio.file.Files
-      .createTempDirectory("graft-missing-").toString + "/never_written"
+    val missing = tmpDir("graft-missing-") + "/never_written"
     val r = graft.streaming.StreamingOps.maintainedStats(spark, missing)
     assert(r.count() == 0 &&
       r.columns.toSeq == Seq("term", "doc_id", "tf", "positions"))

@@ -146,7 +146,7 @@ class RoundFourSpec extends SparkSuite {
       .select("user_id", "event_id_a", "event_id_b", "gap_us")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       .toSet
-    val dir = java.nio.file.Files.createTempDirectory("graft-rj-stream-").toString
+    val dir = tmpDir("graft-rj-stream-")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$testdata/events.parquet"),
       java.nio.file.Paths.get(dir, "events.parquet"))
@@ -244,7 +244,7 @@ class RoundFourSpec extends SparkSuite {
 
   test("jsonl round trip: documents survive write/read with explicit schema") {
     val docs = graft.search.Indexer.documents(spark, testdata)
-    val dir = java.nio.file.Files.createTempDirectory("graft-jsonl-").toString
+    val dir = tmpDir("graft-jsonl-")
     docs.write.mode("overwrite").json(dir)
     // explicit schema: schema inference is a second full read at scale
     val back = spark.read.schema(docs.schema).json(dir)

@@ -33,7 +33,7 @@ class RoundNineteenSpec extends SparkSuite {
   }
 
   test("at-rest JSONL: explicit-schema read reproduces the table, bad lines quarantine") {
-    val base = java.nio.file.Files.createTempDirectory("graft-jsonl-").toString
+    val base = tmpDir("graft-jsonl-")
     DelimitedScan.writeJsonl(codecDocs, s"$base/docs")
     val back = DelimitedScan.readJsonl(spark, s"$base/docs")
     assert(asSet(back) === asSet(codecDocs))
@@ -72,7 +72,7 @@ class RoundNineteenSpec extends SparkSuite {
     val s = spark
     import s.implicits._
     import java.nio.file.{Files, Paths}
-    val base = Files.createTempDirectory("graft-stream-kmv-").toString
+    val base = tmpDir("graft-stream-kmv-")
     val in = s"$base/in"; Files.createDirectories(Paths.get(in))
     val all = (1 to 600).map(i => (s"g${i % 2}", i % 97))
     val halves = all.grouped(300).toSeq

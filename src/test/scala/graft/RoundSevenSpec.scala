@@ -260,7 +260,7 @@ class RoundSevenSpec extends SparkSuite {
 
   test("streamingDedupWithinWatermark collapses duplicates with DIFFERENT ts") {
     val sfDir = "/root/testdata/sf0.001"
-    val streamDir = java.nio.file.Files.createTempDirectory("graft_ddww_")
+    val streamDir = java.nio.file.Paths.get(tmpDir("graft_ddww_"))
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sfDir/events.parquet"),
       streamDir.resolve("events.parquet"))
@@ -323,7 +323,7 @@ class RoundSevenSpec extends SparkSuite {
     val rnd = new scala.util.Random(11)
     val rows = Seq.fill(20000)((rnd.nextInt(65536).toLong, rnd.nextInt(65536).toLong))
     val df = rows.toDF("x", "y")
-    val dir = java.nio.file.Files.createTempDirectory("graft-zorder-").toString
+    val dir = tmpDir("graft-zorder-")
     Maintenance.zorderLayout(df, Seq("x", "y"), numFiles = 16)
       .write.mode("overwrite").parquet(dir)
     // per-file (max-min) spread in each dim: a z-ordered layout confines

@@ -41,7 +41,7 @@ class RoundSeventeenSpec extends SparkSuite {
   test("at-rest mergeIndex round-trips and keeps probe ≡ brute force") {
     implicit val sp: SparkSession = spark
     import sp.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-trgm-inc-").toString
+    val dir = tmpDir("graft-trgm-inc-")
     val oldDocs = (1L to 60L).map(i => (i, s"payload number $i sort merge"))
       .toDF("doc_id", "text")
     val batch = ((61L to 80L).map(i => (i, s"fresh batch row $i hash join")) ++

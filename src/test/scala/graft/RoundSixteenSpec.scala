@@ -194,7 +194,7 @@ class RoundSixteenSpec extends SparkSuite {
     val s = spark
     import s.implicits._
     import java.nio.file.{Files, Paths}
-    val base = Files.createTempDirectory("graft-stream-scd2-").toString
+    val base = tmpDir("graft-stream-scd2-")
     val in = s"$base/in"; Files.createDirectories(Paths.get(in))
     val hist = s"$base/hist"
     val b0 = Seq((1L, "v1", 10L), (2L, "v2", 10L)).toDF("k", "v", "ts")
@@ -272,7 +272,7 @@ class RoundSixteenSpec extends SparkSuite {
     import s.implicits._
     val docs = (1L to 100L).map(i => (i, s"payload text number $i here"))
       .toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft-trgm-").toString
+    val dir = tmpDir("graft-trgm-")
     graft.search.SubstringIndex.writeIndex(
       graft.search.SubstringIndex.trigramPostings(docs), s"$dir/idx",
       numFiles = 8)
@@ -290,7 +290,7 @@ class RoundSixteenSpec extends SparkSuite {
   test("pruneSnapshotVersions keeps the newest complete versions only") {
     val s = spark
     import s.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft-prune-").toString
+    val base = tmpDir("graft-prune-")
     val df = Seq((1L, "x")).toDF("k", "v")
     for (i <- 0L to 4L) df.write.mode("overwrite").parquet(s"$base/version=$i")
     // fake a crashed half-write: version=5 without _SUCCESS

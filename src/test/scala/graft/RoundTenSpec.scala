@@ -141,7 +141,7 @@ class RoundTenSpec extends SparkSuite {
   test("streamingUpsert maintains the SCD-1 snapshot across batches and replay") {
     import spark.implicits._
     import java.nio.file.{Files, Paths}
-    val base = Files.createTempDirectory("graft-stream-ups-").toString
+    val base = tmpDir("graft-stream-ups-")
     val in = s"$base/in"; Files.createDirectories(Paths.get(in))
     val snap = s"$base/snap"
     val b0 = Seq(
@@ -255,7 +255,7 @@ class RoundTenSpec extends SparkSuite {
     val qVec = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .filter(col("vec_id") === 0).select("embedding")
       .first().getSeq[Float](0).map(_.toDouble)
-    val path = java.nio.file.Files.createTempDirectory("graft-pq-").toString + "/pq"
+    val path = tmpDir("graft-pq-") + "/pq"
     AnnIndex.pqWrite(e, path)
     // reload from disk: the codebooks round-trip through parquet
     val model = AnnIndex.pqLoad(spark, path)

@@ -235,7 +235,7 @@ class RoundThirteenSpec extends SparkSuite {
     import java.nio.file.{Files, Paths}
     val s = spark
     import s.implicits._
-    val base = Files.createTempDirectory("graft-qgate-").toString
+    val base = tmpDir("graft-qgate-")
     val in = s"$base/in"; Files.createDirectories(Paths.get(in))
     def land(name: String, mtime: Long,
              rows: Seq[(Option[Long], Double)]): Unit = {

@@ -113,7 +113,7 @@ class RoundTwentyOneSpec extends SparkSuite {
     import s.implicits._
     import java.nio.file.{Files, Paths}
     import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    val base = Files.createTempDirectory("graft-stream-redeliver-").toString
+    val base = tmpDir("graft-stream-redeliver-")
 
     // ---- KMV distinct: a late at-least-once upstream re-emits batch0
     // as a brand-new file; the RESUMED query folds it as a NEW state
@@ -190,9 +190,24 @@ class RoundTwentyOneSpec extends SparkSuite {
     val index = graft.search.Indexer.postings(docs)
     val ranked = graft.search.SearchEngine.search("alpha beta", index, docs)
     val page = graft.search.SearchEngine.page(ranked, 1)
-    val rendered = graft.search.SearchEngine.renderPage(page, docs, "alpha beta")
-    val plan = rendered.queryExecution.executedPlan.toString
-    assert(!plan.contains("UDF"), s"page render still plans a UDF:\n$plan")
+    // the render collects its result: its snippets are computed by the
+    // corpus scan it runs, so that scan's plan is the one to inspect
+    val atRest = tmpDir("graft-render-") + "/docs"
+    docs.write.parquet(atRest)
+    val plans = new java.util.concurrent.LinkedBlockingQueue[String]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        plans.put(qe.executedPlan.toString)
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val (rendered, plan) =
+      try (graft.search.SearchEngine.renderPage(page, spark.read.parquet(atRest), "alpha beta"),
+        Iterator.continually(plans.poll(60, java.util.concurrent.TimeUnit.SECONDS))
+          .takeWhile(_ != null).find(_.contains("snippethighlight")))
+      finally spark.listenerManager.unregister(listener)
+    assert(plan.isDefined, "no render scan computed the snippets")
+    assert(!plan.get.contains("UDF"), s"page render still plans a UDF:\n${plan.get}")
     val texts = docs.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     val hl = graft.search.QueryParser.highlightWords("alpha beta")
     val got = rendered.collect().map(r => r.getLong(0) -> r.getString(2)).toMap

@@ -91,7 +91,7 @@ class RoundTwentySpec extends SparkSuite {
     val s = spark
     import s.implicits._
     import java.nio.file.{Files, Paths}
-    val base = Files.createTempDirectory("graft-stream-mg-").toString
+    val base = tmpDir("graft-stream-mg-")
     val in = s"$base/in"; Files.createDirectories(Paths.get(in))
     val all = zipfKeys(8000, 25, seed = 31).collect()
       .map(r => (r.getLong(0), r.getString(1))).toSeq

@@ -72,8 +72,7 @@ class RoundTwentyThreeSpec extends SparkSuite {
       (i, vec((i % 3).toInt, 0.01 * (i % 5)))).toDF("vec_id", "embedding")
     val batch = (21L to 26L).map(i =>
       (i, vec((i % 3).toInt, 0.015 * (i % 4)))).toDF("vec_id", "embedding")
-    val path = java.nio.file.Files
-      .createTempDirectory("graft-ivfapd-").toString + "/ivf"
+    val path = tmpDir("graft-ivfapd-") + "/ivf"
     val model = AnnIndex.ivfWriteExact(base, path, k = 3, rounds = 1)
     AnnIndex.ivfAppend(model, batch)
 
@@ -126,7 +125,7 @@ class RoundTwentyThreeSpec extends SparkSuite {
     val s = spark
     import s.implicits._
     import java.nio.file.{Files, Paths}
-    val root = Files.createTempDirectory("graft-serve-").toString
+    val root = tmpDir("graft-serve-")
     val in = s"$root/docs-in"; Files.createDirectories(Paths.get(in))
     val statsPath = s"$root/stats"; val ckpt = s"$root/ckpt"
 

@@ -125,7 +125,7 @@ class RoundTwentyTwoSpec extends SparkSuite {
   test("binaryFile ingest classifies real containers by magic bytes") {
     import graft.ops.Multimodal
     val s = spark
-    val dir = java.nio.file.Files.createTempDirectory("graft-media-")
+    val dir = java.nio.file.Paths.get(tmpDir("graft-media-"))
     // real PNG (JDK encoder)
     val img = new java.awt.image.BufferedImage(4, 3,
       java.awt.image.BufferedImage.TYPE_INT_RGB)

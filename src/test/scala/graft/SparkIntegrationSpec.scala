@@ -276,7 +276,7 @@ class SparkIntegrationSpec extends SparkSuite {
     val batch = StreamingOps.windowedCounts(
       graft.sources.Tables.events(spark, testdata)).collect()
     // file-stream sources require a directory: stage the single file
-    val streamDir = java.nio.file.Files.createTempDirectory("graft_stream")
+    val streamDir = java.nio.file.Paths.get(tmpDir("graft_stream"))
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$testdata/events.parquet"),
       streamDir.resolve("events.parquet"))
@@ -306,7 +306,7 @@ class SparkIntegrationSpec extends SparkSuite {
     assert(native == batch)
 
     // streaming smoke: same aggregation under a watermark, append mode
-    val streamDir = java.nio.file.Files.createTempDirectory("graft_sess_stream")
+    val streamDir = java.nio.file.Paths.get(tmpDir("graft_sess_stream"))
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$testdata/events.parquet"),
       streamDir.resolve("events.parquet"))
@@ -456,7 +456,7 @@ class SparkIntegrationSpec extends SparkSuite {
   }
 
   test("streaming dedup drops duplicate keys within the watermark") {
-    val streamDir = java.nio.file.Files.createTempDirectory("graft_dedup_stream")
+    val streamDir = java.nio.file.Paths.get(tmpDir("graft_dedup_stream"))
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$testdata/events.parquet"),
       streamDir.resolve("events.parquet"))
@@ -512,7 +512,7 @@ class SparkIntegrationSpec extends SparkSuite {
   }
 
   test("query cache: miss computes and stores, hit returns same result") {
-    val path = java.nio.file.Files.createTempDirectory("graft_qcache").toString + "/cache"
+    val path = tmpDir("graft_qcache") + "/cache"
     val cache = new QueryCache(spark, path)
     assert(cache.get("spark and data").isEmpty)
     val first = cache.searchCached("spark and data", index, documents)
@@ -535,7 +535,7 @@ class SparkIntegrationSpec extends SparkSuite {
 
   /** A fresh, not yet created cache directory. */
   def newCachePath(): String =
-    java.nio.file.Files.createTempDirectory("graft_qcache").toString + "/cache"
+    tmpDir("graft_qcache") + "/cache"
 
   /** Every file under `root` named by `p`. */
   def filesUnder(root: String)(p: String => Boolean): Seq[java.nio.file.Path] = {
@@ -624,6 +624,77 @@ class SparkIntegrationSpec extends SparkSuite {
     assert(entryDirs(path) == entryDirs(written))
   }
 
+  /** `documents` as a stored corpus `(doc_id, content)`, title first. */
+  def storedCorpus: DataFrame = documents.select(col("doc_id"),
+    concat(lit("doc-"), col("doc_id").cast("string"), lit("\n"), col("text")).as("content"))
+
+  test("query cache: a miss renders page 1 in 3 Spark jobs, its repeat in 2") {
+    val cache = new QueryCache(spark, newCachePath())
+    val q = "spark or data"
+    def issue(): Seq[org.apache.spark.sql.Row] = SearchEngine.renderCorpusPage(
+      SearchEngine.page(cache.searchCached(q, index, documents), 1), storedCorpus, q)
+      .collect().toSeq
+    var miss, hit = Seq.empty[org.apache.spark.sql.Row]
+    val missJobs = jobsDuring { miss = issue() }
+    assert(cache.get(q).isDefined)
+    val hitJobs = jobsDuring { hit = issue() }
+    assert(missJobs <= 3, s"a miss ran $missJobs jobs")
+    assert(hitJobs <= 2, s"a hit ran $hitJobs jobs")
+    assert(miss.length == SearchEngine.PageSize && hit == miss)
+    // paging the ranking a miss returns runs no job
+    val ranked = new QueryCache(spark, newCachePath()).searchCached(q, index, documents)
+    assert(jobsDuring(SearchEngine.page(ranked, 2).collect()) == 0)
+  }
+
+  test("page k is rows (k-1)*10+1 to k*10 of the ranking, ties by doc_id") {
+    // scores rounded to one decimal, so that many documents tie
+    val coarse = index.withColumn("score", round(col("score"), 1))
+    val q = "spark or data"
+    val ranking = SearchEngine.searchMany(Seq(q), coarse, documents)
+      .select("doc_id", "score").collect().map(r => (r.getLong(0), r.getDouble(1)))
+      .sortBy { case (id, s) => (-s, id) }.toSeq
+    assert(ranking.length > 3 * SearchEngine.PageSize)
+    assert(ranking.take(3 * SearchEngine.PageSize).map(_._2).distinct.length <
+      3 * SearchEngine.PageSize, "the first three pages have no tie")
+    val cache = new QueryCache(spark, newCachePath())
+    val miss = cache.searchCached(q, coarse, documents)
+    val inputs = Seq("sorted plan" -> SearchEngine.search(q, coarse, documents),
+      "cache hit" -> cache.get(q).get, "miss ranking" -> miss)
+    for ((what, ranked) <- inputs; k <- 1 to 3)
+      assert(pairs(SearchEngine.page(ranked, k)) ==
+        ranking.slice((k - 1) * SearchEngine.PageSize, k * SearchEngine.PageSize),
+        s"page $k of the $what")
+  }
+
+  test("query cache: a driver-written entry reads as one Spark wrote") {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val rows = spark.createDataFrame(java.util.List.of(
+      org.apache.spark.sql.Row(3L, 0.5), org.apache.spark.sql.Row(1L, 2.0)), QueryCache.Schema)
+    val byDriver = newCachePath()
+    new QueryCache(spark, byDriver).put("spark and data", rows)
+    val bySpark = newCachePath()
+    rows.write.parquet(new QueryCache(spark, bySpark).entry("spark and data").toString)
+    val (d, s) = (spark.read.parquet(byDriver), spark.read.parquet(bySpark))
+    assert(d.schema.map(f => (f.name, f.dataType, f.nullable)) ==
+      s.schema.map(f => (f.name, f.dataType, f.nullable)))
+    assert(pairs(d.select("doc_id", "score").orderBy("doc_id")) ==
+      pairs(s.select("doc_id", "score").orderBy("doc_id")))
+    // the part files declare the same parquet columns: `optional`, as
+    // Spark writes a nullable column
+    def footer(root: String) = {
+      val f = filesUnder(root)(n => n.startsWith("part-") && n.endsWith(".parquet")).head
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(f.toString), spark.sparkContext.hadoopConfiguration))
+      try r.getFileMetaData.getSchema finally r.close()
+    }
+    assert(footer(byDriver) == footer(bySpark))
+    // an empty result's entry reads as 0 rows
+    val empty = newCachePath()
+    new QueryCache(spark, empty).put("zzzmissing", rows.limit(0))
+    assert(spark.read.parquet(empty).count() == 0)
+  }
+
   test("search compiler runs unchanged over a BM25-scored index") {
     val bm25Idx = graft.search.Scoring.bm25Postings(documents)
     val tfidfDocs = SearchEngine.search("spark and data", index, documents)
@@ -636,7 +707,7 @@ class SparkIntegrationSpec extends SparkSuite {
   }
 
   test("xml scan: file ingestion via lineSep record delimiter") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_xml")
+    val dir = java.nio.file.Paths.get(tmpDir("graft_xml"))
     val xml = graft.sources.XmlScan.toPageXml(documents.limit(20))
       .collect().map(_.getString(1)).mkString("\n")
     java.nio.file.Files.writeString(dir.resolve("dump.xml"), xml)

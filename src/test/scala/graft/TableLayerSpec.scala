@@ -175,7 +175,7 @@ class TableLayerSpec extends SparkSuite {
   test("every part file of a cdc change feed has one schema, whatever " +
       "the batch (metadata-only, snapshot, insert or delete interval)") {
     val table = tableDir("tlcdc")
-    val out = Files.createTempDirectory("tlcdcfeed").toString
+    val out = tmpDir("tlcdcfeed")
     TxLog.addConstraint(spark, table, "k_nonneg", "k >= 0") // v0
     TxLog.append(spark, table, slice(0).select("k", "s"))   // v1
     TxLog.append(spark, table, slice(1).select("k", "s"))   // v2
