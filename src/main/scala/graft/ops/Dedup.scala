@@ -94,33 +94,47 @@ object Dedup {
     * owns materialization (pass an eagerly checkpointed table).
     */
   def ngramJaccardFromShingles(sh: DataFrame, minJ: Double,
-                               maxShingleFreq: Int = Int.MaxValue): DataFrame = {
-    val sizes = sh.groupBy("doc_id").agg(count("*").as("n_shingles"))
-    // adaptive: when the guard is off OR no shingle actually exceeds it
-    // (one cheap aggregation to check — planning-time statistics, like
-    // the search compiler's df fetch), the single self-join exact path
-    // runs; the two-phase candidates+verify shape is only paid when hot
-    // shingles exist and the k^2 blowup is real
-    def guardTriggers: Boolean =
-      !sh.groupBy("shingle").agg(count("*").as("freq"))
-        .filter(col("freq") > maxShingleFreq).isEmpty
-    val inter =
-      if (maxShingleFreq == Int.MaxValue || !guardTriggers)
-        exactPairCommonCounts(sh)
-      else guardedPairCommonCounts(sh, maxShingleFreq)
-    inter
-      .join(sizes.withColumnRenamed("doc_id", "doc_a")
-        .withColumnRenamed("n_shingles", "na"), "doc_a")
-      .join(sizes.withColumnRenamed("doc_id", "doc_b")
-        .withColumnRenamed("n_shingles", "nb"), "doc_b")
-      .withColumn("jaccard",
-        col("n_common").cast("double") / (col("na") + col("nb") - col("n_common")))
+                               maxShingleFreq: Int = Int.MaxValue): DataFrame =
+    selfOverlap(sh, maxShingleFreq)
+      .withColumn("jaccard", jaccardCol(col("n_common"), col("na"), col("nb")))
       .filter(col("jaccard") >= minJ)
       .select("doc_a", "doc_b", "jaccard")
       // checkpoint the SMALL result so the returned plan stops
       // referencing the big shingle-table blocks — they become
       // GC-reclaimable now instead of living as long as the result plan
       .localCheckpoint(true)
+
+  /** Shingle Jaccard `|A ∩ B| / |A ∪ B|` from the intersection size and
+    * both set sizes — one division, the same arithmetic in the self
+    * ([[ngramJaccardFromShingles]]), cross ([[crossJaccardFromShingles]])
+    * and MinHash ([[verifyPairs]]) paths, so a pair's jaccard does not
+    * depend on which path scored it.
+    */
+  private def jaccardCol(nCommon: Column, na: Column, nb: Column): Column =
+    nCommon.cast("double") / (na + nb - nCommon)
+
+  /** The self-overlap scaffold of [[ngramJaccardFromShingles]] and
+    * [[containmentFromShingles]]: `(doc_a < doc_b, n_common, na, nb)`
+    * for every pair sharing a shingle, with both docs' shingle counts.
+    * Adaptive: when the guard is off OR no shingle actually exceeds it
+    * (one cheap aggregation to check — planning-time statistics, like
+    * the search compiler's df fetch), the single self-join exact path
+    * runs; the two-phase candidates+verify shape is only paid when hot
+    * shingles exist and the k^2 blowup is real.
+    */
+  private def selfOverlap(sh: DataFrame, maxShingleFreq: Int): DataFrame = {
+    val sizes = sh.groupBy("doc_id").agg(count("*").as("n_shingles"))
+    val hot = sh.groupBy("shingle").agg(count("*").as("freq"))
+      .filter(col("freq") > maxShingleFreq)
+    val inter =
+      if (maxShingleFreq == Int.MaxValue || hot.isEmpty)
+        exactPairCommonCounts(sh)
+      else guardedPairCommonCounts(sh, hot)
+    inter
+      .join(sizes.withColumnRenamed("doc_id", "doc_a")
+        .withColumnRenamed("n_shingles", "na"), "doc_a")
+      .join(sizes.withColumnRenamed("doc_id", "doc_b")
+        .withColumnRenamed("n_shingles", "nb"), "doc_b")
   }
 
   /** Exact per-pair common-shingle counts: one self-equi-join on the
@@ -140,9 +154,7 @@ object Dedup {
     * hot shingle's k^2). The hot list is small, so it broadcasts.
     */
   private def guardedPairCommonCounts(sh: DataFrame,
-                                      maxShingleFreq: Int): DataFrame = {
-    val hot = sh.groupBy("shingle").agg(count("*").as("freq"))
-      .filter(col("freq") > maxShingleFreq)
+                                      hot: DataFrame): DataFrame = {
     val filtered = sh.join(broadcast(hot.select("shingle")), Seq("shingle"), "left_anti")
     val candidates = filtered.select(col("doc_id").as("doc_a"), col("shingle"))
       .join(filtered.select(col("doc_id").as("doc_b"), col("shingle")), Seq("shingle"))
@@ -178,26 +190,13 @@ object Dedup {
     * [[ngramJaccardFromShingles]]).
     */
   def containmentFromShingles(sh: DataFrame, minC: Double,
-                              maxShingleFreq: Int = Int.MaxValue): DataFrame = {
-    val sizes = sh.groupBy("doc_id").agg(count("*").as("n_shingles"))
-    def guardTriggers: Boolean =
-      !sh.groupBy("shingle").agg(count("*").as("freq"))
-        .filter(col("freq") > maxShingleFreq).isEmpty
-    val inter =
-      if (maxShingleFreq == Int.MaxValue || !guardTriggers)
-        exactPairCommonCounts(sh)
-      else guardedPairCommonCounts(sh, maxShingleFreq)
-    inter
-      .join(sizes.withColumnRenamed("doc_id", "doc_a")
-        .withColumnRenamed("n_shingles", "na"), "doc_a")
-      .join(sizes.withColumnRenamed("doc_id", "doc_b")
-        .withColumnRenamed("n_shingles", "nb"), "doc_b")
+                              maxShingleFreq: Int = Int.MaxValue): DataFrame =
+    selfOverlap(sh, maxShingleFreq)
       .withColumn("containment_a", col("n_common").cast("double") / col("na"))
       .withColumn("containment_b", col("n_common").cast("double") / col("nb"))
       .filter(greatest(col("containment_a"), col("containment_b")) >= minC)
       .select("doc_a", "doc_b", "containment_a", "containment_b")
       .localCheckpoint(true)
-  }
 
   /** Cross-corpus near-dup Jaccard — FUZZY decontamination: every
     * (corpus doc, held-out doc) pair with shingle Jaccard >= `minJ`.
@@ -245,8 +244,7 @@ object Dedup {
     inter
       .join(sizesA.withColumnRenamed("doc_id", "doc_a"), "doc_a")
       .join(broadcast(sizesB.withColumnRenamed("doc_id", "doc_b")), "doc_b")
-      .withColumn("jaccard", col("n_common").cast("double") /
-        (col("na") + col("nb") - col("n_common")))
+      .withColumn("jaccard", jaccardCol(col("n_common"), col("na"), col("nb")))
       .filter(col("jaccard") >= minJ)
       .select("doc_a", "doc_b", "jaccard")
   }
@@ -352,7 +350,7 @@ object Dedup {
     // pushed under it, inlining the tokenizer expression into the
     // shingle transform lambda — re-tokenizing per array element
     // (measured 6× slower). Shingle-less docs ride through as one
-    // digest group and are excluded AFTER the persist barrier, where
+    // digest group and are excluded AFTER the checkpoint barrier, where
     // `nsh` is a materialized column.
     shingleSets(docs, n).select(col("doc_id"), col("sh"),
       size(col("sh")).as("nsh"),
@@ -387,11 +385,11 @@ object Dedup {
     *
     * Bounded candidate generation, two independent guards:
     * (a) `maxBucket` — buckets holding more than `maxBucket` DISTINCT
-    * shingle sets are dropped, capping the per-bucket join at maxBucket²
-    * rows (candidates ≤ bands·reps·(maxBucket-1)/2 overall); (b)
-    * `minBands` — a pair must agree on at least `minBands` bands, which
-    * cuts the one-lucky-min-hash noise floor (6.5× fewer candidates on
-    * the sf0.1 corpus at minBands=2 vs 1).
+    * shingle sets are dropped, capping the per-bucket pair fanout at
+    * maxBucket·(maxBucket-1)/2 (candidates ≤ bands·reps·(maxBucket-1)/2
+    * overall); (b) `minBands` — a pair must agree on at least
+    * `minBands` bands, which cuts the one-lucky-min-hash noise floor
+    * (6.5× fewer candidates on the sf0.1 corpus at minBands=2 vs 1).
     *
     * Recall argument for a true non-identical pair at Jaccard j with
     * 1-row bands: each band agrees independently with probability j, so
@@ -407,197 +405,136 @@ object Dedup {
     * 0 of 25 at sf0.01 (Scratch minhash-bucketstats; the oracle row
     * asserts exactness end-to-end).
     *
-    * Everything outside the bounded shuffles (set-digest aggregate,
-    * rep-tag join, bucket join) is map-side column algebra: shingle
-    * sets via
-    * `array_distinct` (no distinct shuffle), signatures/banding as
-    * nested higher-order functions over the per-doc array (no
-    * groupByKey), verification as `array_intersect` on two id-equi-joins
-    * (no shingle-key self-join). The per-doc shingle array must fit in
-    * executor memory — true for documents; for book-length texts use
-    * [[ngramJaccard]]'s exploded form.
+    * The pipeline is the at-rest lifecycle's ([[minhashIndexWrite]],
+    * [[minhashServePairs]]) stage for stage, held in memory: rep
+    * grouping ([[repGroups]]), banding ([[bandedBuckets]]), capped
+    * candidates ([[cappedKeyPairs]]), verification ([[verifyPairs]])
+    * and rep expansion ([[expandRepPairs]]). The per-doc shingle array
+    * must fit in executor memory — true for documents; for book-length
+    * texts use [[ngramJaccard]]'s exploded form.
     */
   def minHashLshVerified(docs: DataFrame, n: Int = 3, numHashes: Int = 32,
                          bands: Int = 32, minJ: Double = 0.2,
                          maxBucket: Int = 16, minBands: Int = 1): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     require(minBands >= 1 && minBands <= bands, "minBands must be in [1, bands]")
-    // (doc_id, sh, nsh, k): materialized once as RAW row blocks
-    // (eager localCheckpoint), consumed by the rep aggregate, the
-    // rep-tag join, and the rep shingle-table below. r14: this was a
-    // columnar persist(); for rows that are mostly large string
-    // arrays the columnar cache conversion wrote ~2 s of compressed
-    // batches at sf0.1 while the checkpoint stores the UnsafeRows
-    // as-is — and the LogicalRDD barrier still stops filter pushdown
-    // from inlining the tokenizer into the shingle lambdas (the
-    // measured-6× trap, see keyedSets). Blocks are GC-reclaimed once
-    // the (checkpointed) result drops the reference.
-    val keyed = keyedSets(docs, n).localCheckpoint(true)
-    // smallest doc_id per distinct set: a fixed-width codegen hash
-    // aggregate over (k, doc_id) — the arrays never enter the shuffle
-    val repIds = keyed.groupBy("k").agg(min("doc_id").as("rep"))
-    // downstream subtrees re-derive the tiny repIds aggregate +
-    // rep-tag join from the checkpointed rows per consumer instead of
-    // persisting `groups` — the pre-r14 groups cache stored the SAME
-    // fat shingle arrays a second time, for a table whose
-    // re-derivation is a node-sized aggregate + broadcast join. At
-    // small scale AQE broadcasts the narrow repIds side; at scale the
-    // rep-tag join is a sort-merge join whose sort key is the 32-hex
-    // digest, never the array. Shingle-less docs (fewer than n tokens)
-    // can't pair — excluded against the materialized rows, NOT below
-    // the projection (see keyedSets).
-    val groups = keyed.join(repIds, "k")
-    val nonEmpty = groups.filter(col("nsh") > 0)
-    val reps = nonEmpty.filter(col("doc_id") === col("rep"))
-      .select("doc_id", "sh")
-    // per-band bucket rows via the shared [[bandBuckets]] expression:
-    // each shingle string hashed ONCE, band minima derived from the
-    // longs. Lazy — the banded rows now have exactly ONE consumer (the
-    // bucket-grouping aggregate below), so the pre-r14 eager
-    // checkpoint (then: three consumers) would be a pure extra
-    // materialization.
-    val banded = reps
-      .select(col("doc_id"), hashedShingles(col("sh")).as("__hs"))
-      .select(col("doc_id"), minhashMinima(col("__hs"), numHashes).as("__mins"))
-      .select(col("doc_id"), posexplode(
-        bandBuckets(col("__mins"), numHashes, bands))
-        .as(Seq("band", "bucket")))
-    // candidate pairs by grouping each bucket's members into one sorted
-    // array (cap = a HAVING on the array size) and exploding ordered
-    // pairs MAP-SIDE: one aggregate replaces the pre-r14
-    // bucket-size aggregate + broadcast semi-join + bucket self-join
-    // (2 exchanges instead of 3 plan branches over the banded rows —
-    // guide §2.4). Per-bucket pair fanout is bounded by
-    // maxBucket·(maxBucket-1)/2; the agreeing-band count per pair
-    // rides the same pair-keyed shuffle the self-join shape used, and
-    // the minBands filter cuts the one-lucky-min-hash noise floor.
-    // r15 hub safety: the collect is SIZE-BOUNDED at maxBucket + 1
-    // (one doc_id per (band, bucket) by construction ⇒ collected size
-    // = min(true size, maxBucket + 1), so the HAVING keeps exactly
-    // the buckets an unbounded collect would) — a corpus-boilerplate
-    // band signature shared by millions of reps tops out at
-    // maxBucket + 1 buffer elements instead of its full membership
-    // (guide §2.2/§5).
-    val candidates = banded.groupBy("band", "bucket")
-      .agg(sort_array(graft.functions.BoundedCollectList.of(
-        col("doc_id"), maxBucket + 1)).as("__ids"))
-      .filter(size(col("__ids")).between(2, maxBucket))
-      .select(explode(orderedIdPairs(col("__ids"))).as("__p"))
-      .select(col("__p.a").as("rep_a"), col("__p.b").as("rep_b"))
-      .groupBy("rep_a", "rep_b").agg(count(lit(1)).as("__nb"))
-      .filter(col("__nb") >= minBands)
-      .select("rep_a", "rep_b")
-    // exact verification: intersect the two shingle SETS per candidate
-    // pair — codegen'd array_intersect after id-equi-joins, cost bounded
-    // by the candidate count, never a corpus-wide shingle self-join
-    val shTbl = reps.select(col("doc_id"), col("sh"))
-    val verified = candidates
-      .join(shTbl.select(col("doc_id").as("rep_a"), col("sh").as("sh_a")), "rep_a")
-      .join(shTbl.select(col("doc_id").as("rep_b"), col("sh").as("sh_b")), "rep_b")
-      .withColumn("n_common", size(array_intersect(col("sh_a"), col("sh_b"))))
-      .withColumn("jaccard", col("n_common").cast("double") /
-        (size(col("sh_a")) + size(col("sh_b")) - col("n_common")))
-      .filter(col("jaccard") >= minJ)
-      .select("rep_a", "rep_b", "jaccard")
-    // expand representative pairs to all member pairs (identical sets ⇒
-    // identical Jaccard) and add within-group pairs at exactly 1.0 —
-    // both joins fan out only to rows that ARE the output
-    val members = nonEmpty.select(col("rep"), col("doc_id"))
-    val crossPairs = verified
-      .join(members.select(col("rep").as("rep_a"), col("doc_id").as("da")), "rep_a")
-      .join(members.select(col("rep").as("rep_b"), col("doc_id").as("db")), "rep_b")
-      .select(least(col("da"), col("db")).as("doc_a"),
-        greatest(col("da"), col("db")).as("doc_b"), col("jaccard"))
-    val withinPairs = members.select(col("rep"), col("doc_id").as("doc_a"))
-      .join(members.select(col("rep"), col("doc_id").as("doc_b")), "rep")
-      .filter(col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b"), lit(1.0).as("jaccard"))
+    val groups = repGroups(keyedSets(docs, n).localCheckpoint(true))
+    val reps = repSets(groups)
+    val repPairs = verifyPairs(bucketCandidates(
+      bandedBuckets(reps, numHashes, bands), maxBucket, minBands), reps, minJ)
     // eager localCheckpoint: the pair list is tiny, and it lets the big
     // intermediate be unpersisted HERE instead of leaking into the
     // CacheManager for the rest of the session (persist() is never
     // auto-cleaned; checkpoint blocks are GC-reclaimed by the
     // ContextCleaner once the result is unreachable)
-    crossPairs.unionByName(withinPairs).localCheckpoint(true)
+    expandRepPairs(repPairs, groups).localCheckpoint(true)
   }
 
-  // ---------- MinHash LSH index at rest (incremental lifecycle) ----
-
-  /** Each shingle hashed ONCE to its 64-bit key — the input to
-    * [[bandBuckets]]. One pass over the string bytes per set; every
-    * per-hash-function value derives from the long.
+  /** Rep grouping: every non-empty document of a MATERIALIZED
+    * [[keyedSets]] table tagged with its group's representative, the
+    * smallest doc_id per set digest — `(k, doc_id, sh, nsh, rep)`. The
+    * group-min is a fixed-width codegen hash aggregate over
+    * `(k, doc_id)` (the arrays never enter its shuffle); at small scale
+    * AQE broadcasts it into the rep-tag join, at scale that join sorts
+    * on the 32-hex digest, never the array. The input must be a
+    * checkpoint: shingle-less docs (fewer than n tokens) are excluded
+    * against its materialized `nsh`, never below the tokenizer
+    * projection (see [[keyedSets]]). Blocks are GC-reclaimed once the
+    * result drops the reference; a columnar persist() of these
+    * mostly-array rows measured ~2 s slower at sf0.1.
     */
-  private def hashedShingles(sh: Column): Column =
-    transform(sh, s => xxhash64(s))
+  private def repGroups(keyed: DataFrame): DataFrame =
+    keyed.join(keyed.groupBy("k").agg(min("doc_id").as("rep")), "k")
+      .filter(col("nsh") > 0)
 
-  /** Per-hash-function min-hash minima of a pre-hashed shingle-key
-    * array, as a COLUMN bound once per row (callers project it, then
-    * band over the column reference — an inline subtree would be
-    * duplicated per band). Native one-pass kernel; values bit-equal
-    * to `array_min(transform(hs, h => xxhash64(h, i)))` (spec-pinned).
+  /** One row per distinct non-empty shingle set of [[repGroups]]:
+    * `(rep, k, sh)`.
     */
-  private def minhashMinima(hs: Column, numHashes: Int): Column =
-    graft.functions.MinHashMinima.of(hs, numHashes)
+  private def repSets(groups: DataFrame): DataFrame =
+    groups.filter(col("doc_id") === col("rep")).select("rep", "k", "sh")
 
-  /** Per-band LSH bucket array over the per-function MINIMA column:
-    * band b's bucket hashes its `numHashes/bands` consecutive minima.
-    * ONE shared expression for the in-memory ([[minHashLshVerified]])
-    * and at-rest ([[bandedBuckets]]) lifecycles, so a bucket stays a
-    * pure function of (set, band) and base/delta banding agree by
+  /** Banded min-hash bucket rows `(rep, band, bucket)` for rep shingle
+    * sets `(rep, sh)` — the one banding of both lifecycles, so a bucket
+    * is a pure function of (set, band) and base/delta banding agree by
     * construction (a delta rep lands in exactly the bucket a full
     * rebuild would put it in).
     *
-    * r14 (guide §1.2 step 2, per-task work): the per-hash-function
-    * values hash the 8-byte shingle KEY instead of re-reading and
-    * re-hashing the string `numHashes` times (one xxhash64 of the
-    * string per shingle, then longs), the minima are computed in ONE
-    * native pass over the key array ([[graft.functions.MinHashMinima]])
-    * instead of `numHashes` HOF traversals each allocating a
-    * transformed array, and the band bucket hashes the minima ARRAY
-    * directly instead of a string concat of decimal renderings.
-    * Bucket values differ from the pre-r14 draw — a candidates-only
-    * change: verification is exact Jaccard, and the recall argument
-    * (P(band agrees) = j per 1-row band) is hash-independent; the
-    * oracle rows re-assert exactness end to end, and the bucket-cap
-    * margins were re-measured (Scratch minhash-bucketstats: 0 missed
-    * true pairs, min agreeing bands 22/32, max bucket 20).
+    * Each shingle string is hashed ONCE to its 64-bit key; the
+    * per-hash-function minima are computed from the keys in ONE native
+    * pass
+    * ([[graft.functions.MinHashMinima]], values bit-equal to
+    * `array_min(transform(hs, h => xxhash64(h, i)))`, spec-pinned) and
+    * bound once per row (an inline subtree would be duplicated per
+    * band); band b's bucket hashes its `numHashes/bands` consecutive
+    * minima as an array. The recall argument (P(band agrees) = j per
+    * 1-row band) is hash-independent; the bucket-cap margins were
+    * measured on this draw (Scratch minhash-bucketstats: 0 missed true
+    * pairs, min agreeing bands 22/32, max bucket 20).
     */
-  private def bandBuckets(mins: Column, numHashes: Int, bands: Int): Column = {
+  private def bandedBuckets(reps: DataFrame, numHashes: Int,
+                            bands: Int): DataFrame = {
     val rows = numHashes / bands
-    transform(sequence(lit(0), lit(bands - 1)), bnd =>
-      xxhash64(slice(mins, bnd * rows + 1, lit(rows)), bnd))
+    reps.select(col("rep"), transform(col("sh"), s => xxhash64(s)).as("__hs"))
+      .select(col("rep"),
+        graft.functions.MinHashMinima.of(col("__hs"), numHashes).as("__mins"))
+      .select(col("rep"), posexplode(
+        transform(sequence(lit(0), lit(bands - 1)), bnd =>
+          xxhash64(slice(col("__mins"), bnd * rows + 1, lit(rows)), bnd)))
+        .as(Seq("band", "bucket")))
+      .select("rep", "band", "bucket")
   }
 
-  /** All ordered pairs (a < b) of a sorted distinct id array — the
-    * map-side pair expansion of a capped LSH bucket.
+  /** Capped-key pair generator: the ids of each `keys` group folded into
+    * one sorted array, keys of size 2..`cap` kept (a HAVING on the array
+    * size), all ordered pairs exploded MAP-SIDE and counted per pair —
+    * `(a < b, nCol)` for pairs sharing at least `minCount` keys. One
+    * aggregate instead of a size aggregate + cap join + key self-join;
+    * per-key pair fanout is bounded by cap·(cap-1)/2. Hub safety: the
+    * collect is SIZE-BOUNDED at `cap + 1`, and `id` must be distinct
+    * within a key, so the collected size is min(true size, cap + 1)
+    * and the HAVING keeps exactly the keys an unbounded collect would
+    * — a corpus-boilerplate key shared by millions of ids tops out at
+    * cap + 1 buffer elements.
     */
+  private def cappedKeyPairs(rows: DataFrame, keys: Seq[String], id: String,
+                             cap: Int, a: String, b: String, nCol: String,
+                             minCount: Int): DataFrame =
+    rows.groupBy(keys.head, keys.tail: _*)
+      .agg(sort_array(graft.functions.BoundedCollectList.of(
+        col(id), cap + 1)).as("__ids"))
+      .filter(size(col("__ids")).between(2, cap))
+      .select(explode(orderedIdPairs(col("__ids"))).as("__p"))
+      .select(col("__p.a").as(a), col("__p.b").as(b))
+      .groupBy(a, b)
+      .agg(count(lit(1)).as(nCol))
+      .filter(col(nCol) >= minCount)
+
+  /** All ordered pairs (a < b) of a sorted distinct id array. */
   private def orderedIdPairs(ids: Column): Column =
     flatten(transform(sequence(lit(1), size(ids) - 1),
       i => transform(sequence(i + 1, size(ids)),
         j => struct(element_at(ids, i).as("a"),
           element_at(ids, j).as("b")))))
 
-  /** Banded min-hash bucket rows `(rep, band, bucket)` for rep shingle
-    * sets `(rep, sh)` — [[bandBuckets]] over the once-hashed,
-    * once-minimized set.
+  /** Candidate rep pairs of one banded population: [[cappedKeyPairs]]
+    * over `(band, bucket)` (one rep per bucket and band, so the pair
+    * count is the agreeing-band count), `minBands` agreeing bands.
     */
-  private def bandedBuckets(reps: DataFrame, numHashes: Int,
-                            bands: Int): DataFrame =
-    reps.select(col("rep"), hashedShingles(col("sh")).as("__hs"))
-      .select(col("rep"), minhashMinima(col("__hs"), numHashes).as("__mins"))
-      .select(col("rep"), posexplode(
-        bandBuckets(col("__mins"), numHashes, bands))
-        .as(Seq("band", "bucket")))
-      .select("rep", "band", "bucket")
+  private def bucketCandidates(banded: DataFrame, maxBucket: Int,
+                               minBands: Int): DataFrame =
+    cappedKeyPairs(banded, Seq("band", "bucket"), "rep", maxBucket,
+      "rep_a", "rep_b", "__nb", minBands).select("rep_a", "rep_b")
 
   /** Bucket-capped, minBands-filtered candidate rep pairs between
     * `probe` banded rows and `all` banded rows (probe ⊆ all; at least
-    * one side of every pair is a probe rep). Caps are computed over
+    * one side of every pair is a probe rep) — the append path, which
+    * must not pair base reps with each other. Caps are computed over
     * `all` — the post-append population — so the kept-bucket decision
     * is EXACTLY the one a full rebuild would make. `countDistinct`
     * on band de-duplicates the probe×all double-count when both reps
     * of a pair are probes (a pair shares at most one bucket per band,
     * so distinct-band count = agreeing-band count, the same statistic
-    * [[minHashLshVerified]] thresholds).
+    * [[bucketCandidates]] thresholds).
     */
   private def cappedCandidates(probe: DataFrame, all: DataFrame,
                                maxBucket: Int, minBands: Int): DataFrame = {
@@ -619,9 +556,11 @@ object Dedup {
   }
 
   /** Exact-Jaccard verification of candidate rep pairs against a
-    * shingle-set lookup `(rep, sh)` — the same single-division
-    * arithmetic as [[minHashLshVerified]], so a pair's jaccard is
-    * identical no matter which lifecycle computed it.
+    * shingle-set lookup `(rep, sh)`: the two shingle SETS intersected
+    * per pair (codegen'd `array_intersect` after two id-equi-joins,
+    * cost bounded by the candidate count, never a corpus-wide shingle
+    * self-join), scored by [[jaccardCol]], kept at `minJ`. The one
+    * verifier of the in-memory and at-rest lifecycles.
     */
   private def verifyPairs(cand: DataFrame, shTbl: DataFrame,
                           minJ: Double): DataFrame =
@@ -629,10 +568,33 @@ object Dedup {
       .join(shTbl.select(col("rep").as("rep_a"), col("sh").as("sh_a")), "rep_a")
       .join(shTbl.select(col("rep").as("rep_b"), col("sh").as("sh_b")), "rep_b")
       .withColumn("n_common", size(array_intersect(col("sh_a"), col("sh_b"))))
-      .withColumn("jaccard", col("n_common").cast("double") /
-        (size(col("sh_a")) + size(col("sh_b")) - col("n_common")))
+      .withColumn("jaccard",
+        jaccardCol(col("n_common"), size(col("sh_a")), size(col("sh_b"))))
       .filter(col("jaccard") >= minJ)
       .select("rep_a", "rep_b", "jaccard")
+
+  /** Rep expansion: verified rep pairs `(rep_a, rep_b, jaccard)` to all
+    * member pairs over a membership table `(doc_id, rep)` — cross pairs
+    * inherit the reps' jaccard (identical sets), same-group pairs are
+    * exact duplicates at 1.0. Both joins fan out only to rows that ARE
+    * the output.
+    */
+  private def expandRepPairs(repPairs: DataFrame, members: DataFrame): DataFrame = {
+    val crossPairs = repPairs
+      .join(members.select(col("rep").as("rep_a"), col("doc_id").as("da")),
+        "rep_a")
+      .join(members.select(col("rep").as("rep_b"), col("doc_id").as("db")),
+        "rep_b")
+      .select(least(col("da"), col("db")).as("doc_a"),
+        greatest(col("da"), col("db")).as("doc_b"), col("jaccard"))
+    val withinPairs = members.select(col("rep"), col("doc_id").as("doc_a"))
+      .join(members.select(col("rep"), col("doc_id").as("doc_b")), "rep")
+      .filter(col("doc_a") < col("doc_b"))
+      .select(col("doc_a"), col("doc_b"), lit(1.0).as("jaccard"))
+    crossPairs.unionByName(withinPairs)
+  }
+
+  // ---------- MinHash LSH index at rest (incremental lifecycle) ----
 
   private def writeGen(df: DataFrame, dir: String, gen: Int): Unit =
     df.withColumn("gen", lit(gen))
@@ -654,6 +616,11 @@ object Dedup {
     *  - `reppairs`   (rep_a, rep_b, jaccard): verified near-dup rep
     *                 pairs at `minJ`.
     *
+    * The stages are [[minHashLshVerified]]'s own: [[repGroups]],
+    * [[bandedBuckets]] (checkpointed: it is written and probed),
+    * [[bucketCandidates]] and [[verifyPairs]]; [[minhashServePairs]]
+    * is its [[expandRepPairs]].
+    *
     * What is deliberately NOT stored: shingle arrays. At 100 TB the
     * set payloads dwarf the index; verification re-derives shingles
     * only for candidate docs ([[minhashIndexAppend]]), the same
@@ -664,20 +631,14 @@ object Dedup {
                         minJ: Double = 0.2, maxBucket: Int = 16,
                         minBands: Int = 1): Unit = {
     require(numHashes % bands == 0, "bands must divide numHashes")
-    val keyed = keyedSets(docs, n)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val repIds = keyed.groupBy("k").agg(min("doc_id").as("rep"))
-    val nonEmpty = keyed.join(repIds, "k").filter(col("nsh") > 0)
-    writeGen(nonEmpty.filter(col("doc_id") === col("rep"))
-      .select("k", "rep"), s"$path/dict", 0)
-    writeGen(nonEmpty.select("doc_id", "rep"), s"$path/membership", 0)
-    val reps = nonEmpty.filter(col("doc_id") === col("rep"))
-      .select(col("doc_id").as("rep"), col("sh"))
+    val groups = repGroups(keyedSets(docs, n).localCheckpoint(true))
+    val reps = repSets(groups)
+    writeGen(reps.select("k", "rep"), s"$path/dict", 0)
+    writeGen(groups.select("doc_id", "rep"), s"$path/membership", 0)
     val banded = bandedBuckets(reps, numHashes, bands).localCheckpoint(true)
     writeGen(banded, s"$path/banded", 0)
-    writeGen(verifyPairs(cappedCandidates(banded, banded, maxBucket, minBands),
+    writeGen(verifyPairs(bucketCandidates(banded, maxBucket, minBands),
       reps, minJ), s"$path/reppairs", 0)
-    keyed.unpersist()
   }
 
   /** Route a NEW batch against the at-rest index and physically append
@@ -687,8 +648,8 @@ object Dedup {
     *  1. batch sets matching a stored digest ADOPT the existing rep
     *     (identical set ⇒ identical jaccard to everything — their
     *     pairs come free through the membership expansion);
-    *  2. genuinely new sets form new groups, are banded, and appended
-    *     into `banded` as a new `gen=N` generation;
+    *  2. genuinely new sets form new groups ([[repGroups]]), are banded,
+    *     and appended into `banded` as a new `gen=N` generation;
     *  3. candidates = new reps × post-append population, with bucket
     *     caps computed over the SAME post-append banded table a full
     *     rebuild would see. Pairs persisted by EARLIER generations are
@@ -729,18 +690,16 @@ object Dedup {
     // eager checkpoint first: an nsh filter directly on the lazy
     // projection would be pushed under it and inline the tokenizer
     // into the predicate (the measured-6× trap — see keyedSets)
-    val bk = keyedSets(batch, n).localCheckpoint(true)
-    val nonEmptyB = bk.filter(col("nsh") > 0)
+    val nonEmptyB = keyedSets(batch, n).localCheckpoint(true)
+      .filter(col("nsh") > 0)
     val adopted = nonEmptyB.join(dict.select("k", "rep"), "k")
       .select("doc_id", "rep")
-    val newSets = nonEmptyB.join(dict.select("k"), Seq("k"), "left_anti")
-    val newRepIds = newSets.groupBy("k").agg(min("doc_id").as("rep"))
-    val newGroups = newSets.join(newRepIds, "k").localCheckpoint(true)
+    val newGroups = repGroups(
+      nonEmptyB.join(dict.select("k"), Seq("k"), "left_anti")).localCheckpoint(true)
     writeGen(adopted.unionByName(newGroups.select("doc_id", "rep")),
       s"$path/membership", nextGen)
-    writeGen(newRepIds.select("k", "rep"), s"$path/dict", nextGen)
-    val newReps = newGroups.filter(col("doc_id") === col("rep"))
-      .select(col("doc_id").as("rep"), col("sh"))
+    val newReps = repSets(newGroups)
+    writeGen(newReps.select("k", "rep"), s"$path/dict", nextGen)
     writeGen(bandedBuckets(newReps, numHashes, bands), s"$path/banded",
       nextGen)
     // candidates over the POST-APPEND at-rest bucket index: the delta
@@ -757,32 +716,18 @@ object Dedup {
   }
 
   /** Serve the full near-dup pair list from the at-rest index alone:
-    * verified rep pairs expanded over the membership table (cross
-    * pairs inherit the reps' jaccard — identical sets — and same-group
-    * pairs are exact duplicates at 1.0). Pure joins over the two
-    * narrow persisted artifacts; after [[minhashIndexAppend]] the
-    * served list covers base∪batch with no recomputation — the same
-    * serve-from-what-the-pipeline-maintains posture as
-    * `search_streamed_index`.
+    * [[expandRepPairs]] of the verified rep pairs over the membership
+    * table. Pure joins over the two narrow persisted artifacts; after
+    * [[minhashIndexAppend]] the served list covers base∪batch with no
+    * recomputation — the same serve-from-what-the-pipeline-maintains
+    * posture as `search_streamed_index`.
     */
   def minhashServePairs(spark: org.apache.spark.sql.SparkSession,
                         path: String): DataFrame = {
     val membership = spark.read.parquet(s"$path/membership")
       .select("doc_id", "rep")
-    val repPairs = spark.read.parquet(s"$path/reppairs")
-      .select("rep_a", "rep_b", "jaccard")
-    val crossPairs = repPairs
-      .join(membership.select(col("rep").as("rep_a"), col("doc_id").as("da")),
-        "rep_a")
-      .join(membership.select(col("rep").as("rep_b"), col("doc_id").as("db")),
-        "rep_b")
-      .select(least(col("da"), col("db")).as("doc_a"),
-        greatest(col("da"), col("db")).as("doc_b"), col("jaccard"))
-    val withinPairs = membership.select(col("rep"), col("doc_id").as("doc_a"))
-      .join(membership.select(col("rep"), col("doc_id").as("doc_b")), "rep")
-      .filter(col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b"), lit(1.0).as("jaccard"))
-    crossPairs.unionByName(withinPairs)
+    expandRepPairs(spark.read.parquet(s"$path/reppairs")
+      .select("rep_a", "rep_b", "jaccard"), membership)
   }
 
   /** SimHash: 64-bit weighted-majority fingerprint of a document's
@@ -1052,7 +997,19 @@ object Dedup {
     * the incremental index's stats table).
     */
   def incrementalExact(oldDigests: DataFrame, newDocs: DataFrame,
-                       textCol: String = "text"): DataFrame = {
+                       textCol: String = "text"): DataFrame =
+    classifyDigests(oldDigests, newDocs, textCol)(
+      _.join(_, Seq("digest"), "left"))
+
+  /** The classifier of [[incrementalExact]] and [[incrementalExactBloom]]:
+    * `probe(d, atRest)` left-joins the batch digests `(doc_id, digest)`
+    * to the at-rest flags `(digest, __at_rest = true)`; the rest — the
+    * invalid-row split, the digest, the in-batch keeper and the status
+    * rule — is shared.
+    */
+  private def classifyDigests(oldDigests: DataFrame, newDocs: DataFrame,
+                              textCol: String)(
+      probe: (DataFrame, DataFrame) => DataFrame): DataFrame = {
     // NULL text would make md5 NULL and silently vanish through the
     // digest joins — classify those rows explicitly instead of losing
     // them (every arriving doc must leave with a status)
@@ -1062,8 +1019,7 @@ object Dedup {
     val d = newDocs.filter(col(textCol).isNotNull)
       .select(col("doc_id"), md5(col(textCol)).as("digest"))
     val firstInBatch = d.groupBy("digest").agg(min("doc_id").as("first_id"))
-    d.join(oldDigests.select(col("digest"), lit(true).as("__at_rest")).distinct(),
-        Seq("digest"), "left")
+    probe(d, oldDigests.select(col("digest"), lit(true).as("__at_rest")).distinct())
       .join(firstInBatch, Seq("digest"))
       .select(col("doc_id"), col("digest"),
         when(col("__at_rest"), "dup_corpus")
@@ -1081,11 +1037,11 @@ object Dedup {
     * whole-document similarity — plagiarism/quotation/boilerplate
     * detection rather than near-dup collapse.
     *
-    * Bounded candidate generation, same posture as the shingle-family
-    * ops: fingerprints hitting more than `maxFpFreq` distinct
-    * documents are dropped before the self-join (corpus-universal
-    * boilerplate — each survivor key yields at most maxFpFreq² pairs),
-    * and the join carries ids only. Output
+    * Bounded candidate generation, the MinHash bucket generator
+    * ([[cappedKeyPairs]]) keyed on the fingerprint: fingerprints
+    * hitting more than `maxFpFreq` distinct documents are dropped
+    * (corpus-universal boilerplate — each survivor key yields at most
+    * maxFpFreq·(maxFpFreq-1)/2 pairs), and only ids are carried. Output
     * `(doc_a, doc_b, n_shared)`.
     *
     * Matching is EXACT on raw single-space tokens (the [[winnow]] /
@@ -1100,30 +1056,11 @@ object Dedup {
     require(minShared >= 1 && maxFpFreq >= 2,
       s"need minShared >= 1, maxFpFreq >= 2; got $minShared, $maxFpFreq")
     // a fingerprint can be selected at several positions of one doc —
-    // pair counting wants distinct (doc, fp). r14: ONE aggregate folds
-    // each fingerprint's documents into a sorted array (the frequency
-    // cap is a HAVING on its size) and the pairs explode MAP-SIDE —
-    // replacing the former frequency aggregate + cap join + self-join
-    // over the fingerprint key (guide §2.4; per-fp pair fanout stays
-    // bounded by maxFpFreq²/2). The winnowing scan now has ONE
-    // consumer, so the former eager checkpoint (then: three consumers)
-    // is gone too — nothing is materialized between scan and result.
-    // r15 hub safety: the collect is SIZE-BOUNDED at maxFpFreq + 1
-    // (inputs distinct on (doc, fp) ⇒ collected size = min(true freq,
-    // maxFpFreq + 1), HAVING decision unchanged) — a corpus-universal
-    // boilerplate fingerprint tops out at maxFpFreq + 1 buffer
-    // elements instead of its full document list (guide §2.2/§5).
-    TextAnalysis.winnow(docs, k, w)
-      .select(col("doc_id"), col("fp")).distinct()
-      .groupBy("fp")
-      .agg(sort_array(graft.functions.BoundedCollectList.of(
-        col("doc_id"), maxFpFreq + 1)).as("__ids"))
-      .filter(size(col("__ids")).between(2, maxFpFreq))
-      .select(explode(orderedIdPairs(col("__ids"))).as("__p"))
-      .select(col("__p.a").as("doc_a"), col("__p.b").as("doc_b"))
-      .groupBy("doc_a", "doc_b")
-      .agg(count(lit(1)).as("n_shared"))
-      .filter(col("n_shared") >= minShared)
+    // pair counting wants distinct (doc, fp); the winnowing scan has
+    // one consumer, so nothing is materialized between scan and result
+    cappedKeyPairs(TextAnalysis.winnow(docs, k, w)
+        .select(col("doc_id"), col("fp")).distinct(),
+      Seq("fp"), "doc_id", maxFpFreq, "doc_a", "doc_b", "n_shared", minShared)
   }
 
   /** Build the reusable Bloom-filter artifact over the at-rest digest
@@ -1255,32 +1192,16 @@ object Dedup {
   def incrementalExactBloom(oldDigests: DataFrame,
                             bloom: Array[Byte],
                             newDocs: DataFrame,
-                            textCol: String = "text"): DataFrame = {
-    val invalid = newDocs.filter(col(textCol).isNull)
-      .select(col("doc_id"), lit(null).cast("string").as("digest"),
-        lit("invalid").as("status"))
-    // digest once per row; the probe rides on the digest COLUMN in a
-    // separate projection so the firstInBatch aggregation's lineage
-    // never evaluates it
-    val d = newDocs.filter(col(textCol).isNotNull)
-      .select(col("doc_id"), md5(col(textCol)).as("digest"))
-    val dm = d.withColumn("__maybe", bloomMightContain(bloom, col("digest")))
-    val firstInBatch = d.groupBy("digest").agg(min("doc_id").as("first_id"))
-    // only the Bloom-positive slice probes the at-rest table; negatives
-    // are definitively new-to-corpus and skip the join entirely
-    val probed = dm.filter(col("__maybe"))
-      .join(oldDigests.select(col("digest"), lit(true).as("__at_rest")).distinct(),
-        Seq("digest"), "left")
-    val fresh = dm.filter(!col("__maybe"))
-      .withColumn("__at_rest", lit(null).cast("boolean"))
-    probed.unionByName(fresh)
-      .join(firstInBatch, Seq("digest"))
-      .select(col("doc_id"), col("digest"),
-        when(col("__at_rest"), "dup_corpus")
-          .when(col("doc_id") > col("first_id"), "dup_batch")
-          .otherwise("new").as("status"))
-      .unionByName(invalid)
-  }
+                            textCol: String = "text"): DataFrame =
+    classifyDigests(oldDigests, newDocs, textCol) { (d, atRest) =>
+      // the probe rides on the digest COLUMN in a separate projection,
+      // so the in-batch keeper aggregation's lineage never evaluates it;
+      // Bloom negatives are definitively new-to-corpus and skip the join
+      val dm = d.withColumn("__maybe", bloomMightContain(bloom, col("digest")))
+      dm.filter(col("__maybe")).join(atRest, Seq("digest"), "left")
+        .unionByName(dm.filter(!col("__maybe"))
+          .withColumn("__at_rest", lit(null).cast("boolean")))
+    }
 
   /** Benchmark-contamination check (the decontamination pass every
     * LLM-training pipeline runs): flag corpus documents sharing at

@@ -205,18 +205,15 @@ object Graph {
     * aggregates partial-combine map-side, so a web-scale hub's label
     * distribution collapses before the wire and never funnels through
     * a window sort: 2 exchanges and 0 sorts per round, vs the previous
-    * 3 exchanges + 2 window sorts (the hash-bucketed two-level window
-    * argmax this replaces; `buckets` is retained for source
-    * compatibility and no longer affects the plan).
+    * 3 exchanges + 2 window sorts of the hash-bucketed two-level
+    * window argmax it replaced.
     *
     * @return (node, label) after `iterations` rounds
     */
   def labelPropagation(edges: DataFrame, iterations: Int,
                        maxFanout: Long = 100000L,
-                       buckets: Int = 64,
                        prebuiltAdj: Option[DataFrame] = None): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1: $iterations")
-    require(buckets >= 1, s"buckets must be >= 1: $buckets")
     val adj = prebuiltAdj.getOrElse(chunkedAdjacency(edges, maxFanout))
     var labels = adj.select(col("src").as("node")).distinct()
       .withColumn("label", col("node"))

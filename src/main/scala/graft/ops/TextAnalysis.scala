@@ -908,6 +908,32 @@ object TextAnalysis {
         .as("avg_logprob"))
   }
 
+  /** Lowercased single-space tokens of a text column, empty tokens
+    * dropped: the token stream of the bigram LM family
+    * ([[bigramLogProb]], [[stupidBackoff]], [[collocations]]).
+    */
+  private def lowerTokens(text: Column): Column =
+    filter(transform(split(text, " ", -1), w => lower(w)), w => w =!= "")
+
+  /** The in-order bigrams (`"a b"`) of a token-array column REFERENCE
+    * (`zip_with` of the two shifted slices); fewer than two tokens give
+    * an empty array. Both slices reference the column several times,
+    * which keeps CollapseProject from inlining the tokenizer (alias used
+    * more than once); the zip_with lambda touches only its own
+    * variables.
+    */
+  private def bigramArray(toks: Column): Column =
+    when(size(toks) >= 2,
+        zip_with(slice(toks, lit(1), size(toks) - 1),
+          slice(toks, lit(2), size(toks) - 1),
+          (a, b) => concat(a, lit(" "), b)))
+      .otherwise(array().cast("array<string>"))
+
+  /** One `(doc_id, bigram)` row per in-doc bigram of [[lowerTokens]]. */
+  private def bigramStream(docs: DataFrame, textCol: String): DataFrame =
+    docs.select(col("doc_id"), lowerTokens(col(textCol)).as("__toks"))
+      .select(col("doc_id"), explode(bigramArray(col("__toks"))).as("bigram"))
+
   /** Mean bigram conditional log10-probability per document — one step
     * up from [[unigramLogProb]] on the cheap-LM quality ladder:
     * score(doc) = avg over in-doc bigrams (a b) of
@@ -924,22 +950,7 @@ object TextAnalysis {
     * (same contract as a doc with no tokens in [[unigramLogProb]]).
     */
   def bigramLogProb(docs0: DataFrame, textCol: String = "text"): DataFrame = {
-    val docs = graft.search.Analyzer.spread(docs0)
-    val toks = col("__toks")
-    // both slices reference the token-array column several times, which
-    // keeps CollapseProject from inlining the tokenizer (alias used
-    // more than once); the zip_with lambda itself touches only its own
-    // variables
-    val bigramsExpr = when(size(toks) >= 2,
-        zip_with(slice(toks, lit(1), size(toks) - 1),
-          slice(toks, lit(2), size(toks) - 1),
-          (a, b) => concat(a, lit(" "), b)))
-      .otherwise(array().cast("array<string>"))
-    val bi = docs
-      .select(col("doc_id"),
-        filter(transform(split(col(textCol), " ", -1), w => lower(w)),
-          w => w =!= "").as("__toks"))
-      .select(col("doc_id"), explode(bigramsExpr).as("bigram"))
+    val bi = bigramStream(graft.search.Analyzer.spread(docs0), textCol)
     val counts = bi.groupBy("bigram").agg(count(lit(1)).as("freq"))
       .withColumn("ctx_total", sum("freq").over(
         Window.partitionBy(split(col("bigram"), " ").getItem(0))))
@@ -1007,32 +1018,19 @@ object TextAnalysis {
   def stupidBackoff(docs0: DataFrame, lmDocs0: DataFrame,
                     alpha: Double = 0.4,
                     textCol: String = "text"): DataFrame = {
-    val toks = col("__toks")
-    val bigramsExpr = when(size(toks) >= 2,
-        zip_with(slice(toks, lit(1), size(toks) - 1),
-          slice(toks, lit(2), size(toks) - 1),
-          (a, b) => concat(a, lit(" "), b)))
-      .otherwise(array().cast("array<string>"))
-    def bigramStream(d: DataFrame): DataFrame = d
-      .select(col("doc_id"),
-        filter(transform(split(col(textCol), " ", -1), w => lower(w)),
-          w => w =!= "").as("__toks"))
-      .select(col("doc_id"), explode(bigramsExpr).as("bigram"))
     val lmDocs = graft.search.Analyzer.spread(lmDocs0)
-    val biLm = bigramStream(lmDocs)
+    val biLm = bigramStream(lmDocs, textCol)
       .groupBy("bigram").agg(count(lit(1)).as("__cab"))
       .withColumn("__ctx", sum("__cab").over(
         Window.partitionBy(split(col("bigram"), " ").getItem(0))))
-    val uniLm = lmDocs.select(
-        explode(filter(transform(split(col(textCol), " ", -1), w => lower(w)),
-          w => w =!= "")).as("word"))
+    val uniLm = lmDocs.select(explode(lowerTokens(col(textCol))).as("word"))
       .groupBy("word").agg(count(lit(1)).as("__cb"))
       .localCheckpoint() // consumed twice: the N total + the score join
     // N as a broadcast 1-row aggregate of the vocabulary-sized table
     // (never an unpartitioned window over the scored stream); 1-token
     // floor keeps the expression total on an empty LM
     val nTotal = uniLm.agg(coalesce(sum("__cb"), lit(1L)).as("__n"))
-    bigramStream(graft.search.Analyzer.spread(docs0))
+    bigramStream(graft.search.Analyzer.spread(docs0), textCol)
       .join(biLm, Seq("bigram"), "left")
       .withColumn("word", split(col("bigram"), " ").getItem(1))
       .join(uniLm, Seq("word"), "left")
@@ -1070,21 +1068,13 @@ object TextAnalysis {
   def collocations(docs0: DataFrame, textCol: String = "text",
                    minFreq: Long = 5L): DataFrame = {
     require(minFreq >= 1, s"minFreq must be >= 1: $minFreq")
-    val docs = graft.search.Analyzer.spread(docs0)
-    val toks = col("__toks")
-    val bigramsExpr = when(size(toks) >= 2,
-        zip_with(slice(toks, lit(1), size(toks) - 1),
-          slice(toks, lit(2), size(toks) - 1),
-          (a, b) => concat(a, lit(" "), b)))
-      .otherwise(array().cast("array<string>"))
-    val tokenized = docs.select(
-      filter(transform(split(col(textCol), " ", -1), w => lower(w)),
-        w => w =!= "").as("__toks"))
-    val uni = tokenized.select(explode(toks).as("word"))
+    val tokenized = graft.search.Analyzer.spread(docs0)
+      .select(lowerTokens(col(textCol)).as("__toks"))
+    val uni = tokenized.select(explode(col("__toks")).as("word"))
       .groupBy("word").agg(count(lit(1)).as("f"))
       .localCheckpoint() // 3 consumers: total + both PMI joins
     val uniTotal = uni.agg(sum("f").as("n_uni"))
-    val bi0 = tokenized.select(explode(bigramsExpr).as("bigram"))
+    val bi0 = tokenized.select(explode(bigramArray(col("__toks"))).as("bigram"))
       .groupBy("bigram").agg(count(lit(1)).as("freq"))
       .localCheckpoint() // 2 consumers: total (unfiltered) + minFreq cut
     val biTotal = bi0.agg(sum("freq").as("n_bi"))

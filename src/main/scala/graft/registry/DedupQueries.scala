@@ -609,7 +609,7 @@ object DedupQueries {
       oracle = OracleIncrementalSql),
     // the MOSS detection step: partial-overlap candidate pairs sharing
     // >= 2 winnowing fingerprints, corpus-boilerplate fingerprints
-    // capped out of the self-join (bounded candidate generation)
+    // dropped by a bounded per-fingerprint collect (no self-join)
     QuerySpec("dedup_winnow_pairs", (s, dir) =>
       Dedup.winnowPairs(t(s, dir, "documents"),
         k = 4, w = 4, minShared = 2, maxFpFreq = 64),

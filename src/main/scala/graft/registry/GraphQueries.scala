@@ -165,7 +165,7 @@ object GraphQueries {
         |SELECT node, round(rank, 8) AS rank FROM r3""".stripMargin),
     // synchronous label propagation (2 rounds) over the same trade
     // graph — deterministic argmax (count desc, label asc), per-round
-    // shuffles node-sized, hub argmax split across hash buckets
+    // shuffles node-sized, hub argmax one map-side-combined aggregate
     QuerySpec("q_label_prop", (s, dir) => {
       Graph.labelPropagation(tradeEdges(s, dir), iterations = 2,
         prebuiltAdj = Some(tradeAdjacency(s, dir)))

@@ -113,66 +113,62 @@ class PlanAuditSpec extends SparkSuite {
     assert(stale.isEmpty, s"allowlisted names not in SparkEntry.queries: $stale")
   }
 
-  test("no query outside the presentation allowlist plans a ScalaUDF") {
-    val dir = sys.env.getOrElse("SPARK_GRAFT_TESTDATA", "/root/testdata") +
-      "/sf0.001"
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, _) if scalaUdfByContract.contains(name) => None
-      case (name, fn) =>
-        val planned =
-          try Right(allNodes(fn(spark, dir).queryExecution.executedPlan))
-          catch { case e: Throwable => Left(s"PLANNING FAILED: $e") }
-        planned match {
-          case Left(err) => Some(name -> err)
-          case Right(nodes) =>
-            val udfs = nodes.flatMap(_.expressions).flatMap(_.collect {
-              case u: org.apache.spark.sql.catalyst.expressions.ScalaUDF => u
-            })
-            if (udfs.nonEmpty)
-              Some(name -> s"plans ScalaUDF: ${udfs.map(_.udfName).distinct}")
-            else None
-        }
+  /** Every row's plan nodes or planning error: planned once, on first
+    * use, for both plan checks below.
+    */
+  private lazy val plannedNodes: Seq[(String, Either[String, Seq[SparkPlan]])] =
+    SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      name -> (try Right(allNodes(fn(spark, testdata).queryExecution.executedPlan))
+        catch { case e: Throwable => Left(s"PLANNING FAILED: $e") })
     }
-    assert(offenders.isEmpty,
-      offenders.map { case (n, why) => s"$n: $why" }.mkString("\n"))
+
+  /** `name: reason` per row outside `exempt` that fails to plan or
+    * whose plan nodes `check` rejects.
+    */
+  private def offenders(exempt: Set[String])(
+      check: (String, Seq[SparkPlan]) => Option[String]): String =
+    plannedNodes.flatMap {
+      case (name, _) if exempt.contains(name) => None
+      case (name, planned) =>
+        planned.fold(Some(_), check(name, _)).map(why => s"$name: $why")
+    }.mkString("\n")
+
+  test("no query outside the presentation allowlist plans a ScalaUDF") {
+    val bad = offenders(scalaUdfByContract) { (_, nodes) =>
+      val udfs = nodes.flatMap(_.expressions).flatMap(_.collect {
+        case u: org.apache.spark.sql.catalyst.expressions.ScalaUDF => u
+      })
+      if (udfs.nonEmpty) Some(s"plans ScalaUDF: ${udfs.map(_.udfName).distinct}")
+      else None
+    }
+    assert(bad.isEmpty, bad)
   }
 
   test("no query plans an accidental cartesian / nested-loop join; " +
       "allowlisted BNLJ build sides are provably scalar-sized") {
-    val dir = sys.env.getOrElse("SPARK_GRAFT_TESTDATA", "/root/testdata") +
-      "/sf0.001"
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, _) if cartesianByContract.contains(name) => None
-      case (name, fn) =>
-        val planned =
-          try Right(allNodes(fn(spark, dir).queryExecution.executedPlan))
-          catch { case e: Throwable => Left(s"PLANNING FAILED: $e") }
-        val nodes = planned.getOrElse(Seq.empty)
-        val cartesian = nodes.exists(_.isInstanceOf[CartesianProductExec])
-        val bnljs = nodes.collect { case b: BroadcastNestedLoopJoinExec => b }
-        if (planned.isLeft) Some(name -> planned.left.toOption.get)
-        else if (cartesian) Some(name -> "CartesianProduct")
-        else if (bnljs.nonEmpty && !scalarBroadcastOk.contains(name))
-          Some(name -> "BroadcastNestedLoopJoin (not allowlisted)")
-        else {
-          // the allowlist's claim, verified from the plan: every BNLJ
-          // build side must carry a proven row bound <= ScalarRowBound
-          val unbounded = bnljs.flatMap { b =>
-            val build = b.buildSide match {
-              case BuildLeft => b.left
-              case BuildRight => b.right
-            }
-            provenMaxRows(build) match {
-              case Some(n) if n <= ScalarRowBound => None
-              case bound => Some(s"build side bound $bound: ${build.nodeName}")
-            }
+    val bad = offenders(cartesianByContract) { (name, nodes) =>
+      val bnljs = nodes.collect { case b: BroadcastNestedLoopJoinExec => b }
+      if (nodes.exists(_.isInstanceOf[CartesianProductExec])) Some("CartesianProduct")
+      else if (bnljs.nonEmpty && !scalarBroadcastOk.contains(name))
+        Some("BroadcastNestedLoopJoin (not allowlisted)")
+      else {
+        // the allowlist's claim, verified from the plan: every BNLJ
+        // build side must carry a proven row bound <= ScalarRowBound
+        val unbounded = bnljs.flatMap { b =>
+          val build = b.buildSide match {
+            case BuildLeft => b.left
+            case BuildRight => b.right
           }
-          if (unbounded.nonEmpty)
-            Some(name -> s"BNLJ build side not provably scalar: ${unbounded.mkString("; ")}")
-          else None
+          provenMaxRows(build) match {
+            case Some(n) if n <= ScalarRowBound => None
+            case bound => Some(s"build side bound $bound: ${build.nodeName}")
+          }
         }
+        if (unbounded.nonEmpty)
+          Some(s"BNLJ build side not provably scalar: ${unbounded.mkString("; ")}")
+        else None
+      }
     }
-    assert(offenders.isEmpty,
-      offenders.map { case (n, why) => s"$n: $why" }.mkString("\n"))
+    assert(bad.isEmpty, bad)
   }
 }

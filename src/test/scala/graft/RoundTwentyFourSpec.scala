@@ -149,10 +149,17 @@ class RoundTwentyFourSpec extends SparkSuite {
     val served = key(Dedup.minhashServePairs(spark, p))
     val rebuilt = key(Dedup.minHashLshVerified(documents, n = 3, numHashes = 32,
       bands = 32, minJ = 0.2, maxBucket = 16, minBands = 2))
-    assert(served.keySet === rebuilt.keySet)
-    served.keySet.foreach(k => assert(served(k) === rebuilt(k),
-      s"jaccard must be identical for $k"))
+    assert(served === rebuilt, "same pairs, each with an identical jaccard")
     assert(served.nonEmpty)
+    // serve right after a write whose bucket cap fires: the written
+    // pairs drop exactly the buckets the in-memory pipeline drops
+    val q = tmpDir("graft-mh-cap-") + "/mh"
+    Dedup.minhashIndexWrite(documents, q, maxBucket = 2, minBands = 1)
+    assert(spark.read.parquet(s"$q/banded").groupBy("band", "bucket").count()
+      .filter(col("count") > 2).count() > 0, "the cap must fire")
+    val capped = key(Dedup.minhashServePairs(spark, q))
+    assert(capped.nonEmpty)
+    assert(capped === key(Dedup.minHashLshVerified(documents, maxBucket = 2, minBands = 1)))
   }
 
   // ---------------- transaction-log table ----------------
@@ -421,8 +428,7 @@ class RoundTwentyFourSpec extends SparkSuite {
       "a re-probed earlier generation would duplicate pairs")
     val rebuilt = Dedup.minHashLshVerified(documents, n = 3, numHashes = 32,
       bands = 32, minJ = 0.2, maxBucket = 16, minBands = 2)
-    assert(served.count() === rebuilt.count())
-    assert(served.exceptAll(rebuilt).count() === 0)
+    assertSameRows(served, rebuilt)
   }
 
   test("changesBetween over an interval touching only pre-evolution " +

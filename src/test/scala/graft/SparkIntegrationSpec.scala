@@ -262,7 +262,7 @@ class SparkIntegrationSpec extends SparkSuite {
   }
 
   test("index write/read round trip prunes on term") {
-    val path = "/tmp/graft_test_index"
+    val path = tmpDir("graft_test_index")
     Indexer.writeIndex(index, path, numPartitions = 4)
     val re = Indexer.readIndex(spark, path)
     assert(re.count() == index.count())
