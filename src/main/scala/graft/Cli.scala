@@ -35,6 +35,15 @@ object Cli {
     else QueryParser.stemmedStopWords(
       spark.read.parquet(p.toString).collect().map(_.getString(0)).toSeq)
   }
+
+  /** The page [[Search]] renders for a requested `page` of a ranking
+    * with `totalPages` pages: below 1 clamps to the first page, past the
+    * last (or past [[SearchEngine.MaxPages]]) to the last one.
+    */
+  private[graft] def pageToRender(page: Int, totalPages: Long): Int = {
+    val last = math.max(math.min(totalPages, SearchEngine.MaxPages.toLong), 1L).toInt
+    math.min(math.max(page, 1), last)
+  }
 }
 
 /** Index build: corpus -> stop words -> TF-IDF posting table, written
@@ -86,11 +95,9 @@ object Search {
     // collected — a 100 TB result set cannot OOM the CLI; MaxPages just
     // caps how deep pagination may reach.
     val total = ranked.count()
-    val totalPagesL = (total + SearchEngine.PageSize - 1) / SearchEngine.PageSize
-    val totalPages = math.min(totalPagesL, Int.MaxValue.toLong).toInt
-    println(s"$total/$totalPagesL")
-    val pageDf = SearchEngine.page(ranked, math.min(page,
-      math.max(math.min(totalPages, SearchEngine.MaxPages), 1)))
+    val totalPages = (total + SearchEngine.PageSize - 1) / SearchEngine.PageSize
+    println(s"$total/$totalPages")
+    val pageDf = SearchEngine.page(ranked, Cli.pageToRender(page, totalPages))
     // stored-corpus view: first line is the title (reference convention).
     // Derived directly from the documents table — same page frame the
     // XML path produces (titles are "doc-<id>" by the dump convention),

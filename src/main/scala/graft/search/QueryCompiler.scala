@@ -1,7 +1,9 @@
 package graft.search
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge}
+import org.apache.spark.sql.catalyst.expressions.InSet
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Distributed query evaluation: folds a [[QueryAst]] into ONE nullable
   * per-document score expression carrying the reference's
@@ -155,28 +157,65 @@ object QueryCompiler {
     case _         => false
   }
 
+  /** Values of an `In` that Spark pushes to Parquet as one equality per
+    * value: the default of `spark.sql.parquet.pushdown.inFilterThreshold`.
+    */
+  private val PushedEqualities = 10
+
+  /** `c IN (values)`, in a form that Spark pushes to Parquet as one
+    * `c = v` equality per value, whose page index then keeps only the
+    * pages whose `[min, max]` can hold some value. Same rows as `isin`:
+    * a null `c` never matches.
+    *
+    * Up to [[PushedEqualities]] values this is `isin` itself. Above it,
+    * Spark pushes an `isin` as Parquet's `In`, which the page index
+    * tests only against the set's own min and max: a batch would read
+    * every page between its smallest and its largest term. So a larger
+    * set is also ANDed with an OR of hash-set tests of at most
+    * [[PushedEqualities]] sorted values each, each pushed as
+    * equalities; Parquet keeps the pages that both pushed filters keep.
+    * The row-level filter tests the whole set first, so the
+    * OR runs only for matching rows, and its generated code grows by one
+    * set lookup per ten values: a plain OR of 190 equalities compiles to
+    * a method over the JIT's 8,000-byte limit and runs interpreted.
+    */
+  private[search] def equalsAny(c: Column, values: Seq[String]): Column = {
+    val vs = values.distinct
+    def inSet(g: Seq[String]): Column = GraftSqlBridge.column(
+      InSet(GraftSqlBridge.expression(c), g.map(UTF8String.fromString).toSet))
+    def anyOf(sets: IndexedSeq[Column]): Column =
+      if (sets.length == 1) sets.head
+      else {
+        val (l, r) = sets.splitAt(sets.length / 2)
+        anyOf(l) || anyOf(r)
+      }
+    if (vs.length <= PushedEqualities) c.isin(vs: _*)
+    else c.isin(vs: _*) && anyOf(vs.sorted.grouped(PushedEqualities).map(inSet).toIndexedSeq)
+  }
+
   /** Per-term document frequencies for the query's terms: one small
-    * aggregate over the pruned index slice (Parquet min/max stats skip
-    * everything else when the index is term-range-partitioned).
+    * aggregate over the index pages that hold them ([[equalsAny]]).
     */
   def termStats(index: DataFrame, terms: Seq[String]): Map[String, Long] =
     if (terms.isEmpty) Map.empty
-    else index.filter(col("term").isin(terms.distinct: _*))
+    else index.filter(equalsAny(col("term"), terms))
       .groupBy("term").agg(count("*").as("df"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
 
   /** `(doc_id, postings)` for every document holding a term of `asts`,
     * where `postings` is a `map<term, struct<score, positions>>` over a
     * posting table with schema `(term, doc_id, score, positions, ...)`
-    * holding one row per (term, doc). The `term IN (...)` filter is the
-    * reference's mapper-side semi-filter (J8/X1) and pushes into a
-    * parquet scan; positions are kept only for phrase words, so the
-    * group-by shuffles scores alone for every other term.
+    * holding one row per (term, doc). The term filter is the
+    * reference's mapper-side semi-filter (J8/X1): one pushed equality
+    * per term ([[equalsAny]]), so a scan of the at-rest index decodes
+    * only the pages that hold the batch's terms, whatever the batch
+    * size. Positions are kept only for phrase words, so the group-by
+    * shuffles scores alone for every other term.
     */
   def postingMaps(index: DataFrame, asts: Seq[QueryAst]): DataFrame = {
     val terms = asts.flatMap(leafTerms).distinct
     val withPositions = asts.flatMap(phraseTerms).distinct
-    index.filter(col("term").isin(terms: _*))
+    index.filter(equalsAny(col("term"), terms))
       .groupBy("doc_id")
       .agg(map_from_entries(collect_list(struct(col("term"),
         struct(col("score").as("score"),

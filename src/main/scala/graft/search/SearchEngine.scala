@@ -35,9 +35,10 @@ object SearchEngine {
     *
     * The index may be an AT-REST parquet posting table (the reference's
     * persisted term-partitioned index, `code/query/QueryMapred.java:
-    * 126-162`): the `term IN (...)` filter then pushes into the scan and
-    * the term-range layout prunes it to the query's files via footer
-    * min/max stats — the reference's query-time partition pruning. A
+    * 126-162`): the term filter then pushes into the scan, one equality
+    * per term, and the term-range layout prunes it to the query's files
+    * and pages via their `[min, max]` — the reference's query-time
+    * partition pruning. A
     * query whose AND order depends on document frequencies
     * ([[QueryCompiler.needsStats]]) also reads a DERIVED index in the
     * stats fetch, so callers cache one that is costly to recompute.
@@ -49,8 +50,8 @@ object SearchEngine {
       .orderBy(desc("score"), asc("doc_id"))
 
   /** Batch retrieval: `(query, doc_id, score)` for every distinct query,
-    * evaluated in the same single pass as [[search]] — one `term IN
-    * (...)` scan for the union of the batch's terms, at most one stats
+    * evaluated in the same single pass as [[search]] — one term-filtered
+    * scan for the union of the batch's terms, at most one stats
     * fetch (for the queries whose AND order needs it), and a fixed number
     * of jobs for any batch size (the reference runs a full
     * MapReduce job per query, `code/query/QueryMapred.java`). An empty
@@ -126,10 +127,13 @@ object SearchEngine {
     * [[QueryCache.searchCached]] miss) it folds into a local relation and
     * runs no job. Mirrors `SearchResult` paging + overflow clamp to the
     * last page (`util/SearchResult.java:33-46`, `util/CorpusFetcher
-    * .java:88` — clamping is the caller's job here via `count`).
+    * .java:88` — clamping is the caller's job here via `count`). Pages
+    * start at 1.
     */
-  def page(ranked: DataFrame, page: Int): DataFrame =
+  def page(ranked: DataFrame, page: Int): DataFrame = {
+    require(page >= 1, s"page must be at least 1: $page")
     ranked.limit(page * PageSize).offset((page - 1) * PageSize)
+  }
 
   /** The ranked order of `(doc_id LONG, score DOUBLE)` rows on the
     * driver: score descending, doc_id ascending. Scores compare as

@@ -123,11 +123,15 @@ object SubstringIndex {
       .sortWithinPartitions("gram")
       .write.mode("overwrite").parquet(path)
 
-  /** Probe the at-rest index: the needle's gram set becomes an
-    * `IN`-filter that REACHES THE SCAN (PushedFilters + min/max file
-    * pruning — asserted by spec), so a probe reads only the gram
-    * files it needs, never the whole index. Same all-grams-required
-    * candidate semantics as [[candidates]].
+  /** Probe the at-rest index: the needle's gram set becomes one pushed
+    * `gram = g` equality per gram ([[QueryCompiler.equalsAny]]) that
+    * REACHES THE SCAN (PushedFilters, asserted by spec), so the footer
+    * and page `[min, max]` of `gram` prune a probe to the files and
+    * pages of its own grams, never the whole index. A needle of 13
+    * characters or more has over 10 grams, which an `isin` would push
+    * as Parquet's `In`: its page index is tested only against the set's
+    * min and max. Same all-grams-required candidate semantics as
+    * [[candidates]].
     */
   def probeIndex(spark: org.apache.spark.sql.SparkSession, path: String,
                  needle: String, n: Int = 3): DataFrame = {
@@ -135,7 +139,7 @@ object SubstringIndex {
     require(grams.nonEmpty,
       s"needle '$needle' is shorter than the gram width $n")
     spark.read.parquet(path)
-      .filter(col("gram").isin(grams: _*))
+      .filter(QueryCompiler.equalsAny(col("gram"), grams))
       .groupBy("doc_id").agg(count(lit(1)).as("__hits"))
       .filter(col("__hits") === grams.size)
       .select("doc_id")

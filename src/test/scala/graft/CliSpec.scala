@@ -2,8 +2,11 @@ package graft
 
 import java.nio.file.{Files, Path}
 
+import graft.search.SearchEngine
+
 /** `graft.Search`'s stop-word list: absent means none, present is read,
-  * and a list that is present but unreadable fails loudly.
+  * and a list that is present but unreadable fails loudly. Its page:
+  * clamped to the first and to the last page.
   */
 class CliSpec extends SparkSuite {
 
@@ -27,5 +30,18 @@ class CliSpec extends SparkSuite {
     val idx = indexPath()
     Files.write(Path.of(s"$idx.stopwords"), "not parquet".getBytes("UTF-8"))
     intercept[Exception](Cli.stopWords(spark, idx))
+  }
+
+  test("page: below 1 renders the first page, past the last the last") {
+    assert(Cli.pageToRender(0, 5) == 1)
+    assert(Cli.pageToRender(-10, 5) == 1)
+    assert(Cli.pageToRender(3, 5) == 3)
+    assert(Cli.pageToRender(9, 5) == 5)
+    assert(Cli.pageToRender(2, 0) == 1)
+    assert(Cli.pageToRender(Int.MaxValue, Long.MaxValue) == SearchEngine.MaxPages)
+    // the library itself refuses a page below 1 and names it
+    val e = intercept[IllegalArgumentException](
+      SearchEngine.page(spark.range(3).toDF("doc_id"), 0))
+    assert(e.getMessage.contains("page must be at least 1: 0"))
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.SparkListenerJobStart
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -156,39 +157,8 @@ class SparkIntegrationSpec extends SparkSuite {
   }
 
   /** The number of Spark jobs `body` starts. */
-  def jobsDuring(body: => Unit): Int = {
-    import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val Fence = "graft.test.fence"
-    // one entry per job start, true for the fence jobs below: listener
-    // events arrive in order, so once a fence is seen every job started
-    // before it has been counted
-    val started = new LinkedBlockingQueue[java.lang.Boolean]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        started.put(Option(e.properties).exists(_.getProperty(Fence) != null))
-    }
-    def jobsUntilFence(): Int = {
-      sc.setLocalProperty(Fence, "1")
-      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(Fence, null)
-      var n = 0
-      var fence = false
-      while (!fence) {
-        val e = started.poll(60, TimeUnit.SECONDS)
-        assert(e != null, "job start events stopped arriving")
-        if (e) fence = true else n += 1
-      }
-      n
-    }
-    sc.addSparkListener(listener)
-    try {
-      jobsUntilFence()
-      body
-      jobsUntilFence()
-    }
-    finally sc.removeSparkListener(listener)
-  }
+  def jobsDuring(body: => Unit): Int =
+    sparkEventsDuring(body).count(_.isInstanceOf[SparkListenerJobStart])
 
   test("searchMany runs the same number of Spark jobs for 1 and 24 queries") {
     def jobsFor(qs: Seq[String]): Int =

@@ -1,7 +1,9 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.graft.ShutdownDelete
 import org.scalatest.funsuite.AnyFunSuite
@@ -53,6 +55,41 @@ trait SparkSuite extends AnyFunSuite {
 
   def idSet(df: DataFrame): Set[Long] =
     df.select("doc_id").collect().map(_.getLong(0)).toSet
+
+  /** The job starts and task ends of the Spark jobs `body` runs, in
+    * order, after the task end of the fence job that opens them (it
+    * reads no input). A fence job before and after `body` bounds them:
+    * listener events arrive in order, so once the closing fence has
+    * started, every event of an earlier job has been seen.
+    */
+  def sparkEventsDuring(body: => Unit): Seq[SparkListenerEvent] = {
+    val sc = spark.sparkContext
+    val Fence = "graft.test.fence"
+    val events = new LinkedBlockingQueue[SparkListenerEvent]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = events.put(e)
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = events.put(e)
+    }
+    def isFence(e: SparkListenerEvent): Boolean = e match {
+      case s: SparkListenerJobStart => Option(s.properties).exists(_.getProperty(Fence) != null)
+      case _                        => false
+    }
+    def eventsUntilFence(): Seq[SparkListenerEvent] = {
+      sc.setLocalProperty(Fence, "1")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(Fence, null)
+      Iterator.continually(events.poll(60, TimeUnit.SECONDS)).map { e =>
+        assert(e != null, "listener events stopped arriving")
+        e
+      }.takeWhile(!isFence(_)).toList
+    }
+    sc.addSparkListener(listener)
+    try {
+      eventsUntilFence()
+      body
+      eventsUntilFence()
+    }
+    finally sc.removeSparkListener(listener)
+  }
 
   /** Same column names and types, and the same rows as multisets. */
   def assertSameRows(a: DataFrame, b: DataFrame): Unit = {
